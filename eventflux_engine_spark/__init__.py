@@ -15,4 +15,10 @@ Nothing is ported from the reference's Rust architecture; reference files are
 cited in docstrings only to document semantic parity.
 """
 
+from . import zipimport_cache
+
 __version__ = "0.1.0"
+
+# every Python worker that unpickles an engine UDF imports this package, so
+# this is where the per-task zip re-read is switched off (zipimport_cache)
+zipimport_cache.install()

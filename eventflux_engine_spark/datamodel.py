@@ -28,6 +28,7 @@ oracle share one deterministic input with zero external data.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -194,8 +195,23 @@ TOOLS_DIM_SCHEMA = T.StructType(
 )
 
 
+def local_df(spark: SparkSession, rows: list, schema: "T.StructType | str") -> DataFrame:
+    """A literal table that plans as ``LocalTableScan``.
+
+    ``createDataFrame`` over a Python list plans as ``Scan ExistingRDD``,
+    whose every read runs Python-worker tasks; a pandas frame goes through
+    Arrow into a local relation on the driver instead (columns map to the
+    schema by position). PySpark sends an empty pandas frame down the list
+    path, so an empty table is ``limit(0)``, which the optimizer folds into
+    an empty local relation.
+    """
+    if not rows:
+        return spark.createDataFrame([], schema).limit(0)
+    return spark.createDataFrame(pd.DataFrame(rows), schema)
+
+
 def tools_dim_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOLS_DIM_ROWS, TOOLS_DIM_SCHEMA)
+    return local_df(spark, TOOLS_DIM_ROWS, TOOLS_DIM_SCHEMA)
 
 
 TOOLS_DIM_CTE = "tools_dim(tool, category, cost_weight) AS (VALUES " + ", ".join(

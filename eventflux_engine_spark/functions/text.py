@@ -22,6 +22,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..datamodel import local_df
+
 __all__ = [
     "normalize_text",
     "token_count",
@@ -225,7 +227,9 @@ def bpe_symbols(enc_col: Column) -> Column:
 
 def bpe_train(docs: DataFrame, n_merges: int = 6, text_col: str = "text") -> DataFrame:
     """Train BPE merges on a document corpus; returns one row per merge
-    round: (round, left, right, merged, pair_count).
+    round: (round, left, right, merged, pair_count). Training stops early
+    once no adjacent pair is left (an empty or too-small corpus), so the
+    table holds the merges made so far and may be empty.
 
     Scale shape: the corpus collapses to a DISTINCT-WORD frequency table
     once (one shuffle over tokens — at 100 TB the vocabulary table is
@@ -272,9 +276,11 @@ def bpe_train(docs: DataFrame, n_merges: int = 6, text_col: str = "text") -> Dat
             pairs.orderBy(F.col("cnt").desc(), "l", "r")
             .limit(1)
             .select("l", "r", "cnt")
-            .collect()[0]
+            .collect()
         )
-        left, right, cnt = top["l"], top["r"], int(top["cnt"])
+        if not top:  # every word is one symbol: no pair left to merge
+            break
+        left, right, cnt = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
         merge_rows.append((rnd, left, right, left + right, cnt))
         words = (
             words.select(
@@ -287,8 +293,10 @@ def bpe_train(docs: DataFrame, n_merges: int = 6, text_col: str = "text") -> Dat
             )
             .localCheckpoint(eager=False)
         )
-    return spark.createDataFrame(
-        merge_rows, "round int, left string, right string, merged string, pair_count bigint"
+    return local_df(
+        spark,
+        merge_rows,
+        "round int, left string, right string, merged string, pair_count bigint",
     )
 
 

@@ -31,6 +31,8 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..datamodel import local_df
+
 
 def lossy_counting_heavy_hitters(
     df: DataFrame, col: str, support: float, epsilon: float | None = None
@@ -355,9 +357,7 @@ def hist_quantiles(
 
     spark = regs.sparkSession
     qs = F.broadcast(
-        spark.createDataFrame(
-            list(quantiles), "q string, num int, den int"
-        )
+        local_df(spark, list(quantiles), "q string, num int, den int")
     )
     wcum = Window.partitionBy(*group_cols).orderBy("lb")
     wall = Window.partitionBy(*group_cols)

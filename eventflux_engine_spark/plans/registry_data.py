@@ -195,15 +195,14 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embeddings_aug_count(sf_dir: str) -> int:
-    """Exact row count of the augmented embeddings corpus (base + every
-    vec_id % 3 == 0 perturbation) from parquet metadata + one narrow
-    column read — no Spark job."""
+    """Exact row count of the augmented embeddings corpus from one narrow
+    parquet column read — no Spark job."""
     import pyarrow.parquet as pq
 
     v = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id"]
     )["vec_id"].to_numpy()
-    return int(len(v) + (v % 3 == 0).sum())
+    return SIM.augmented_count(v)
 
 
 # ---------------------------------------------------------------------------

@@ -11,7 +11,13 @@ from pyspark.sql import functions as F
 from .. import multimodal as MM
 from ..cep import PatternSpec, Step, match_pattern_batch
 from ..cep.batch import match_absent_batch
-from ..datamodel import epoch_seconds, load_table, transcripts_df, with_transcript_views
+from ..datamodel import (
+    epoch_seconds,
+    load_table,
+    local_df,
+    transcripts_df,
+    with_transcript_views,
+)
 from ..operators import output as OUT
 from .registry import register
 
@@ -2852,9 +2858,7 @@ def q_events_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy("etype")).alias("n"),
     )
-    qdf = F.broadcast(
-        spark.createDataFrame(QS, "q string, num int, den int")
-    )
+    qdf = F.broadcast(local_df(spark, QS, "q string, num int, den int"))
     exact = (
         ranked.crossJoin(qdf)
         .filter(

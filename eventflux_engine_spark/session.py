@@ -71,17 +71,28 @@ def get_spark(
 _PREWARMED: set[str] = set()
 
 
+def _ident(batches):
+    yield from batches
+
+
 def _prewarm_python_workers(spark: SparkSession) -> None:
     """Spawn the Python worker pool once, at session build time.
 
-    Reused workers (``spark.python.worker.reuse``, default on) make every
-    Arrow/pandas stage after the first cheap — but the FIRST query whose
-    plan chains k Python stages across p partitions must fork k*p workers
-    inside its own wall time (~3-4 s for the 96 workers a 3-stage codec
-    chain over 32 partitions needs). Paying that once here keeps the spawn
-    storm out of every measured query and out of the latency of whichever
-    operator happens to run first. Skipped for tiny sessions and opt-out
-    via SPARK_GRAFT_PREWARM=0.
+    The FIRST query whose plan chains k Python stages across p partitions
+    must fork k*p workers inside its own wall time (~3-4 s for the 96
+    workers a 3-stage codec chain over 32 partitions needs). Paying that
+    once here keeps the spawn storm out of every measured query and out of
+    the latency of whichever operator happens to run first.
+
+    Reused workers (``spark.python.worker.reuse``, default on) save the
+    fork, not the per-task set-up: every task still starts with
+    ``importlib.invalidate_caches()``, which on Python < 3.13 re-reads
+    Spark's zip archives (~0.2 s per task) unless :mod:`.zipimport_cache`
+    is installed in that worker. ``_ident`` is a module-level engine
+    function, so unpickling it imports the package and installs the check
+    in every prewarmed worker; the workers therefore need to be able to
+    import the package, as every engine operator does. Skipped for tiny
+    sessions and opt-out via SPARK_GRAFT_PREWARM=0.
     """
     if os.environ.get("SPARK_GRAFT_PREWARM", "1") == "0":
         return
@@ -92,10 +103,6 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     cores = spark.sparkContext.defaultParallelism
     if cores < 2:
         return
-
-    def _ident(batches):
-        yield from batches
-
     df = spark.range(0, cores * 3, numPartitions=cores)
     for _ in range(3):  # deepest Python chain in the registry (codec paths)
         df = df.mapInPandas(_ident, "id long")

@@ -36,6 +36,7 @@ __all__ = [
     "norm",
     "cosine",
     "augmented_embeddings",
+    "augmented_count",
     "AUG_EMBEDDINGS_CTE",
     "brute_force_topk",
     "hyperplanes",
@@ -119,27 +120,32 @@ def qcosine_sql(a: str, b: str) -> str:
 
 # -- deterministic near-dup augmentation --------------------------------------
 
+# the augmentation rule: every base vector whose vec_id % AUG_EVERY == 0
+# gets one perturbed copy at vec_id + AUG_ID_OFFSET
+AUG_EVERY = 3
+AUG_ID_OFFSET = 100000
+
 # perturbation factors are exact rational arithmetic on the 1-based
 # component index ((i%7)-3 ∈ [-3,3] → factor 0.85..1.15) — no libm calls, so
 # Spark and DuckDB produce identical float components. Resulting cosine with
 # the original ≈ 0.995 (>0.99 threshold); unrelated pairs max ≈ 0.51.
-AUG_EMBEDDINGS_CTE = """
+AUG_EMBEDDINGS_CTE = f"""
 embeddings_aug AS (
   SELECT vec_id, embedding FROM embeddings
   UNION ALL
-  SELECT vec_id + 100000 AS vec_id,
+  SELECT vec_id + {AUG_ID_OFFSET} AS vec_id,
          list_transform(embedding,
            (x, i) -> cast(cast(x AS DOUBLE) * (1 + 0.05 * ((i % 7) - 3)) AS FLOAT)
          ) AS embedding
-  FROM embeddings WHERE vec_id % 3 = 0
+  FROM embeddings WHERE vec_id % {AUG_EVERY} = 0
 )
 """
 
 
 def augmented_embeddings(emb: DataFrame) -> DataFrame:
     base = emb.select("vec_id", "embedding")
-    pert = emb.filter(F.col("vec_id") % 3 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
+    pert = emb.filter(F.col("vec_id") % AUG_EVERY == 0).select(
+        (F.col("vec_id") + AUG_ID_OFFSET).alias("vec_id"),
         F.transform(
             F.col("embedding"),
             # Spark's lambda index is 0-based, DuckDB's 1-based → i+1
@@ -149,6 +155,13 @@ def augmented_embeddings(emb: DataFrame) -> DataFrame:
         ).alias("embedding"),
     )
     return base.unionByName(pert)
+
+
+def augmented_count(vec_ids: np.ndarray) -> int:
+    """Row count of :func:`augmented_embeddings` over base rows with these
+    ``vec_id`` values, computed on the driver without a Spark job."""
+    v = np.asarray(vec_ids)
+    return int(len(v) + (v % AUG_EVERY == 0).sum())
 
 
 # -- brute force ---------------------------------------------------------------

@@ -153,7 +153,9 @@ class ExactlyOnceParquetSink:
     def compact(self, spark: SparkSession, target_files: int = 1) -> dict:
         """Fold every committed epoch (and any previous segment) below the
         current high-water mark into one ``target_files``-file segment.
-        Returns the published segment marker."""
+        Returns the published segment marker. Raises ``ValueError`` when no
+        epoch was committed after the latest segment: the new segment would
+        get the latest one's id and overwrite the very data it reads."""
         epochs = self.committed_epochs()
         if not epochs:
             raise ValueError("nothing to compact")
@@ -171,6 +173,8 @@ class ExactlyOnceParquetSink:
         if segs:
             latest = segs[-1]
             floor_epoch = latest["covers_epochs_through"]
+            if hwm <= floor_epoch:
+                raise ValueError("nothing to compact")
             paths.append(
                 os.path.join(self.data_dir, f"segment={latest['segment_id']}")
             )

@@ -556,6 +556,14 @@ class TestEmbeddingNearDupLSH:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
+    def test_augmented_count_matches_augmented_embeddings(self, spark):
+        from eventflux_engine_spark.plans.registry_data import _embeddings_aug_count
+        from eventflux_engine_spark.similarity import augmented_embeddings
+
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+        n = augmented_embeddings(emb).count()
+        assert _embeddings_aug_count(SF) == n > emb.count()
+
     def test_recall_vs_bruteforce(self, spark):
         from eventflux_engine_spark.similarity import (
             augmented_embeddings,
@@ -1364,6 +1372,24 @@ class TestBpeTrain:
         a = [tuple(r) for r in bpe_train(docs.repartition(1), 4).collect()]
         b = [tuple(r) for r in bpe_train(docs.repartition(16), 4).collect()]
         assert sorted(a) == sorted(b)
+
+    def test_stops_when_no_pair_is_left(self, spark):
+        from eventflux_engine_spark.functions.text import bpe_train
+
+        schema = "struct<round:int,left:string,right:string,merged:string,pair_count:bigint>"
+        # 'ab' x2: one merge, then every word is a single symbol
+        small = spark.createDataFrame([("ab ab",)], "text string")
+        out = bpe_train(small, n_merges=5)
+        assert out.schema.simpleString() == schema
+        assert [tuple(r) for r in out.collect()] == [(1, "a", "b", "ab", 2)]
+        # single-letter words and an empty corpus: no merge at all
+        for docs in (
+            spark.createDataFrame([("a b a",)], "text string"),
+            spark.createDataFrame([], "text string"),
+        ):
+            out = bpe_train(docs, n_merges=3)
+            assert out.schema.simpleString() == schema
+            assert out.collect() == []
 
 
 class TestSubstringSpans:

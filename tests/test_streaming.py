@@ -901,6 +901,19 @@ class TestSinkCompaction:
         assert m2["rows"] == t.count()
         assert sink.read(spark).count() == t.count()
 
+    def test_compact_twice_without_new_epochs(self, spark, tmpdir):
+        t = transcripts_df(spark, SF).limit(50)
+        sink = ExactlyOnceParquetSink(os.path.join(tmpdir, "table"))
+        self._feed_epochs(spark, sink, t, 3)
+        n = sink.read(spark).count()
+        marker = sink.compact(spark)
+        # nothing committed after the segment: the second call must not
+        # rewrite the segment it would read from
+        with pytest.raises(ValueError, match="nothing to compact"):
+            sink.compact(spark)
+        assert sink.committed_segments() == [marker]
+        assert sink.read(spark).count() == n
+
     def test_crash_mid_compaction_is_invisible(self, spark, tmpdir):
         t = transcripts_df(spark, SF).limit(50)
         sink = ExactlyOnceParquetSink(os.path.join(tmpdir, "table"))
