@@ -1,8 +1,10 @@
-"""Batch executor for pattern specs: grouped-pandas NFA per key.
+"""Batch executor for pattern specs.
 
-One shuffle on ``key_col``; each group's events replay in ``(ts, turn_idx)``
-order through the shared transition core. Linear EVERY patterns take the
-vectorized ``searchsorted`` fast path. At 100 TB the shuffle is the cost —
+One shuffle on ``key_col``. Linear EVERY patterns and absent patterns run
+Arrow-native ``searchsorted`` kernels over whole-key blocks of each sorted
+partition (``mapInArrow``); other specs replay each key's events in
+``(ts, turn_idx)`` order through the shared transition core (grouped
+pandas). At 100 TB the shuffle is the cost —
 it's the same hash partitioning the windowed aggregations use, so co-grouped
 stages reuse the exchange; hot-key caps are handled upstream (skew doc in
 BENCH/BASELINE.md).
@@ -15,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .blocks import map_key_blocks
 from .nfa import match_absent_block, match_linear_block, run_nfa
 from .spec import PatternSpec
 
@@ -44,40 +47,19 @@ def match_absent_batch(
     fields += [T.StructField(c, by_name[c]) for c in emit_cols]
     fields.append(T.StructField("ts", by_name[ts_col]))
     schema = T.StructType(fields)
-    col_order = [f.name for f in schema.fields]
 
     needed = sorted({key_col, ts_col, trigger_flag, absent_flag, *order_cols, *emit_cols})
     pruned = df.select(*needed)
     if not input_sorted:
         pruned = pruned.repartition(key_col).sortWithinPartitions(key_col, *order_cols)
 
-    def run(pdfs):
-        carry: pd.DataFrame | None = None
-        for pdf in pdfs:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            keys = pdf[key_col].to_numpy()
-            nz = (keys != keys[-1]).nonzero()[0]
-            boundary = int(nz.max() + 1) if len(nz) else 0
-            head, carry = pdf.iloc[:boundary], pdf.iloc[boundary:]
-            if len(head):
-                out = match_absent_block(
-                    head, key_col, ts_col, trigger_flag, absent_flag,
-                    duration_ns, emit_cols,
-                )
-                if len(out):
-                    yield out[col_order]
-        if carry is not None and len(carry):
-            out = match_absent_block(
-                carry, key_col, ts_col, trigger_flag, absent_flag,
-                duration_ns, emit_cols,
-            )
-            if len(out):
-                yield out[col_order]
-
-    return pruned.mapInPandas(run, schema=schema)
+    return map_key_blocks(
+        pruned, key_col,
+        lambda block: match_absent_block(
+            block, key_col, ts_col, trigger_flag, absent_flag, duration_ns, emit_cols
+        ),
+        schema,
+    )
 
 
 def output_schema(spec: PatternSpec, input_schema: T.StructType) -> T.StructType:
@@ -132,11 +114,11 @@ def match_pattern_batch(
 
     Physical strategy:
     - **linear specs** (no quantifiers/cross-preds, EVERY): one
-      ``repartition(key)`` + in-partition sort, then a whole-partition numpy
-      pass (``match_linear_block``) via ``mapInPandas`` — per-group pandas
-      overhead is eliminated, throughput is bounded by the exchange.
-      Arrow slices partitions into batches, so a carry buffer keeps the last
-      (possibly split) conversation of each batch for the next one.
+      ``repartition(key)`` + in-partition sort, then one numpy pass
+      (``match_linear_block``) per whole-key block of the partition via
+      ``mapInArrow`` — no per-group or pandas overhead, throughput is
+      bounded by the exchange. ``blocks.iter_key_blocks`` rejoins a
+      conversation that Arrow split across record batches.
     - **general specs**: per-key ``applyInPandas`` through the sequential
       transition core.
 
@@ -167,39 +149,15 @@ def match_pattern_batch(
             keep = m if keep is None else (keep | m)
         pruned = pruned.filter(keep)
 
-        def apply_partition(pdfs) -> "pd.DataFrame":
-            def flush(block: pd.DataFrame):
-                out = match_linear_block(block, spec)
-                if not out.empty:
-                    return out[col_order]
-                return None
-
-            carry: pd.DataFrame | None = None
-            for pdf in pdfs:
-                if carry is not None:
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                if len(pdf) == 0:
-                    continue
-                keys = pdf[key_col].to_numpy()
-                last_key = keys[-1]
-                boundary = int((keys != last_key).nonzero()[0].max() + 1) if (keys != last_key).any() else 0
-                head, carry = pdf.iloc[:boundary], pdf.iloc[boundary:]
-                if len(head):
-                    out = flush(head)
-                    if out is not None:
-                        yield out
-            if carry is not None and len(carry):
-                out = flush(carry)
-                if out is not None:
-                    yield out
-
         if input_sorted:
             arranged = pruned  # bucketed + sorted storage: zero-shuffle plan
         else:
             arranged = pruned.repartition(key_col).sortWithinPartitions(
                 key_col, *spec.order_cols
             )
-        return arranged.mapInPandas(apply_partition, schema=schema)
+        return map_key_blocks(
+            arranged, key_col, lambda block: match_linear_block(block, spec), schema
+        )
 
     if input_sorted:
         raise ValueError("input_sorted requires a linear pattern spec")

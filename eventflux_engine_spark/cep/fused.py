@@ -11,22 +11,23 @@ stored bucketed by ``conv_id`` and sorted by ``(conv_id, ts, turn_idx)``
 - tumbling windows          → epoch bucketing + unique-pair counting
 - per-conv aggregates       → ``np.add.reduceat`` over conv boundaries
 
-One pass, zero shuffle (only the final tiny per-conv rollup exchanges).
-This is the plan a 10^12-turn deployment runs: the expensive exchange is
-paid ONCE at write time (bucketed storage), every query after that is
-embarrassingly parallel. Parity with the composed operators
-(match_pattern_batch + session_window + window aggs) is pytest-enforced.
+One ``mapInArrow`` pass over whole-key Arrow blocks, zero shuffle (only
+the final tiny per-conv rollup exchanges). This is the plan a 10^12-turn
+deployment runs: the expensive exchange is paid ONCE at write time
+(bucketed storage), every query after that is embarrassingly parallel.
+Parity with the composed operators (match_pattern_batch + session_window +
+window aggs) is pytest-enforced.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-from .nfa import match_linear_block
+from .blocks import key_starts, map_key_blocks, ts_ticks
+from .nfa import linear_chain
 from .spec import PatternSpec
 
 OUT_SCHEMA = (
@@ -35,50 +36,46 @@ OUT_SCHEMA = (
 )
 
 
-def _process_block(
-    pdf: pd.DataFrame, spec: PatternSpec, gap_s: int, window_s: int
-) -> pd.DataFrame:
-    keys = pdf[spec.key_col].to_numpy()
-    ts_ns = pd.to_datetime(pdf[spec.ts_col]).astype("int64").to_numpy()
-    # whole-second truncation is safe for tumbling-window bucketing
-    # (floor(floor(x)/w) == floor(x/w) for positive w) but NOT for session
-    # gaps: a 1800.2 s gap straddling a second boundary truncates to 1800
-    # and misses the break (9/15000 convs at sf1.0 — caught by scale
-    # evidence, invisible at sf0.01). Gaps compare at full ns precision.
-    ts_s = ts_ns // 1_000_000_000
-    convs, codes = np.unique(keys, return_index=False), None
-    codes = np.searchsorted(convs, keys)  # keys sorted → codes monotone
-    starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+def rollup_block(
+    block: pa.RecordBatch, spec: PatternSpec, gap_s: int, window_s: int
+) -> pa.RecordBatch:
+    """One ``OUT_SCHEMA`` row per conversation of a whole-key block."""
+    keys = block.column(spec.key_col)
+    new_conv = key_starts(keys)
+    starts = np.flatnonzero(new_conv)
+    codes = np.cumsum(new_conv) - 1
+    # ts stays in int64 ticks of its own unit, so session gaps compare at
+    # full precision: truncated to whole seconds, a 1800.2 s gap straddling
+    # a second boundary reads 1800 and misses the break (9/15000 convs at
+    # sf1.0 — caught by scale evidence, invisible at sf0.01).
+    ts, ns = ts_ticks(block, spec.ts_col)
 
-    n_turns = np.add.reduceat(np.ones(len(pdf), dtype=np.int64), starts)
-    tool_calls = np.add.reduceat(
-        (pdf["tool"].to_numpy() != "").astype(np.int64), starts
-    )
+    n_turns = np.diff(np.r_[starts, len(ts)])
+    # a null tool counts as a call, as ``!= ""`` did on pandas objects
+    is_call = pc.fill_null(pc.not_equal(block.column("tool"), ""), True)
+    tool_calls = np.add.reduceat(is_call.to_numpy(zero_copy_only=False), starts, dtype=np.int64)
 
     # sessions: new session at conv start or gap > gap_s. Boundary semantics
     # verified empirically against F.session_window (test_fused boundary
     # test): an event arriving EXACTLY gap_s after the previous one EXTENDS
     # the session in Spark (inclusive merge), so strict > is the parity rule.
-    new_conv = np.r_[True, codes[1:] != codes[:-1]]
-    gap_ns = np.r_[0, ts_ns[1:] - ts_ns[:-1]]
-    new_session = new_conv | (gap_ns > gap_s * 1_000_000_000)
-    n_sessions = np.add.reduceat(new_session.astype(np.int64), starts)
+    # For integer d: d ticks > G ns <=> d > G // ns.
+    new_session = new_conv | (np.r_[0, np.diff(ts)] > gap_s * 1_000_000_000 // ns)
+    n_sessions = np.add.reduceat(new_session, starts, dtype=np.int64)
 
-    # tumbling windows: distinct (conv, bucket) — sorted, so count transitions
-    bucket = ts_s // window_s
+    # tumbling windows: distinct (conv, bucket) — sorted, so count
+    # transitions. floor(x / w) == floor(floor(x) / w): the bucket of the
+    # tick equals the bucket of its whole second.
+    bucket = ts // (window_s * 1_000_000_000 // ns)
     new_window = new_conv | np.r_[False, bucket[1:] != bucket[:-1]]
-    n_windows = np.add.reduceat(new_window.astype(np.int64), starts)
+    n_windows = np.add.reduceat(new_window, starts, dtype=np.int64)
 
-    # pattern matches per conv
-    matches = match_linear_block(pdf, spec)
-    n_matches = np.zeros(len(starts), dtype=np.int64)
-    if len(matches):
-        mcodes = np.searchsorted(convs, matches["conv_id"].to_numpy())
-        np.add.at(n_matches, mcodes, 1)
+    first = linear_chain(block, spec, codes)[0]
+    n_matches = np.bincount(codes[first], minlength=len(starts))
 
-    return pd.DataFrame(
+    return pa.RecordBatch.from_pydict(
         {
-            "conv_id": convs,
+            "conv_id": keys.take(pa.array(starts)),
             "n_turns": n_turns,
             "n_matches": n_matches,
             "n_sessions": n_sessions,
@@ -113,22 +110,8 @@ def fused_transcript_pipeline(
         pruned = pruned.repartition(spec.key_col).sortWithinPartitions(
             spec.key_col, *spec.order_cols
         )
-    key_col = spec.key_col
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in pdfs:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            keys = pdf[key_col].to_numpy()
-            nz = (keys != keys[-1]).nonzero()[0]
-            boundary = int(nz.max() + 1) if len(nz) else 0
-            head, carry = pdf.iloc[:boundary], pdf.iloc[boundary:]
-            if len(head):
-                yield _process_block(head, spec, session_gap_s, window_s)
-        if carry is not None and len(carry):
-            yield _process_block(carry, spec, session_gap_s, window_s)
-
-    return pruned.mapInPandas(run, schema=OUT_SCHEMA)
+    return map_key_blocks(
+        pruned, spec.key_col,
+        lambda block: rollup_block(block, spec, session_gap_s, window_s),
+        OUT_SCHEMA,
+    )

@@ -20,8 +20,10 @@ Semantics replicated from the reference's pre/post state-processor chain
 
 The matcher is deliberately row-sequential *within a key* — so is the
 reference — but keys are independent, so Spark parallelizes across
-``conv_id`` groups; the hot path for linear patterns is the vectorized
-``numpy.searchsorted`` chain in :func:`match_linear_vectorized`.
+``conv_id`` groups. Linear patterns and the absent pattern skip it: their
+Arrow-native kernels (:func:`match_linear_block`, :func:`match_absent_block`)
+run one vectorized ``numpy.searchsorted`` pass over a whole-key block of
+many conversations (``blocks.iter_key_blocks``).
 """
 
 from __future__ import annotations
@@ -30,7 +32,9 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
+from .blocks import flags, key_starts, ts_ticks
 from .spec import PatternSpec, Step
 
 # instance = {"step": int, "count": int, "first_ts": int(ns),
@@ -237,66 +241,73 @@ def run_nfa(
     return out, instances, matched_done
 
 
-def match_linear_block(pdf: pd.DataFrame, spec: PatternSpec) -> pd.DataFrame:
-    """Vectorized linear matcher over a MULTI-KEY block sorted by
-    ``(key, ts, turn_idx)``.
 
-    Same chained-``searchsorted`` idea as :func:`match_linear_vectorized`,
-    but one numpy pass covers every conversation in the block: a step-k+1
-    candidate found past the conversation boundary lands in a different key
-    and is discarded by the key-equality mask. This removes the per-group
-    pandas overhead of grouped ``applyInPandas`` (the block is a whole task
-    partition), which dominates at millions of small conversations.
+
+def linear_chain(
+    block: pa.RecordBatch, spec: PatternSpec, codes: np.ndarray
+) -> list[np.ndarray]:
+    """Row positions of every match of a linear spec in a MULTI-KEY block
+    sorted by ``(key, ts, turn_idx)``, one array per step; ``codes`` numbers
+    the block's key runs.
+
+    Chained ``searchsorted``: each step-0 event pairs with the first later
+    event of each following step. One numpy pass covers every key in the
+    block; a candidate found past a key boundary lands on another key code
+    and is discarded.
     """
-    assert spec.is_linear
-    n = len(pdf)
-    if n == 0:
-        return pd.DataFrame()
-    keys = pdf[spec.key_col].to_numpy()
-    ts_ns = pd.to_datetime(pdf[spec.ts_col]).astype("int64").to_numpy()
-    positions = [np.flatnonzero(_effective_flags(pdf, s)) for s in spec.steps]
+    positions = []
+    for s in spec.steps:
+        f = flags(block, s.flag_col)
+        if s.logic == "or":
+            f = f | flags(block, s.flag_col2)
+        positions.append(np.flatnonzero(f))
     if any(len(p) == 0 for p in positions):
-        return pd.DataFrame()
+        return [p[:0] for p in positions]
 
-    cur = positions[0]
-    chain = [cur]
-    alive = np.ones(len(cur), dtype=bool)
-    prev = cur
+    chain = [positions[0]]
+    alive = np.ones(len(chain[0]), dtype=bool)
+    prev = chain[0]
     for pos in positions[1:]:
         nxt_idx = np.searchsorted(pos, prev, side="right")
         ok = nxt_idx < len(pos)
         nxt = np.where(ok, pos[np.minimum(nxt_idx, len(pos) - 1)], -1)
         alive &= ok
-        # the "first event after prev" must be in the same conversation
-        safe = np.maximum(nxt, 0)
-        alive &= keys[safe] == keys[chain[0]]
+        alive &= codes[np.maximum(nxt, 0)] == codes[chain[0]]
         chain.append(nxt)
-        prev = np.where(alive, nxt, n)
+        prev = np.where(alive, nxt, len(codes))
 
     if spec.within is not None and len(chain) > 1:
-        final = np.maximum(chain[-1], 0)
-        alive &= (ts_ns[final] - ts_ns[chain[0]]) <= int(spec.within.value)
+        ts, ns = ts_ticks(block, spec.ts_col)
+        # d ticks <= W ns  <=>  d <= W // ns for integer d
+        alive &= ts[np.maximum(chain[-1], 0)] - ts[chain[0]] <= int(spec.within.value) // ns
+    return [c[alive] for c in chain]
 
-    sel0 = chain[0][alive]
-    rows: dict[str, Any] = {"conv_id": keys[sel0]}
+
+def match_linear_block(block: pa.RecordBatch, spec: PatternSpec) -> pa.RecordBatch:
+    """Match rows of a linear spec over a multi-key block, in the column
+    order and types of ``batch.output_schema``: every column is a ``take``
+    from the input."""
+    assert spec.is_linear
+    chain = linear_chain(block, spec, np.cumsum(key_starts(block.column(spec.key_col))))
+    idx = [pa.array(c) for c in chain]
+    cols = {"conv_id": block.column(spec.key_col).take(idx[0])}
     for i, s in enumerate(spec.steps):
-        sel = chain[i][alive]
-        rows[f"{s.name}_turn_idx"] = pdf["turn_idx"].to_numpy()[sel]
-        rows[f"{s.name}_ts"] = pdf[spec.ts_col].to_numpy()[sel]
+        cols[f"{s.name}_turn_idx"] = block.column("turn_idx").take(idx[i])
+        cols[f"{s.name}_ts"] = block.column(spec.ts_col).take(idx[i])
         for c in s.emit:
-            rows[f"{s.name}_{c}"] = pdf[c].to_numpy()[sel]
-    return pd.DataFrame(rows)
+            cols[f"{s.name}_{c}"] = block.column(c).take(idx[i])
+    return pa.RecordBatch.from_pydict(cols)
 
 
 def match_absent_block(
-    pdf: pd.DataFrame,
+    block: pa.RecordBatch,
     key_col: str,
     ts_col: str,
     trigger_flag: str,
     absent_flag: str,
     duration_ns: int,
     emit_cols: tuple[str, ...] = ("turn_idx",),
-) -> pd.DataFrame:
+) -> pa.RecordBatch:
     """Absent pattern ``trigger -> NOT absent FOR d``: emit each trigger
     event with NO absent-flagged event of the same key in
     ``(trigger.ts, trigger.ts + d]``.
@@ -306,70 +317,21 @@ def match_absent_block(
     searchsorted probe over a ``(key, ts)``-sorted block. Input contract ==
     :func:`match_linear_block`.
     """
-    if len(pdf) == 0:
-        return pd.DataFrame()
-    keys = pdf[key_col].to_numpy()
-    ts_ns = pd.to_datetime(pdf[ts_col]).astype("int64").to_numpy()
-    trig = np.flatnonzero(pdf[trigger_flag].to_numpy())
-    if len(trig) == 0:
-        return pd.DataFrame()
-    absent = np.flatnonzero(pdf[absent_flag].to_numpy())
-    if len(absent) == 0:
-        violated = np.zeros(len(trig), dtype=bool)
-    else:
+    codes = np.cumsum(key_starts(block.column(key_col)))
+    trig = np.flatnonzero(flags(block, trigger_flag))
+    absent = np.flatnonzero(flags(block, absent_flag))
+    violated = np.zeros(len(trig), dtype=bool)
+    if len(absent):
+        ts, ns = ts_ticks(block, ts_col)
         nxt_idx = np.searchsorted(absent, trig, side="right")
-        have = nxt_idx < len(absent)
         nxt = absent[np.minimum(nxt_idx, len(absent) - 1)]
-        same_key = keys[nxt] == keys[trig]
-        in_window = ts_ns[nxt] - ts_ns[trig] <= duration_ns
-        violated = have & same_key & in_window
-    sel = trig[~violated]
-    rows = {"conv_id": keys[sel]}
-    for c in emit_cols:
-        rows[c] = pdf[c].to_numpy()[sel]
-    rows["ts"] = pdf[ts_col].to_numpy()[sel]
-    return pd.DataFrame(rows)
-
-
-def match_linear_vectorized(pdf: pd.DataFrame, spec: PatternSpec) -> pd.DataFrame:
-    """Vectorized fast path for linear EVERY patterns (no quantifiers, no
-    cross predicates, pattern mode): chain ``searchsorted`` lookups — each
-    step-0 event pairs with the first subsequent step-1 event, etc.
-
-    Produces byte-identical results to :func:`run_nfa` for eligible specs
-    (property-tested in tests/test_cep.py).
-    """
-    assert spec.is_linear
-    pdf = pdf.sort_values(list(spec.order_cols), kind="mergesort").reset_index(drop=True)
-    key = pdf[spec.key_col].iloc[0] if len(pdf) else None
-    ts_ns = pd.to_datetime(pdf[spec.ts_col]).astype("int64").to_numpy()
-    positions = [np.flatnonzero(_effective_flags(pdf, s)) for s in spec.steps]
-    if any(len(p) == 0 for p in positions):
-        return pd.DataFrame()
-
-    cur = positions[0]
-    chain = [cur]
-    alive = np.ones(len(cur), dtype=bool)
-    prev = cur
-    for pos in positions[1:]:
-        nxt_idx = np.searchsorted(pos, prev, side="right")
-        ok = nxt_idx < len(pos)
-        nxt = np.where(ok, pos[np.minimum(nxt_idx, len(pos) - 1)], -1)
-        alive &= ok
-        chain.append(nxt)
-        prev = np.where(ok, nxt, len(pdf))  # dead rows point past the end
-
-    if spec.within is not None and len(chain) > 1:
-        final = chain[-1]
-        safe_final = np.maximum(final, 0)
-        dur = ts_ns[safe_final] - ts_ns[chain[0]]
-        alive &= dur <= int(spec.within.value)
-
-    rows: dict[str, Any] = {"conv_id": np.repeat(key, int(alive.sum()))}
-    for i, s in enumerate(spec.steps):
-        sel = chain[i][alive]
-        rows[f"{s.name}_turn_idx"] = pdf["turn_idx"].to_numpy()[sel]
-        rows[f"{s.name}_ts"] = pdf[spec.ts_col].to_numpy()[sel]
-        for c in s.emit:
-            rows[f"{s.name}_{c}"] = pdf[c].to_numpy()[sel]
-    return pd.DataFrame(rows)
+        violated = (
+            (nxt_idx < len(absent))
+            & (codes[nxt] == codes[trig])
+            & (ts[nxt] - ts[trig] <= duration_ns // ns)
+        )
+    sel = pa.array(trig[~violated])
+    cols = {"conv_id": block.column(key_col).take(sel)}
+    cols.update((c, block.column(c).take(sel)) for c in emit_cols)
+    cols["ts"] = block.column(ts_col).take(sel)
+    return pa.RecordBatch.from_pydict(cols)

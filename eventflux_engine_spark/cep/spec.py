@@ -110,23 +110,3 @@ class PatternSpec:
             and not s.index_emit
             for s in self.steps
         ) and self.every and self.mode == "pattern"
-
-    def output_columns(self) -> list[tuple[str, str]]:
-        """(column_name, source) pairs for the flattened match row.
-
-        ≙ TerminalPostStateProcessor flattening the matched StateEvent into
-        one wide row (``src/core/util/parser/query_parser.rs:39-114``).
-        """
-        cols: list[tuple[str, str]] = [("conv_id", self.key_col)]
-        for s in self.steps:
-            cols.append((f"{s.name}_turn_idx", "turn_idx"))
-            cols.append((f"{s.name}_ts", self.ts_col))
-            if s.max_count > 1:
-                cols.append((f"{s.name}_count", "__count"))
-            for c in s.emit:
-                cols.append((f"{s.name}_{c}", c))
-            for fn, c in s.agg_emit:
-                cols.append((f"{s.name}_{fn}_{c}", c))
-            for idx, c in s.index_emit:
-                cols.append((f"{s.name}_at{idx}_{c}", c))
-        return cols

@@ -45,7 +45,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # large Arrow batches amortize Python-side per-batch overhead in the
-        # partition-level vectorized NFA (mapInPandas); rows are narrow
+        # partition-level vectorized NFA (mapInArrow); rows are narrow
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         # RAM-backed shuffle dir: local-mode shuffles go through the local

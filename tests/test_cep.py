@@ -6,10 +6,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from eventflux_engine_spark.cep import PatternSpec, Step, match_pattern_batch
-from eventflux_engine_spark.cep.nfa import match_linear_vectorized, run_nfa
+from eventflux_engine_spark.cep.nfa import match_linear_block, run_nfa
 
 
 def mk_events(roles: list[str], gap_s: int = 60, conv: str = "c1") -> pd.DataFrame:
@@ -149,22 +150,27 @@ class TestStatefulContinuation:
 class TestVectorizedFastPath:
     @pytest.mark.parametrize("seed", range(5))
     def test_equivalence_with_slow_path(self, seed):
+        # the Arrow kernel runs over one block of several conversations, as
+        # in a Spark task; run_nfa replays each conversation on its own
         rng = np.random.RandomState(seed)
-        roles = rng.choice(["A", "B", "C"], size=200).tolist()
-        ev = mk_events(roles, gap_s=37)
+        convs = [
+            mk_events(rng.choice(["A", "B", "C"], size=200).tolist(), gap_s=37, conv=f"c{i}")
+            for i in range(3)
+        ]
         spec = PatternSpec(
             steps=(Step("e1", "is_a"), Step("e2", "is_b"), Step("e3", "is_c")),
             within=pd.Timedelta(seconds=500),
         )
         assert spec.is_linear
-        fast = match_linear_vectorized(ev, spec)
-        slow_rows, _, _ = run_nfa(ev, spec)
-        slow = pd.DataFrame(slow_rows)
-        cols = ["e1_turn_idx", "e2_turn_idx", "e3_turn_idx"]
+        block = pa.RecordBatch.from_pandas(pd.concat(convs, ignore_index=True), preserve_index=False)
+        fast = match_linear_block(block, spec).to_pandas()
+        slow = pd.DataFrame([r for ev in convs for r in run_nfa(ev, spec)[0]])
+        cols = ["conv_id", "e1_turn_idx", "e2_turn_idx", "e3_turn_idx"]
         if fast.empty and slow.empty:
             return
-        got = fast[cols].sort_values(cols).reset_index(drop=True).astype("int64")
-        want = slow[cols].sort_values(cols).reset_index(drop=True).astype("int64")
+        ints = {c: "int64" for c in cols[1:]}
+        got = fast[cols].astype(ints).sort_values(cols).reset_index(drop=True)
+        want = slow[cols].astype(ints).sort_values(cols).reset_index(drop=True)
         pd.testing.assert_frame_equal(got, want)
 
 

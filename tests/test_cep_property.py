@@ -3,18 +3,20 @@
 An independent brute-force matcher defines EVERY-sequence semantics from
 first principles — each step-0 event pairs greedily with the first
 subsequent event per position — and the NFA (both paths) must agree on
-arbitrary role sequences, gaps, and WITHIN bounds.
+arbitrary role sequences, gaps, and WITHIN bounds. The Arrow linear kernel
+runs the way Spark runs it: over one block holding several conversations.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from eventflux_engine_spark.cep import PatternSpec, Step
-from eventflux_engine_spark.cep.nfa import match_linear_vectorized, run_nfa
+from eventflux_engine_spark.cep.nfa import match_linear_block, run_nfa
 
 
 def brute_force_linear(roles, gaps_s, step_roles, within_s=None):
@@ -55,14 +57,36 @@ def frame(roles, gaps_s):
     )
 
 
+def linear_block_matches(convs, gaps_s, spec):
+    """Step turn indices per conversation from the Arrow linear kernel run
+    over one block that holds every conversation in ``convs``."""
+    got = {f"c{i}": [] for i in range(len(convs))}
+    frames = [
+        frame(r, gaps_s[: len(r)]).assign(conv_id=f"c{i}") for i, r in enumerate(convs) if r
+    ]
+    if not frames:
+        return got
+    pdf = pd.concat(frames, ignore_index=True)
+    out = match_linear_block(pa.RecordBatch.from_pandas(pdf, preserve_index=False), spec)
+    cols = ["conv_id", *(f"{s.name}_turn_idx" for s in spec.steps)]
+    for t in out.to_pandas()[cols].itertuples(index=False):
+        got[t[0]].append(tuple(int(v) for v in t[1:]))
+    return {k: sorted(v) for k, v in got.items()}
+
+
 ROLES = st.lists(st.sampled_from(["A", "B", "C", "X"]), min_size=0, max_size=60)
 GAPS = st.lists(st.integers(min_value=1, max_value=120), min_size=60, max_size=60)
 
 
 class TestNFAProperties:
-    @given(roles=ROLES, gaps=GAPS, within=st.sampled_from([None, 90, 300]))
+    @given(
+        roles=ROLES,
+        gaps=GAPS,
+        within=st.sampled_from([None, 90, 300]),
+        others=st.lists(ROLES, max_size=3),
+    )
     @settings(max_examples=150, deadline=None)
-    def test_linear_two_step_matches_brute_force(self, roles, gaps, within):
+    def test_linear_two_step_matches_brute_force(self, roles, gaps, within, others):
         spec = PatternSpec(
             steps=(Step("e1", "is_a"), Step("e2", "is_b")),
             within=pd.Timedelta(seconds=within) if within else None,
@@ -72,13 +96,12 @@ class TestNFAProperties:
         rows, _, _ = run_nfa(pdf, spec)
         got_slow = sorted((r["e1_turn_idx"], r["e2_turn_idx"]) for r in rows)
         assert got_slow == want
-        fast = match_linear_vectorized(pdf, spec)
-        got_fast = (
-            sorted(zip(fast["e1_turn_idx"].astype(int), fast["e2_turn_idx"].astype(int)))
-            if len(fast)
-            else []
-        )
-        assert got_fast == want
+        convs = [roles, *others]
+        got_fast = linear_block_matches(convs, gaps, spec)
+        assert got_fast == {
+            f"c{i}": brute_force_linear(r, gaps[: len(r)], ["A", "B"], within)
+            for i, r in enumerate(convs)
+        }
 
     @given(roles=ROLES, gaps=GAPS)
     @settings(max_examples=100, deadline=None)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -69,8 +70,9 @@ class TestAbsent:
     def test_absent_emits_when_no_follower(self):
         pdf = mk(["A", "C", "C", "A", "B"], gap_s=60)
         out = match_absent_block(
-            pdf, "conv_id", "ts", "is_a", "is_b", int(120e9), ("turn_idx",)
-        )
+            pa.RecordBatch.from_pandas(pdf, preserve_index=False),
+            "conv_id", "ts", "is_a", "is_b", int(120e9), ("turn_idx",),
+        ).to_pandas()
         # A@0: next B is @4 (240s later, outside 120s) → absent holds
         # A@3: B@4 is 60s later (inside) → violated
         assert sorted(out["turn_idx"]) == [0]
@@ -79,8 +81,9 @@ class TestAbsent:
         pdf = pd.concat([mk(["A", "B"], conv="c1"), mk(["A", "C"], conv="c2")])
         pdf = pdf.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
         out = match_absent_block(
-            pdf, "conv_id", "ts", "is_a", "is_b", int(3600e9), ("turn_idx",)
-        )
+            pa.RecordBatch.from_pandas(pdf, preserve_index=False),
+            "conv_id", "ts", "is_a", "is_b", int(3600e9), ("turn_idx",),
+        ).to_pandas()
         # c1's A is answered by B; c2's A has no B (c1's rows must not leak)
         assert list(out["conv_id"]) == ["c2"]
 
