@@ -95,10 +95,6 @@ def spread_input(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the transcripts table from ``events.parquet``.
 

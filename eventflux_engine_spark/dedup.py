@@ -234,14 +234,6 @@ _MH_A = [(1103515245 * (i + 1) + 12345) % 2147483647 or 1 for i in range(64)]
 _MH_B = [((i + 1) * 2654435761) % _MH_P for i in range(64)]
 
 
-def _mh_exprs_spark(col: Column, n_hashes: int) -> list[Column]:
-    base = F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-    return [
-        (F.lit(_MH_A[i]) * base + F.lit(_MH_B[i])) % F.lit(_MH_P)
-        for i in range(n_hashes)
-    ]
-
-
 def _mh_base_sql(col_sql: str) -> str:
     return f"cast('0x' || substr(md5({col_sql}), 1, 8) AS BIGINT)"
 

@@ -21,14 +21,16 @@ windowed aggregates yield one row per closed window.
 from __future__ import annotations
 
 import datetime
+import functools
 import re
 import threading
 import warnings
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..cep import PatternSpec, Step, match_pattern_batch
 from .compiler import (
@@ -45,6 +47,14 @@ from .compiler import (
     parse_update,
     parse_upsert,
     split_statements,
+)
+from .feeds import (
+    EPOCH as _EPOCH,
+    OUTER_JOIN_KEY,
+    Feeds,
+    drop_sentinel,
+    keep_sentinel,
+    not_sentinel,
 )
 
 _AGG_RE = re.compile(
@@ -65,7 +75,6 @@ def _is_agg_expr(e: str) -> bool:
 
 
 _EREF_RE = re.compile(r"\b(e\d+)\.(\w+)")
-_EPOCH = datetime.datetime(2024, 1, 1)
 
 
 def _sql_literal(text: str):
@@ -190,7 +199,9 @@ class EventFluxApp:
 
     # -- evaluation ---------------------------------------------------------
 
-    def _base_df(self, name: str) -> DataFrame:
+    def _base_rows(self, name: str) -> tuple[str, list[tuple]]:
+        """DDL schema and rows of a stream's own events: its sent rows, or
+        a trigger's ticks."""
         sd = self.streams[name]
         schema = ", ".join(f"{c} {t}" for c, t in sd.columns)
         schema = (schema + ", " if schema else "") + "__seq bigint, __ts timestamp"
@@ -214,6 +225,11 @@ class EventFluxApp:
                     ticks.append(t)
                     t += step
             rows = [(t, 10_000_000 + i, t) for i, t in enumerate(ticks)]
+        return schema, rows
+
+    def _base_df(self, name: str) -> DataFrame:
+        sd = self.streams[name]
+        schema, rows = self._base_rows(name)
         base = self.spark.createDataFrame(rows, schema)
         if sd.is_table and sd.options.get("backend") == "jdbc":
             # pre-existing store contents arrive BEFORE every stream event
@@ -709,40 +725,120 @@ class EventFluxApp:
         n_chunks: int = 3,
     ) -> list[tuple]:
         """Execute the single query targeting ``target`` as a REAL
-        Structured Streaming job: sent rows feed a chunked file stream (plus
-        a far-future flush sentinel), the query runs with watermarks, output
-        drains from a memory sink.
+        Structured Streaming job, in four parts:
 
-        Supported terminal shapes: row-level filter/projection (incl.
-        stream-table enrichment joins — bound table broadcast per
-        micro-batch — and stream-STREAM INNER joins: each input gets its own
-        chunked feed and Spark's symmetric join state buffers both sides
-        across micro-batches), windowed aggregation (tumbling/sliding/
-        session + GROUP BY), non-windowed GROUP BY (running agg,
-        complete-mode drain), and patterns — including MULTI-stream
-        patterns (step streams union into one watermarked feed tagged
-        __src; every secondary feed carries its own far-future sentinel
-        because a union's watermark is the min across inputs). INSERT INTO chains compile into ONE
-        streaming plan: row-level intermediate stages apply in-plan
-        (junction fan-through, stream_junction.rs analog).
+        1. chain resolution: INSERT INTO chains compile into ONE streaming
+           plan whose intermediate stages apply in-plan (junction
+           fan-through, stream_junction.rs analog; :meth:`_stream_chain`);
+        2. feeds: every input stream becomes a chunked file feed that ends
+           in a far-future sentinel row. ``sql/feeds.py`` owns the sentinel
+           and the one rule for what a watermark has made final;
+        3. one lowering per terminal shape: row-level filter/projection
+           (incl. stream-table enrichment joins and stream-STREAM joins —
+           Spark's symmetric join state buffers both feeds), OUTPUT rate
+           limits and snapshots, windowed aggregation, time/sort windows,
+           non-windowed GROUP BY (running agg), and patterns, which share
+           the batch lowering (:meth:`_lower_pattern`);
+        4. one drain from a memory sink (:meth:`_drain`).
+
         ≙ the reference's actual runtime mode (runtime.start() + sources,
         eventflux_app_runtime.rs:674) — the batch ``run()`` is its replay
         twin; parity between the two is pytest-asserted.
         """
-        import os
-        import shutil
-        import tempfile
+        from ..streaming import pipelines as P
 
         qs = [q for q in self.queries if q.target == target]
         if len(qs) != 1:
             raise ValueError("run_streaming supports exactly one query per target")
         q = qs[0]
-        # chained queries (junction composition, stream_junction.rs): walk
-        # back through INSERT INTO chains — every intermediate stage must be
-        # row-level (filter/projection) and is applied as a transformation
-        # on the SAME streaming DataFrame; only the head stream is fed
+        source, prelude, agg_stage = self._stream_chain(q)
+        sel = _Select(q)
+        w = q.window
+        snapshot = q.output_rate is not None and q.output_rate[0] == "SNAPSHOT"
+        if q.output_rate is not None and not snapshot and (
+            q.pattern is not None or sel.is_agg
+        ):
+            raise ValueError(
+                "streaming OUTPUT rate limiting supports row-level "
+                "FIRST/LAST/ALL EVERY n EVENTS / d TIME queries and "
+                "OUTPUT SNAPSHOT over aggregating queries"
+            )
+        outer_join = any(
+            h != "inner" and not self.streams[s].is_table for h, s, _, _ in q.joins
+        )
+        with Feeds(self.spark, n_chunks) as feeds:
+            stream = self._apply_chain(
+                self._feed(feeds, source, OUTER_JOIN_KEY if outer_join else None),
+                prelude,
+                agg_stage,
+            )
+
+            def kept():
+                # the sentinel SURVIVES the predicate in front of an
+                # event-time operator, or the watermark never advances
+                return stream.filter(keep_sentinel(q.where)) if q.where else stream
+
+            last_only = False
+            if agg_stage is not None:
+                # terminal consumer of an aggregating intermediate: plain
+                # filter/projection over the running aggregation's state;
+                # complete-mode drain returns the FINAL state — exactly what
+                # batch run() computes for agg -> INSERT INTO S -> row-level
+                out = stream.filter(F.expr(q.where)) if q.where else stream
+                out, mode = out.selectExpr(*sel.items), "complete"
+            elif snapshot:
+                out, mode = self._snapshot_stream(q, kept(), sel), "append"
+            elif q.pattern is not None:
+                # the chain's output is the first step's stream; every other
+                # step stream is its own feed with its own sentinel, because
+                # a union's watermark is the MIN across inputs
+                first = q.pattern.steps[0].stream
+                out = self._lower_pattern(
+                    q,
+                    lambda s: stream if s == first else self._feed(feeds, s),
+                    watermark,
+                )
+                mode = "append"
+            elif w is not None and w.kind in ("time", "sort"):
+                # live time(d) / sort(N, attr) windows
+                # (sort_window_processor.rs:25): stateful retention on the
+                # app's logical clock; the sentinel flushes the FINAL
+                # retained set (the batch restatement's final-state contract)
+                if w.kind == "time":
+                    retained = P.time_window_stream(kept(), int(w.params[0]))
+                else:
+                    attr, desc = _sort_key(w.params[1])
+                    retained = P.sort_window_stream(
+                        kept(), int(w.params[0]), attr, not desc
+                    )
+                if sel.is_agg:
+                    out = P.group_agg_update_stream(retained, sel.keys, sel.aggs)
+                    out, mode = out.select(*sel.outs), "complete"
+                else:
+                    out, mode = retained.selectExpr(*sel.items, "__seq"), "append"
+            elif w is not None and sel.is_agg:
+                out, mode, last_only = self._window_agg_stream(
+                    q, kept(), sel, watermark
+                )
+            elif not sel.is_agg:
+                out, mode = self._row_stream(q, stream, sel, feeds, watermark), "append"
+            else:
+                # non-windowed GROUP BY: running aggregation. The reference
+                # emits one row per touched group per chunk (update mode);
+                # the drained FINAL state is what batch run() returns, so the
+                # memory sink runs in complete mode (select_processor.rs:483-529)
+                out, mode = _running_agg(stream, q, sel), "complete"
+            return self._drain(out, f"__sqlstream_{target.lower()}", mode, last_only)
+
+    def _stream_chain(self, q: QueryDef) -> tuple[str, list[QueryDef], "QueryDef | None"]:
+        """Walk back through the INSERT INTO chain feeding ``q``
+        (junction composition, stream_junction.rs). Returns the head
+        stream (the only one fed), the intermediate stages head first, and
+        the aggregating stage if there is one. Every intermediate stage is
+        row-level (filter/projection) or, at most once, a non-windowed
+        GROUP BY followed only by row-level stages."""
         prelude: list[QueryDef] = []
-        agg_stages: list[QueryDef] = []
+        agg_stage = None
         head = q.pattern.steps[0].stream if q.pattern else q.source
         while True:
             ups = [u for u in self.queries if u.target == head]
@@ -758,9 +854,7 @@ class EventFluxApp:
                     f"stream {head} is both sent-to and query-fed; streaming "
                     "chains support one producer"
                 )
-            u_agg = bool(u.group_by) or any(
-                _is_agg_expr(e) for e, _ in u.select_items
-            )
+            u_agg = _Select(u).is_agg
             if u.pattern or u.window or u.joins or (
                 u_agg and u.output_rate is not None
             ):
@@ -772,717 +866,321 @@ class EventFluxApp:
             if u_agg:
                 # ONE aggregating intermediate per chain (stream_junction.rs
                 # chains arbitrary queries; the Spark restatement runs the
-                # running aggregation update-mode in-plan and drains the
-                # final state — so everything downstream must be row-level
-                # and a second aggregation over update-mode re-emissions
-                # would double-count)
-                if agg_stages:
+                # running aggregation in-plan and drains the final state —
+                # so everything downstream must be row-level and a second
+                # aggregation over update-mode re-emissions would
+                # double-count)
+                if agg_stage is not None:
                     raise ValueError(
                         "streaming chains support one aggregating "
                         "intermediate stage"
                     )
-                agg_stages.append(u)
+                agg_stage = u
             prelude.insert(0, u)
             head = u.source
-        source = head
-        if agg_stages:
-            terminal_agg = bool(q.group_by) or any(
-                _is_agg_expr(e) for e, _ in q.select_items
+        if agg_stage is not None and (
+            q.pattern or q.window or q.joins or _Select(q).is_agg
+            or q.output_rate is not None
+        ):
+            raise ValueError(
+                "a streaming chain with an aggregating intermediate "
+                "needs a row-level terminal query (filter/projection)"
             )
-            if (
-                q.pattern or q.window or q.joins or terminal_agg
-                or q.output_rate is not None
-            ):
-                raise ValueError(
-                    "a streaming chain with an aggregating intermediate "
-                    "needs a row-level terminal query (filter/projection)"
-                )
+        return head, prelude, agg_stage
 
-        sd = self.streams[source]
-        base = self._base_df(source).toPandas()
-        # type-correct neutral values: the sentinel only advances the
-        # watermark; it is excluded from results by __seq >= 10^9 (row-level/
-        # pattern) or by its never-closing far-future window (aggregates).
-        # Outer stream-stream joins need NON-NULL string values: Spark
-        # pushes isnotnull(join_key) below the watermark node and a
-        # null-keyed sentinel would be dropped at the scan (matching is
-        # prevented by the WITHIN bound — sentinel timestamps sit days
-        # apart across feeds, years from data).
-        outer_join = any(
-            h != "inner" and not self.streams[s].is_table
-            for h, s, _, _ in q.joins
-        )
-        defaults = {"string": "\x00sentinel" if outer_join else None,
-                    "int": 0, "bigint": 0, "float": 0.0,
-                    "double": 0.0, "boolean": False,
-                    "timestamp": _EPOCH}
-        sentinel_vals = {c: defaults.get(t) for c, t in sd.columns}
-        sentinel = pd.DataFrame(
-            [{**sentinel_vals, "__seq": 10**9,
-              "__ts": _EPOCH + datetime.timedelta(days=3650)}]
-        )
-        feed_dir = tempfile.mkdtemp(prefix="efs_sqlstream_")
-        join_feed_dirs: list[str] = []
+    def _feed(self, feeds: Feeds, name: str, strings: str | None = None) -> DataFrame:
+        """Open a stream's own events as the next sentinel-terminated feed."""
+        ddl, rows = self._base_rows(name)
+        return feeds.open(T.StructType.fromDDL(ddl), rows, strings)
+
+    @staticmethod
+    def _apply_chain(
+        stream: DataFrame, prelude: list[QueryDef], agg_stage: "QueryDef | None"
+    ) -> DataFrame:
+        """Apply the chain's intermediate stages on the same streaming plan:
+        the junction between stages is an in-plan projection; an
+        aggregating stage becomes an in-plan running aggregation whose
+        state feeds the rest of the chain."""
+        post_agg = False
+        for u in prelude:
+            usel = _Select(u)
+            if u is agg_stage:
+                stream, post_agg = _running_agg(stream, u, usel), True
+            elif post_agg:
+                s = stream.filter(F.expr(u.where)) if u.where else stream
+                stream = s.selectExpr(*usel.items)
+            else:
+                # the sentinel must SURVIVE stage predicates or downstream
+                # event-time operators never flush
+                s = stream.filter(keep_sentinel(u.where)) if u.where else stream
+                stream = s.selectExpr(*usel.items, "__seq", "__ts")
+        return stream
+
+    def _drain(
+        self, out: DataFrame, name: str, mode: str, last_only: bool = False
+    ) -> list[tuple]:
+        """Run the plan over every feed into a memory sink and collect it in
+        emission order without sentinel rows or ``__`` columns.
+        ``last_only`` keeps the final emission only (a per-arrival length
+        window's final state)."""
+        qh = out.writeStream.format("memory").queryName(name).outputMode(mode).start()
         try:
-            if len(base) == 0:
-                raise ValueError("run_streaming needs at least one sent event")
-            chunks = max(1, min(n_chunks, len(base)))
-            bounds = [round(i * len(base) / chunks) for i in range(chunks + 1)]
-            parts = [base.iloc[bounds[i]: bounds[i + 1]] for i in range(chunks)]
-            # merge the sentinel into the last chunk so pandas keeps the real
-            # rows' column dtypes (a lone all-default chunk mis-infers types),
-            # then restore exact dtypes (concat promotes int32 → int64)
-            parts[-1] = pd.concat([parts[-1], sentinel], ignore_index=True).astype(
-                base.dtypes.to_dict()
-            )
-            for i, c in enumerate(parts):
-                c.to_parquet(
-                    os.path.join(feed_dir, f"c{i:03d}.parquet"), index=False,
-                    coerce_timestamps="us", allow_truncated_timestamps=True,
-                )
-            schema = self._base_df(source).schema
-            stream = (
-                self.spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(feed_dir)
-            )
-            # apply chained stages on the same streaming plan — the junction
-            # between stages is an in-plan projection (stream_junction.rs
-            # fan-through analog); an aggregating stage becomes an in-plan
-            # running aggregation whose update-mode state feeds the rest of
-            # the chain (drained complete — final state == batch replay)
-            chain_agg_applied = False
-            for u in prelude:
-                if u in agg_stages:
-                    ukeys = [
-                        g.strip()
-                        for g in (u.group_by or "").split(",")
-                        if g.strip()
-                    ]
-                    uaggs = [
-                        F.expr(e).alias(a) if a else F.expr(e)
-                        for e, a in u.select_items
-                        if _is_agg_expr(e)
-                    ]
-                    # no event-time operator follows (terminal is row-level,
-                    # complete-mode drain) — the sentinel can drop here
-                    s2 = stream.filter(F.col("__seq") < 10**9)
-                    if u.where:
-                        s2 = s2.filter(F.expr(u.where))
-                    stream = s2.groupBy(*ukeys).agg(*uaggs).select(
-                        *[F.col(a or e) for e, a in u.select_items]
-                    )
-                    chain_agg_applied = True
-                    continue
-                s2 = stream
-                if u.where:
-                    # pre-agg: the watermark sentinel must SURVIVE stage
-                    # predicates or downstream event-time operators never
-                    # flush; post-agg the sentinel is already gone
-                    s2 = s2.filter(
-                        F.expr(u.where)
-                        if chain_agg_applied
-                        else F.expr(u.where) | (F.col("__seq") >= 10**9)
-                    )
-                stream = s2.selectExpr(
-                    *[f"{e} AS {a}" if a else e for e, a in u.select_items],
-                    *([] if chain_agg_applied else ["__seq", "__ts"]),
-                )
-
-            name = f"__sqlstream_{target.lower()}"
-            is_agg = bool(q.group_by) or any(
-                _is_agg_expr(e) for e, _ in q.select_items
-            )
-            snapshot = (
-                q.output_rate is not None and q.output_rate[0] == "SNAPSHOT"
-            )
-            if q.output_rate is not None and not snapshot and (
-                q.pattern is not None or is_agg
-            ):
-                raise ValueError(
-                    "streaming OUTPUT rate limiting supports row-level "
-                    "FIRST/LAST/ALL EVERY n EVENTS / d TIME queries and "
-                    "OUTPUT SNAPSHOT over aggregating queries"
-                )
-            if agg_stages:
-                # terminal consumer of an aggregating intermediate: plain
-                # filter/projection over the running aggregation's state;
-                # complete-mode drain returns the FINAL state — exactly what
-                # batch run() computes for agg -> INSERT INTO S -> row-level
-                out = stream
-                if q.where:
-                    out = out.filter(F.expr(q.where))
-                out = out.selectExpr(
-                    *[f"{e} AS {a}" if a else e for e, a in q.select_items]
-                )
-                mode = "complete"
-            elif snapshot:
-                # OUTPUT SNAPSHOT EVERY d over a live aggregating query
-                # (snapshot_output_rate.rs): per-tick full-state emission as
-                # a stateful op; identical event-time restatement to the
-                # batch operator, so batch/streaming rows match
-                if q.pattern is not None or not is_agg or (
-                    q.window is not None and q.window.kind != "tumbling"
-                ):
-                    raise ValueError(
-                        "streaming OUTPUT SNAPSHOT supports non-windowed or "
-                        "tumbling-windowed aggregating queries"
-                    )
-                from ..operators.output import _parse_simple_agg
-                from ..streaming.ratelimit import snapshot_agg_stream
-
-                keys = [
-                    g.strip() for g in (q.group_by or "").split(",") if g.strip()
-                ]
-                # tumbling window → the bucket start joins the state key
-                # (same partials-over-buckets decomposition as the batch
-                # operator; VERDICT r4 #5)
-                wb_expr = None
-                if q.window is not None:
-                    wms = int(q.window.params[0])
-                    wb_expr = F.floor(
-                        F.col("__ts").cast("timestamp_ltz").cast("double")
-                        * 1000.0
-                        / F.lit(float(wms))
-                    ).cast("bigint").alias("__wb")
-                agg_items = [
-                    (e, a or e) for e, a in q.select_items if _is_agg_expr(e)
-                ]
-                parsed = [_parse_simple_agg(e) for e, _ in agg_items]
-                if any(p is None for p in parsed):
-                    raise ValueError(
-                        "streaming SNAPSHOT needs decomposable aggregates "
-                        "(count/sum/avg/min/max)"
-                    )
-                aliases = [a for _, a in agg_items]
-                src_f = (
-                    stream.filter(
-                        F.expr(q.where) | (F.col("__seq") >= 10**9)
-                    )
-                    if q.where
-                    else stream
-                )
-                proj = src_f.select(
-                    *([wb_expr] if wb_expr is not None else []),
-                    *keys,
-                    *[
-                        (
-                            F.lit(1.0)
-                            if fn == "count" and arg == "*"
-                            else F.expr(arg).cast("double")
-                        ).alias(f"_a{i}")
-                        for i, (fn, arg) in enumerate(parsed)
-                    ],
-                    "__seq", "__ts",
-                )
-                state_keys = (["__wb"] if wb_expr is not None else []) + keys
-                interval_ms = q.output_rate[1]
-                end = _EPOCH + datetime.timedelta(seconds=max(self._seq, 1))
-                start_ms = int(
-                    _EPOCH.replace(
-                        tzinfo=datetime.timezone.utc
-                    ).timestamp() * 1000
-                )
-                n_ticks = int(
-                    (end - _EPOCH).total_seconds() * 1000 // interval_ms
-                )
-                ktypes = dict(self.streams[q.source].columns)
-                out_schema = ", ".join(
-                    ["__tick bigint"]
-                    + (["__wb bigint"] if wb_expr is not None else [])
-                    + [f"{k} {ktypes[k]}" for k in keys]
-                    + [
-                        f"`{a}` " + (
-                            "bigint" if parsed[i][0] == "count" else "double"
-                        )
-                        for i, a in enumerate(aliases)
-                    ]
-                )
-                snap = snapshot_agg_stream(
-                    proj, state_keys, parsed, aliases, out_schema,
-                    interval_ms, start_ms, n_ticks,
-                )
-                # final projection in select-item order, cast to the target
-                # stream's declared types (batch sum(int) is BIGINT etc.)
-                ttypes = dict(self.streams[target].columns)
-                tcols = [c for c, _ in self.streams[target].columns]
-                sel = [F.col("__tick")] + (
-                    [F.col("__wb")] if wb_expr is not None else []
-                )
-                for (e, a), c in zip(q.select_items, tcols):
-                    src_col = (a or e) if _is_agg_expr(e) else e
-                    sel.append(F.col(src_col).cast(ttypes[c]).alias(c))
-                out = snap.select(*sel)
-                mode = "append"
-            elif q.pattern is not None:
-                # multi-stream patterns: union every step stream into one
-                # unified-schema feed tagged with __src (the batch path's
-                # construction, streaming twin) — each secondary feed gets
-                # its OWN far-future sentinel because the union's watermark
-                # is the MIN across inputs
-                p_streams = list(
-                    dict.fromkeys(
-                        [s.stream for s in q.pattern.steps]
-                        + ([q.pattern.absent[0]] if q.pattern.absent else [])
-                    )
-                )
-                all_cols: dict[str, str] = {}
-                for s in p_streams:
-                    for c, t in self.streams[s].columns:
-                        if c in all_cols and all_cols[c] != t:
-                            raise ValueError(
-                                f"column {c} type conflict across pattern streams"
-                            )
-                        all_cols[c] = t
-
-                def _unify(df, s):
-                    have = {x for x, _ in self.streams[s].columns}
-                    proj = [F.lit(s).alias("__src")]
-                    for c, t in all_cols.items():
-                        proj.append(
-                            (F.col(c) if c in have else F.lit(None).cast(t)).alias(c)
-                        )
-                    return df.select(*proj, "__seq", "__ts")
-
-                ustream = _unify(stream, source)
-                for k, s in enumerate(x for x in p_streams if x != source):
-                    ps, pdir = self._mk_stream_feed(
-                        s, n_chunks, sentinel_seq=10**9 + 1 + k
-                    )
-                    join_feed_dirs.append(pdir)
-                    ustream = ustream.unionByName(_unify(ps, s))
-                if q.pattern.absent is not None:
-                    out = self._compile_absent_stream(q, ustream, watermark)
-                else:
-                    out = self._compile_pattern_stream(q, ustream, watermark)
-                mode = "append"
-            elif q.window is not None and q.window.kind == "time":
-                # live time(d) window: stateful trailing-d buffer on the
-                # app's logical clock; sentinel flushes the final retained
-                # set (same final-state contract as the batch restatement)
-                from ..streaming import pipelines as P
-
-                w = q.window
-                src_f = (
-                    stream.filter(
-                        F.expr(q.where) | (F.col("__seq") >= 10**9)
-                    )
-                    if q.where
-                    else stream
-                )
-                retained = P.time_window_stream(src_f, int(w.params[0]))
-                keys = [
-                    g.strip() for g in (q.group_by or "").split(",") if g.strip()
-                ]
-                if is_agg:
-                    aggs = [
-                        F.expr(e).alias(a) if a else F.expr(e)
-                        for e, a in q.select_items
-                        if _is_agg_expr(e)
-                    ]
-                    out = P.group_agg_update_stream(retained, keys, aggs).select(
-                        *[F.col(a or e) for e, a in q.select_items]
-                    )
-                    mode = "complete"
-                else:
-                    items = [
-                        f"{e} AS {a}" if a else e for e, a in q.select_items
-                    ]
-                    out = retained.selectExpr(*items, "__seq")
-                    mode = "append"
-            elif q.window is not None and q.window.kind == "sort":
-                # live sort(N, attr) window (sort_window_processor.rs:25):
-                # stateful top-N comparator retention; the sentinel flushes
-                # the FINAL retained set, which the final-state drain
-                # consumes — both the passthrough and aggregate forms
-                from ..streaming import pipelines as P
-
-                w = q.window
-                attr_spec = str(w.params[1]).split()
-                attr = attr_spec[0]
-                asc = not (
-                    len(attr_spec) > 1 and attr_spec[1].lower() == "desc"
-                )
-                src_f = (
-                    stream.filter(
-                        F.expr(q.where) | (F.col("__seq") >= 10**9)
-                    )
-                    if q.where
-                    else stream
-                )
-                retained = P.sort_window_stream(
-                    src_f, int(w.params[0]), attr, asc
-                )
-                keys = [
-                    g.strip() for g in (q.group_by or "").split(",") if g.strip()
-                ]
-                if is_agg:
-                    aggs = [
-                        F.expr(e).alias(a) if a else F.expr(e)
-                        for e, a in q.select_items
-                        if _is_agg_expr(e)
-                    ]
-                    out = P.group_agg_update_stream(retained, keys, aggs).select(
-                        *[F.col(a or e) for e, a in q.select_items]
-                    )
-                    mode = "complete"
-                else:
-                    items = [
-                        f"{e} AS {a}" if a else e for e, a in q.select_items
-                    ]
-                    out = retained.selectExpr(*items, "__seq")
-                    mode = "append"
-            elif q.window is not None and is_agg:
-                from ..streaming import pipelines as P
-
-                w = q.window
-                aggs = [
-                    F.expr(e).alias(a) if a else F.expr(e)
-                    for e, a in q.select_items
-                    if _is_agg_expr(e)
-                ]
-                keys = [g.strip() for g in (q.group_by or "").split(",") if g.strip()]
-                if q.where:
-                    # the flush sentinel must SURVIVE the predicate (its
-                    # neutral values need not satisfy it) or the watermark
-                    # never advances and no window ever emits; the
-                    # sentinel's own far-future window never closes, so it
-                    # stays invisible in the output
-                    stream = stream.filter(
-                        F.expr(q.where) | (F.col("__seq") >= 10**9)
-                    )
-                if w.kind == "tumbling":
-                    out = P.tumbling_stream(
-                        stream, f"{w.params[0]} milliseconds", keys, aggs,
-                        ts_col="__ts", watermark=watermark,
-                    )
-                elif w.kind == "sliding":
-                    out = P.sliding_stream(
-                        stream, f"{w.params[0]} milliseconds",
-                        f"{w.params[1]} milliseconds", keys, aggs,
-                        ts_col="__ts", watermark=watermark,
-                    )
-                elif w.kind == "session":
-                    out = P.session_stream(
-                        stream, f"{w.params[0]} milliseconds", keys, aggs,
-                        ts_col="__ts", watermark=watermark,
-                    )
-                elif w.kind == "cron":
-                    # live cron(expr) window: the deterministic event-time
-                    # restatement of the reference's wall-clock cron ticks
-                    # (window/mod.rs:1742) — each event buckets to the NEXT
-                    # tick of the schedule, computed Catalyst-side against
-                    # the literal tick spine (events past the last tick
-                    # stay buffered/unemitted, as in batch); running
-                    # complete-mode aggregation per bucket
-                    from .cron import Cron
-
-                    cron = Cron(str(w.params[0]))
-                    horizon = _EPOCH + datetime.timedelta(
-                        seconds=self._seq + 61
-                    )
-                    cticks = cron.ticks(_EPOCH, horizon)
-                    if not cticks:
-                        raise ValueError(
-                            f"cron {w.params[0]!r} fires nowhere in the "
-                            "app horizon"
-                        )
-                    ticks_us = [
-                        int(
-                            t.replace(
-                                tzinfo=datetime.timezone.utc
-                            ).timestamp() * 1_000_000
-                        )
-                        for t in cticks
-                    ]
-                    ev_us = F.unix_micros(F.col("__ts").cast("timestamp"))
-                    arr = F.array(
-                        *[F.lit(t).cast("bigint") for t in ticks_us]
-                    )
-                    bucket = F.array_min(
-                        F.filter(arr, lambda t: t >= ev_us)
-                    )
-                    out = (
-                        stream.withColumn("__cron_bucket", bucket)
-                        .filter(F.col("__cron_bucket").isNotNull())
-                        .groupBy("__cron_bucket", *keys)
-                        .agg(*aggs)
-                    )
-                elif w.kind == "lengthBatch":
-                    # tumbling count window as a stateful op: emit + reset
-                    # every N events; the feed's far-future sentinel row
-                    # flushes the partial tail batch (no timer needed)
-                    agg_items = [
-                        (e, a) for e, a in q.select_items if _is_agg_expr(e)
-                    ]
-                    am = re.match(
-                        r"\s*(SUM|AVG|MIN|MAX|COUNT)\s*\(\s*(\w+)\s*\)\s*$",
-                        agg_items[0][0],
-                        re.IGNORECASE,
-                    ) if len(agg_items) == 1 and not keys else None
-                    if am is None:
-                        raise ValueError(
-                            "streaming WINDOW('lengthBatch') supports a "
-                            "single un-keyed SUM/AVG/MIN/MAX/COUNT aggregate"
-                        )
-                    src_f = (
-                        stream.filter(
-                            F.expr(q.where) | (F.col("__seq") >= 10**9)
-                        ) if q.where else stream
-                    )
-                    out_name = agg_items[0][1] or "agg"
-                    out = P.length_batch_stream(
-                        src_f, int(w.params[0]), am.group(1).lower(),
-                        am.group(2), out_name,
-                    )
-                    decl = dict(self.streams[target].columns)
-                    if out_name in decl:
-                        out = out.withColumn(
-                            out_name, F.col(out_name).cast(decl[out_name])
-                        )
-                    out = out.withColumnRenamed("batch_id", "__seq")
-                    mode = "append"
-                elif w.kind == "length":
-                    # per-arrival sliding count window as a stateful op; the
-                    # drain keeps only the final emission to honor run()'s
-                    # final-state contract (last N events' aggregate)
-                    agg_items = [
-                        (e, a) for e, a in q.select_items if _is_agg_expr(e)
-                    ]
-                    am = re.match(
-                        r"\s*(SUM|AVG|MIN|MAX|COUNT)\s*\(\s*(\w+)\s*\)\s*$",
-                        agg_items[0][0],
-                        re.IGNORECASE,
-                    ) if len(agg_items) == 1 and not keys else None
-                    if am is None:
-                        raise ValueError(
-                            "streaming WINDOW('length') supports a single "
-                            "un-keyed SUM/AVG/MIN/MAX/COUNT aggregate"
-                        )
-                    src_f = (
-                        stream.filter(F.expr(q.where)) if q.where else stream
-                    ).filter(F.col("__seq") < 10**9)
-                    out_name = agg_items[0][1] or "agg"
-                    out = P.length_window_stream(
-                        src_f, int(w.params[0]), am.group(1).lower(),
-                        am.group(2), out_name,
-                    )
-                    # cast the double emission to the declared target type
-                    decl = dict(self.streams[target].columns)
-                    if out_name in decl:
-                        out = out.withColumn(
-                            out_name, F.col(out_name).cast(decl[out_name])
-                        )
-                    qh = (
-                        out.writeStream.format("memory").queryName(
-                            f"__sqlstream_{target.lower()}"
-                        ).outputMode("append").start()
-                    )
-                    qh.processAllAvailable()
-                    qh.stop()
-                    res = self.spark.sql(
-                        f"SELECT * FROM __sqlstream_{target.lower()}"
-                    ).orderBy("__seq").drop("__seq")
-                    rows = [tuple(r) for r in res.collect()]
-                    return rows[-1:]
-                else:
-                    raise ValueError(f"streaming WINDOW('{w.kind}') unsupported")
-                if w.kind != "lengthBatch":
-                    # time windows: strip window bounds; count windows keep
-                    # their __seq (= batch id) for the ordered drain
-                    out = out.select(*(keys + [a for a in
-                        [c for c in out.columns if c not in keys
-                         and not c.startswith(("window_", "session_", "__"))]]))
-                # cron buckets re-aggregate as events arrive (no watermark
-                # closes them) → complete-mode final state, like the
-                # non-windowed running aggregation
-                mode = "complete" if w.kind == "cron" else "append"
-            elif not is_agg:
-                stream_partners = [
-                    j for j in q.joins if not self.streams[j[1]].is_table
-                ]
-                has_outer = any(j[0] != "inner" for j in stream_partners)
-                if stream_partners and not has_outer:
-                    # the driver sentinel must not join real partner rows
-                    # (its neutral key values could collide); no event-time
-                    # operator follows, so dropping it pre-join is safe
-                    out = stream.filter(F.col("__seq") < 10**9).alias(q.source)
-                else:
-                    # outer joins keep the sentinel: the global watermark is
-                    # the MIN across inputs, so the main feed must advance
-                    # too or pads never flush (the join condition excludes
-                    # sentinels from matching; pads are filtered post-join)
-                    out = stream.alias(q.source)
-                outer_projected = False
-                for how, sname, cond, _trig in q.joins:
-                    if self.streams[sname].is_table:
-                        # stream-table enrichment joins: the bound table
-                        # state broadcasts into every micro-batch (≙
-                        # TableJoinProcessor's per-event compiled probe,
-                        # table_join_processor.rs:17-137)
-                        static = self.stream_df(sname).drop("__seq", "__ts")
-                        out = out.join(
-                            F.broadcast(static.alias(sname)), F.expr(cond), how
-                        )
-                        continue
-                    # STREAM partner: second chunked file feed, real
-                    # micro-batch stream-stream join (join_processor.rs's
-                    # two live buffers ≙ Spark's symmetric join state).
-                    # INNER emits eagerly per match — no watermark needed to
-                    # flush. LEFT/RIGHT/FULL need an event-time bound (ON
-                    # ... WITHIN d) so Spark can expire join state and emit
-                    # the unmatched pads the reference's live outer joins
-                    # produce (join_processor.rs:104-112).
-                    within_ms = q.join_within.get(sname)
-                    if how != "inner" and within_ms is None:
-                        raise ValueError(
-                            "streaming outer stream-stream joins need an "
-                            "event-time bound: JOIN ... ON cond WITHIN d"
-                        )
-                    if how != "inner":
-                        if len(q.joins) != 1:
-                            raise ValueError(
-                                "streaming outer stream-stream joins "
-                                "support a single join"
-                            )
-                        out = self._join_outer_stream(
-                            out, q, how, sname, cond, within_ms,
-                            n_chunks, join_feed_dirs, watermark,
-                        )
-                        outer_projected = True
-                        continue
-                    pstream, pdir = self._mk_stream_feed(sname, n_chunks)
-                    join_feed_dirs.append(pdir)
-                    partner = (
-                        pstream.filter(F.col("__seq") < 10**9)
-                        .drop("__seq", "__ts")
-                        .alias(sname)
-                    )
-                    if within_ms is not None:
-                        us = within_ms * 1000
-                        # keep the partner event time for the bound, under a
-                        # name the SELECT items can't collide with
-                        partner = (
-                            pstream.filter(F.col("__seq") < 10**9)
-                            .drop("__seq")
-                            .withColumnRenamed("__ts", "__pts")
-                            .alias(sname)
-                        )
-                        out = out.join(
-                            partner,
-                            F.expr(cond)
-                            & (
-                                F.abs(
-                                    F.unix_micros("__ts")
-                                    - F.unix_micros("__pts")
-                                )
-                                <= F.lit(us)
-                            ),
-                            how,
-                        ).drop("__pts")
-                        continue
-                    out = out.join(partner, F.expr(cond), how)
-                if not outer_projected:
-                    # (an outer stream join already applied WHERE + the item
-                    # projection — qualified refs must resolve before the
-                    # pad-filter projection loses the join aliases)
-                    if q.where:
-                        out = out.filter(F.expr(q.where))
-                    items = [
-                        f"{e} AS {a}" if a else e for e, a in q.select_items
-                    ]
-                    if q.output_rate is not None:
-                        # OUTPUT rate limiting runs INSIDE the live pipeline
-                        # (ratelimit/*.rs at select_processor.rs:30-38) — a
-                        # stateful counter / event-time bucket operator, not
-                        # a post-hoc batch filter
-                        from ..streaming.ratelimit import output_rate_stream
-
-                        out = out.selectExpr(*items, "__seq", "__ts")
-                        if stream_partners:
-                            # the INNER join dropped the sentinels pre-join
-                            # (neutral keys could match real rows), so the
-                            # limiter gets its flush event from a dedicated
-                            # one-row far-future feed unioned AFTER the join
-                            # — the join+limiter composition the reference
-                            # runs (select_processor.rs:30-38 applies the
-                            # limiter downstream of any input)
-                            out = out.unionByName(
-                                self._mk_flush_feed(
-                                    out.schema, join_feed_dirs, n_chunks
-                                )
-                            )
-                        out = output_rate_stream(out, *q.output_rate).drop(
-                            "__ts"
-                        )
-                    else:
-                        out = out.selectExpr(*items, "__seq")
-                elif q.output_rate is not None:
-                    # outer join: sentinels flow THROUGH the join (their
-                    # far-future pads both advance the limiter's buckets and
-                    # flush pending state; __seq >= 10^9 keeps them uncounted)
-                    from ..streaming.ratelimit import output_rate_stream
-
-                    out = output_rate_stream(out, *q.output_rate)
-                if outer_projected:
-                    out = out.drop("__ts")
-                mode = "append"
-            else:
-                # non-windowed GROUP BY: running aggregation. The reference
-                # emits one row per touched group per chunk (update mode);
-                # the drained FINAL state is what batch run() returns, so the
-                # memory sink runs in complete mode (state fully rewritten
-                # per trigger — same final rows, select_processor.rs:483-529)
-                from ..streaming import pipelines as P
-
-                keys = [g.strip() for g in (q.group_by or "").split(",") if g.strip()]
-                aggs = [
-                    F.expr(e).alias(a) if a else F.expr(e)
-                    for e, a in q.select_items
-                    if _is_agg_expr(e)
-                ]
-                src_f = stream.filter(F.expr(q.where)) if q.where else stream
-                out = P.group_agg_update_stream(src_f, keys, aggs)
-                sel = [
-                    F.col(a or e) for e, a in q.select_items
-                ]
-                out = out.select(*sel)
-                mode = "complete"
-
-            qh = (
-                out.writeStream.format("memory").queryName(name)
-                .outputMode(mode).start()
-            )
             qh.processAllAvailable()
-            qh.stop()
-            res = self.spark.sql(f"SELECT * FROM {name}")
-            # drop sentinel artifacts (null-keyed rows / sentinel seq)
-            if "__tick" in res.columns:
-                # SNAPSHOT emission order: (tick[, window bucket], keys) —
-                # matches the batch operator's row_number ordering
-                rest = [c for c in res.columns if c != "__tick"]
-                res = res.orderBy("__tick", *rest).drop("__tick", "__wb")
-            elif "__seq" in res.columns:
-                res = res.filter(F.col("__seq") < 10**9).orderBy("__seq").drop("__seq")
-            else:
-                first_out = res.columns[0]
-                res = res.filter(F.col(first_out).isNotNull()).orderBy(*res.columns)
-            return [tuple(r) for r in res.collect()]
         finally:
-            shutil.rmtree(feed_dir, ignore_errors=True)
-            for d in join_feed_dirs:
-                shutil.rmtree(d, ignore_errors=True)
+            qh.stop()
+        res = self.spark.sql(f"SELECT * FROM {name}")
+        if "__tick" in res.columns:
+            # SNAPSHOT emission order: (tick[, window bucket], keys) —
+            # matches the batch operator's row_number ordering
+            res = res.orderBy("__tick", *[c for c in res.columns if c != "__tick"])
+        elif "__seq" in res.columns:
+            res = drop_sentinel(res).orderBy("__seq")
+        else:
+            res = res.orderBy(*res.columns)
+        cols = [c for c in res.columns if not c.startswith("__")]
+        rows = [tuple(r) for r in res.select(*cols).collect()]
+        return rows[-1:] if last_only else rows
+
+    def _snapshot_stream(self, q: QueryDef, src: DataFrame, sel: "_Select") -> DataFrame:
+        """OUTPUT SNAPSHOT EVERY d over a live aggregating query
+        (snapshot_output_rate.rs): per-tick full-state emission as a
+        stateful op; identical event-time restatement to the batch
+        operator, so batch/streaming rows match."""
+        if q.pattern is not None or not sel.is_agg or (
+            q.window is not None and q.window.kind != "tumbling"
+        ):
+            raise ValueError(
+                "streaming OUTPUT SNAPSHOT supports non-windowed or "
+                "tumbling-windowed aggregating queries"
+            )
+        from ..operators.output import _parse_simple_agg
+        from ..streaming.ratelimit import snapshot_agg_stream
+
+        # tumbling window → the bucket start joins the state key (same
+        # partials-over-buckets decomposition as the batch operator)
+        buckets = [] if q.window is None else [_tumbling_bucket(q).alias("__wb")]
+        parsed = [_parse_simple_agg(e) for e, _ in sel.agg_items]
+        if any(p is None for p in parsed):
+            raise ValueError(
+                "streaming SNAPSHOT needs decomposable aggregates "
+                "(count/sum/avg/min/max)"
+            )
+        aliases = [a or e for e, a in sel.agg_items]
+        proj = src.select(
+            *buckets,
+            *sel.keys,
+            *[
+                (
+                    F.lit(1.0) if fn == "count" and arg == "*"
+                    else F.expr(arg).cast("double")
+                ).alias(f"_a{i}")
+                for i, (fn, arg) in enumerate(parsed)
+            ],
+            "__seq", "__ts",
+        )
+        wb = ["__wb"] if buckets else []
+        interval_ms = q.output_rate[1]
+        end = _EPOCH + datetime.timedelta(seconds=max(self._seq, 1))
+        start_ms = int(_EPOCH.replace(tzinfo=datetime.timezone.utc).timestamp() * 1000)
+        n_ticks = int((end - _EPOCH).total_seconds() * 1000 // interval_ms)
+        ktypes = dict(self.streams[q.source].columns)
+        out_schema = ", ".join(
+            ["__tick bigint"]
+            + [f"{c} bigint" for c in wb]
+            + [f"{k} {ktypes[k]}" for k in sel.keys]
+            + [
+                f"`{a}` " + ("bigint" if p[0] == "count" else "double")
+                for p, a in zip(parsed, aliases)
+            ]
+        )
+        snap = snapshot_agg_stream(
+            proj, wb + sel.keys, parsed, aliases, out_schema,
+            interval_ms, start_ms, n_ticks,
+        )
+        # final projection in select-item order, cast to the target
+        # stream's declared types (batch sum(int) is BIGINT etc.)
+        return snap.select(
+            "__tick", *wb,
+            *[
+                F.col((a or e) if _is_agg_expr(e) else e).cast(t).alias(c)
+                for (e, a), (c, t) in zip(q.select_items, self.streams[q.target].columns)
+            ],
+        )
+
+    def _window_agg_stream(
+        self, q: QueryDef, src: DataFrame, sel: "_Select", watermark: str
+    ) -> tuple[DataFrame, str, bool]:
+        """A live windowed aggregate: (plan, output mode, keep only the
+        last emission)."""
+        from ..streaming import pipelines as P
+
+        w, keys, aggs = q.window, sel.keys, sel.aggs
+        ms = [f"{x} milliseconds" for x in w.params]
+        if w.kind == "tumbling":
+            out = P.tumbling_stream(
+                src, ms[0], keys, aggs, ts_col="__ts", watermark=watermark
+            )
+        elif w.kind == "sliding":
+            out = P.sliding_stream(
+                src, ms[0], ms[1], keys, aggs, ts_col="__ts", watermark=watermark
+            )
+        elif w.kind == "session":
+            out = P.session_stream(
+                src, ms[0], keys, aggs, ts_col="__ts", watermark=watermark
+            )
+        elif w.kind == "cron":
+            # live cron(expr) window: the deterministic event-time
+            # restatement of the reference's wall-clock cron ticks
+            # (window/mod.rs:1742) — each event buckets to the NEXT tick of
+            # the schedule, computed Catalyst-side against the literal tick
+            # spine (events past the last tick stay buffered/unemitted, as in
+            # batch; the sentinel's bucket is null)
+            ticks = _cron_ticks(str(w.params[0]), self._seq)
+            arr = F.array(
+                *[
+                    F.lit(int(t.replace(tzinfo=datetime.timezone.utc).timestamp() * 1e6))
+                    .cast("bigint")
+                    for t in ticks
+                ]
+            )
+            ev_us = F.unix_micros(F.col("__ts").cast("timestamp"))
+            out = (
+                src.withColumn("__cron_bucket", F.array_min(F.filter(arr, lambda t: t >= ev_us)))
+                .filter(F.col("__cron_bucket").isNotNull())
+                .groupBy("__cron_bucket", *keys)
+                .agg(*aggs)
+            )
+        elif w.kind in ("length", "lengthBatch"):
+            am = re.match(
+                r"\s*(SUM|AVG|MIN|MAX|COUNT)\s*\(\s*(\w+)\s*\)\s*$",
+                sel.agg_items[0][0],
+                re.IGNORECASE,
+            ) if len(sel.agg_items) == 1 and not keys else None
+            if am is None:
+                raise ValueError(
+                    f"streaming WINDOW('{w.kind}') supports a single "
+                    "un-keyed SUM/AVG/MIN/MAX/COUNT aggregate"
+                )
+            out_name = sel.agg_items[0][1] or "agg"
+            args = (int(w.params[0]), am.group(1).lower(), am.group(2), out_name)
+            if w.kind == "length":
+                # per-arrival sliding count window as a stateful op; the
+                # drain keeps only the final emission to honor run()'s
+                # final-state contract (last N events' aggregate)
+                out = P.length_window_stream(drop_sentinel(src), *args)
+            else:
+                # tumbling count window: emit + reset every N events; the
+                # sentinel flushes the partial tail batch (no timer needed)
+                out = P.length_batch_stream(src, *args)
+                out = out.withColumnRenamed("batch_id", "__seq")
+            # cast the double emission to the declared target type
+            decl = dict(self.streams[q.target].columns)
+            if out_name in decl:
+                out = out.withColumn(out_name, F.col(out_name).cast(decl[out_name]))
+            return out, "append", w.kind == "length"
+        else:
+            raise ValueError(f"streaming WINDOW('{w.kind}') unsupported")
+        # strip window bounds; cron buckets re-aggregate as events arrive
+        # (no watermark closes them) → complete-mode final state, like the
+        # non-windowed running aggregation
+        out = out.select(*keys, *[
+            c for c in out.columns
+            if c not in keys and not c.startswith(("window_", "session_", "__"))
+        ])
+        return out, "complete" if w.kind == "cron" else "append", False
+
+    def _row_stream(
+        self, q: QueryDef, stream: DataFrame, sel: "_Select", feeds: Feeds, watermark: str
+    ) -> DataFrame:
+        """Row-level terminal: filter/projection, stream-table and
+        stream-stream joins, and an in-pipeline OUTPUT rate limiter."""
+        from ..streaming.ratelimit import output_rate_stream
+
+        partners = [j for j in q.joins if not self.streams[j[1]].is_table]
+        if partners and all(j[0] == "inner" for j in partners):
+            # the main sentinel must not join real partner rows (its
+            # neutral key values could collide); no event-time operator
+            # follows, so dropping it pre-join is safe. Outer joins keep it:
+            # the global watermark is the MIN across inputs, so the main
+            # feed must advance too or pads never flush
+            stream = drop_sentinel(stream)
+        out = stream.alias(q.source)
+        outer_projected = False
+        for how, sname, cond, _trig in q.joins:
+            if self.streams[sname].is_table:
+                # stream-table enrichment joins: the bound table state
+                # broadcasts into every micro-batch (≙ TableJoinProcessor's
+                # per-event compiled probe, table_join_processor.rs:17-137)
+                static = self.stream_df(sname).drop("__seq", "__ts")
+                out = out.join(F.broadcast(static.alias(sname)), F.expr(cond), how)
+                continue
+            # STREAM partner: its own feed, a real micro-batch stream-stream
+            # join (join_processor.rs's two live buffers ≙ Spark's symmetric
+            # join state). INNER emits eagerly per match — no watermark
+            # needed to flush. LEFT/RIGHT/FULL need an event-time bound (ON
+            # ... WITHIN d) so Spark can expire join state and emit the
+            # unmatched pads the reference's live outer joins produce
+            # (join_processor.rs:104-112).
+            within_ms = q.join_within.get(sname)
+            if how != "inner":
+                if within_ms is None:
+                    raise ValueError(
+                        "streaming outer stream-stream joins need an "
+                        "event-time bound: JOIN ... ON cond WITHIN d"
+                    )
+                if len(q.joins) != 1:
+                    raise ValueError(
+                        "streaming outer stream-stream joins support a single join"
+                    )
+                out = self._join_outer_stream(
+                    out, q, sel, how, sname, cond, within_ms, feeds, watermark
+                )
+                outer_projected = True
+                continue
+            partner = drop_sentinel(self._feed(feeds, sname)).drop("__seq")
+            if within_ms is None:
+                out = out.join(partner.drop("__ts").alias(sname), F.expr(cond), how)
+                continue
+            # keep the partner event time for the bound, under a name the
+            # SELECT items can't collide with
+            bound = F.abs(
+                F.unix_micros("__ts") - F.unix_micros("__pts")
+            ) <= F.lit(within_ms * 1000)
+            partner = partner.withColumnRenamed("__ts", "__pts").alias(sname)
+            out = out.join(partner, F.expr(cond) & bound, how).drop("__pts")
+        if outer_projected:
+            # an outer stream join already applied WHERE + the item
+            # projection; its sentinels flow THROUGH the join (their
+            # far-future pads advance a limiter's buckets and flush pending
+            # state; the limiter never counts them)
+            if q.output_rate is not None:
+                out = output_rate_stream(out, *q.output_rate)
+            return out.drop("__ts")
+        if q.where:
+            out = out.filter(F.expr(q.where))
+        if q.output_rate is None:
+            return out.selectExpr(*sel.items, "__seq")
+        # OUTPUT rate limiting runs INSIDE the live pipeline (ratelimit/*.rs
+        # at select_processor.rs:30-38) — a stateful counter / event-time
+        # bucket operator, not a post-hoc batch filter
+        out = out.selectExpr(*sel.items, "__seq", "__ts")
+        if partners:
+            # the INNER join dropped the sentinels pre-join, so the limiter
+            # gets its flush event from a row-less feed unioned AFTER the
+            # join, behind one empty file per data chunk
+            out = out.unionByName(feeds.open(out.schema, lead_empty=feeds.n_chunks))
+        return output_rate_stream(out, *q.output_rate).drop("__ts")
 
     def _join_outer_stream(
         self,
         out: DataFrame,
-        q,
+        q: QueryDef,
+        sel: "_Select",
         how: str,
         sname: str,
         cond: str,
         within_ms: int,
-        n_chunks: int,
-        join_feed_dirs: list,
+        feeds: Feeds,
         watermark: str,
     ) -> DataFrame:
         """Streaming LEFT/RIGHT/FULL stream-stream join with an event-time
@@ -1498,25 +1196,15 @@ class EventFluxApp:
         aliases are still resolvable, so WHERE and the item projection
         happen here, not in the caller."""
         if within_ms >= 6 * 86_400_000:
-            # sentinel timestamps sit 7 days apart so the bound itself keeps
-            # them from ever matching (see below)
+            # feeds' sentinels sit a week apart, so the bound itself keeps
+            # them from ever matching each other
             raise ValueError(
                 "streaming outer-join WITHIN bounds must be under 6 days"
             )
-        # partner feed carries its own far-future sentinel: pads flush only
-        # when BOTH sides' watermarks advance past the bound. The sentinel
-        # must carry NON-NULL join-key strings: Spark pushes isnotnull(key)
-        # below the partner's watermark node for outer joins, and a
-        # null-keyed sentinel would be filtered at the scan — its watermark
-        # contribution silently lost (observed: pads never flush). Matching
-        # is instead prevented by the time bound: the two sentinels sit 7
-        # days apart (offset derived from sentinel_seq), real rows ~10
-        # years away.
-        pstream, pdir = self._mk_stream_feed(
-            sname, n_chunks, sentinel_seq=10**9 + 7,
-            sentinel_strings="\x00sentinel",
-        )
-        join_feed_dirs.append(pdir)
+        # the partner feed carries its own sentinel (pads flush only when
+        # BOTH sides' watermarks pass the bound) with NON-NULL join-key
+        # strings (feeds.OUTER_JOIN_KEY)
+        pstream = self._feed(feeds, sname, OUTER_JOIN_KEY)
         main = out.withWatermark("__ts", watermark)
         partner = (
             pstream.withColumnRenamed("__seq", "__pseq")
@@ -1532,299 +1220,20 @@ class EventFluxApp:
             f"__pts <= __ts + INTERVAL {within_ms} MILLISECONDS"
         )
         # NO sentinel-exclusion conjuncts here and NO in-plan pad filter:
-        # any deterministic single-side predicate (like __seq < 10^9) gets
-        # pushed below that side's watermark node, hiding the sentinel from
-        # watermark tracking. Sentinel pads are dropped at the drain instead
-        # (__seq >= 10^9 after the coalesce below).
+        # any deterministic single-side predicate gets pushed below that
+        # side's watermark node, hiding the sentinel from watermark
+        # tracking. Sentinel pads are dropped at the drain instead (after
+        # the __seq coalesce below).
         j = main.join(partner, F.expr(cond) & bound, how)
         if q.where:
-            # the OR-guard keeps sentinel pads alive for a downstream rate
+            # the guard keeps sentinel pads alive for a downstream rate
             # limiter's flush; it references BOTH sides' seq columns, so it
-            # cannot be pushed below either watermark node (single-side
-            # deterministic predicates would be). Sentinel rows still never
-            # reach results — the drain filters __seq >= 10^9.
-            j = j.filter(
-                F.expr(q.where)
-                | (F.col("__seq") >= 10**9)
-                | (F.col("__pseq") >= 10**9)
-            )
-        items = [f"{e} AS {a}" if a else e for e, a in q.select_items]
+            # cannot be pushed below either watermark node
+            j = j.filter(keep_sentinel(q.where, "__seq", "__pseq"))
         return j.selectExpr(
-            *items,
+            *sel.items,
             "coalesce(__seq, __pseq) AS __seq",
             "coalesce(__ts, __pts) AS __ts",
-        )
-
-    def _mk_flush_feed(
-        self, schema, feed_dirs: list, n_chunks: int = 3
-    ) -> DataFrame:
-        """One-row far-future flush stream with the given schema (data
-        columns neutral-valued, ``__seq`` = 10**9): the rate limiter's
-        sentinel-as-data flush event for pipelines whose real feeds dropped
-        their sentinels (the post-INNER-join composition — neutral sentinel
-        keys could match real partner rows, so the join sides filter them
-        and the flush re-enters downstream).
-
-        The flush row must arrive strictly AFTER every real chunk (each
-        file source advances one file per trigger, concurrently), so the
-        feed leads with ``n_chunks`` empty prefix files — the flush file is
-        only consumed once every real feed is exhausted."""
-        import os
-        import tempfile
-
-        from pyspark.sql import types as T
-
-        # type-correct NEUTRAL values (not NULLs): the limiter's packed
-        # state round-trips through pandas astype, and a NaN in an integer
-        # column would break the int cast
-        def neutral(dt):
-            if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-                return 0
-            if isinstance(dt, (T.FloatType, T.DoubleType)):
-                return 0.0
-            if isinstance(dt, T.BooleanType):
-                return False
-            if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-                return _EPOCH
-            if isinstance(dt, T.StringType):
-                # a concrete value keeps the pandas->parquet dtype stable
-                # (an all-None object column writes as a null/INT32 column
-                # the file stream's string schema then rejects)
-                return "\x00flush"
-            return None
-
-        vals = []
-        for f in schema.fields:
-            if f.name == "__seq":
-                vals.append(10**9)
-            elif f.name == "__ts":
-                vals.append(_EPOCH + datetime.timedelta(days=3650))
-            else:
-                vals.append(neutral(f.dataType))
-        d = tempfile.mkdtemp(prefix="efs_sqlflush_")
-        feed_dirs.append(d)
-        pdf = self.spark.createDataFrame([tuple(vals)], schema).toPandas()
-        for i in range(n_chunks):
-            pdf.iloc[0:0].to_parquet(
-                os.path.join(d, f"c{i:03d}.parquet"), index=False,
-                coerce_timestamps="us", allow_truncated_timestamps=True,
-            )
-        pdf.to_parquet(
-            os.path.join(d, f"c{n_chunks:03d}.parquet"), index=False,
-            coerce_timestamps="us", allow_truncated_timestamps=True,
-        )
-        return (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-
-    def _mk_stream_feed(
-        self,
-        sname: str,
-        n_chunks: int,
-        sentinel_seq=None,
-        sentinel_strings: str | None = None,
-    ):
-        """Materialize a stream's sent rows as a chunked parquet feed and
-        open it as a file stream — a secondary input of a stream-stream
-        join or multi-stream pattern (each input is its own micro-batch
-        source, the AppRunner multi-stream send() analog).
-
-        ``sentinel_seq``: when set, a far-future sentinel row is appended
-        (with that __seq) — required whenever the feed joins an event-time
-        operator, because a union's/join's watermark is the MIN across
-        inputs and a sentinel-less input would hold it back forever. The
-        sentinel's timestamp is offset by ``sentinel_seq - 10**9`` days
-        beyond the base far-future point, so every feed's sentinel is
-        temporally distinct (outer-join time bounds then exclude
-        sentinel-sentinel matches structurally).
-
-        ``sentinel_strings``: value for the sentinel's string columns
-        (default NULL). Outer joins need NON-NULL values here — Spark
-        pushes ``isnotnull(join_key)`` below the watermark node, and a
-        null-keyed sentinel would be dropped at the scan, silently losing
-        its watermark contribution."""
-        import os
-        import tempfile
-
-        base = self._base_df(sname).toPandas()
-        if len(base) == 0 and sentinel_seq is None:
-            # an empty JOIN partner must behave like the batch path (INNER
-            # join over no partner rows = empty result, join_processor.rs
-            # buffers nothing) — feed a sentinel-only stream; the caller
-            # filters __seq >= 10**9 before joining, so the partner side is
-            # empty and the join correctly yields zero rows
-            sentinel_seq = 2 * 10**9
-        if sentinel_seq is not None:
-            defaults = {"string": sentinel_strings, "int": 0, "bigint": 0,
-                        "float": 0.0, "double": 0.0, "boolean": False,
-                        "timestamp": _EPOCH}
-            vals = {c: defaults.get(t) for c, t in self.streams[sname].columns}
-            # per-feed distinct far-future ts (offset capped for the
-            # 2*10**9 empty-partner sentinel)
-            off = min(max(sentinel_seq - 10**9, 0), 30)
-            sent = pd.DataFrame(
-                [{**vals, "__seq": sentinel_seq,
-                  "__ts": _EPOCH + datetime.timedelta(days=3650 + off)}]
-            )
-            base = pd.concat([base, sent], ignore_index=True).astype(
-                base.dtypes.to_dict()
-            )
-        d = tempfile.mkdtemp(prefix=f"efs_sqljoin_{sname.lower()}_")
-        chunks = max(1, min(n_chunks, len(base)))
-        bounds = [round(i * len(base) / chunks) for i in range(chunks + 1)]
-        for i in range(chunks):
-            base.iloc[bounds[i]: bounds[i + 1]].to_parquet(
-                os.path.join(d, f"c{i:03d}.parquet"), index=False,
-                coerce_timestamps="us", allow_truncated_timestamps=True,
-            )
-        schema = self._base_df(sname).schema
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-        return stream, d
-
-    def _compile_absent_stream(self, q: QueryDef, ustream, watermark: str):
-        """Live ``PATTERN (e1=S[c] -> NOT S2[c2] FOR d)`` (VERDICT r4 #6):
-        the state timeout in :func:`cep.streaming.match_absent_stream` plays
-        the reference's designed-but-never-built TimerWheel
-        (``PATTERN_PROCESSING.md:34-38``) — triggers emit once the watermark
-        proves the absent window empty. Flags/selects mirror the batch
-        ``_run_absent_pattern`` so streaming rows equal the replay."""
-        from ..cep.streaming import match_absent_stream
-
-        p = q.pattern
-        if len(p.steps) != 1:
-            raise ValueError(
-                "absent patterns support one trigger step: "
-                "PATTERN (e1=S[cond] -> NOT S2[cond] FOR d)"
-            )
-        trig = p.steps[0]
-        ab_stream, ab_cond, for_ms = p.absent
-        if q.partition_keys:
-            key_cols = set(q.partition_keys.values())
-            if len(key_cols) != 1:
-                raise ValueError(
-                    "pattern PARTITION keys must share one column name"
-                )
-            key_expr = F.col(next(iter(key_cols))).cast("string")
-        else:
-            key_expr = F.lit("__global__")
-        trig_flag = (F.col("__src") == trig.stream) & (F.col("__seq") < 10**9)
-        if trig.condition:
-            trig_flag = trig_flag & F.expr(trig.condition)
-        ab_flag = (F.col("__src") == ab_stream) & (F.col("__seq") < 10**9)
-        if ab_cond:
-            ab_flag = ab_flag & F.expr(ab_cond)
-        df = (
-            ustream.withColumn("conv_id", key_expr)
-            .withColumn("turn_idx", F.col("__seq").cast("int"))
-            .withColumn("ts", F.col("__ts"))
-            .withColumn("__is_trig", trig_flag)
-            .withColumn("__is_abs", ab_flag)
-        )
-        select_plan, referenced, agg_emits, index_emits = _pattern_select_plan(
-            q.select_items, p.steps
-        )
-        if any(agg_emits.values()) or any(index_emits.values()):
-            raise ValueError(
-                "absent patterns support plain e1.col select items"
-            )
-        emit = tuple(sorted({"turn_idx", *referenced[trig.alias]}))
-        out = match_absent_stream(
-            df, "__is_trig", "__is_abs",
-            pd.Timedelta(milliseconds=for_ms),
-            emit_cols=emit, watermark_delay=watermark,
-        )
-        for c in emit:
-            out = out.withColumnRenamed(c, f"{trig.alias}_{c}")
-        out = out.withColumnRenamed("ts", f"{trig.alias}_ts")
-        return out.select(
-            *[F.col(src).alias(o) for src, o in select_plan],
-            F.col(f"{trig.alias}_turn_idx").cast("bigint").alias("__seq"),
-        )
-
-    def _compile_pattern_stream(self, q: QueryDef, stream, watermark: str):
-        from ..cep.streaming import match_pattern_stream
-
-        p = q.pattern
-        # PARTITION WITH (key OF Stream) → per-key NFA instances: the key
-        # column becomes the applyInPandasWithState grouping key, so every
-        # partition gets its own pattern state (the batch path's key_expr
-        # construction; watermark stays GLOBAL — sentinels still flush every
-        # key's pending state)
-        if q.partition_keys:
-            key_cols = set(q.partition_keys.values())
-            if len(key_cols) != 1:
-                raise ValueError(
-                    "pattern PARTITION keys must share one column name, got "
-                    f"{sorted(key_cols)}"
-                )
-            key_expr = F.col(next(iter(key_cols))).cast("string")
-        else:
-            key_expr = F.lit("__global__")
-        df = stream.withColumn("conv_id", key_expr).withColumn(
-            "turn_idx", F.col("__seq").cast("int")
-        ).withColumn("ts", F.col("__ts"))
-        select_plan, referenced, agg_emits, index_emits = _pattern_select_plan(
-            q.select_items, p.steps
-        )
-        steps = []
-        data_cols = {c for c in df.columns if not c.startswith("__")} - {
-            "conv_id", "turn_idx", "ts"
-        }
-        for sdef in p.steps:
-            flag = f"__is_{sdef.alias}"
-            cond = F.lit(True)
-            cross = None
-            if sdef.condition:
-                if _EREF_RE.search(sdef.condition):
-                    # cross-step refs (e2[x > e1.x]) compile to a closure
-                    # evaluated inside the (shared batch/streaming) NFA
-                    # replay core — same contract as the batch path
-                    cross = _compile_cross_pred(sdef.condition)
-                    for em in _EREF_RE.finditer(sdef.condition):
-                        if em.group(1) != sdef.alias:
-                            referenced[em.group(1)].add(em.group(2))
-                    for bare in re.finditer(
-                        r"\b(?<!\.)(\w+)\b", _EREF_RE.sub(" ", sdef.condition)
-                    ):
-                        if bare.group(1) in data_cols:
-                            referenced[sdef.alias].add(bare.group(1))
-                else:
-                    cond = F.expr(sdef.condition)
-            if "__src" in df.columns:
-                cond = cond & (F.col("__src") == sdef.stream)
-            df = df.withColumn(flag, cond & F.col("__seq").isNotNull() & (F.col("__seq") < 10**9))
-            steps.append((sdef, flag, cross))
-        # Steps are constructed AFTER the condition scan: a later step's
-        # cross-ref (e2[x > e1.x]) extends e1's emit set, so building e1's
-        # Step eagerly would drop the referenced column
-        steps = [
-            Step(
-                sdef.alias, flag, sdef.min_count, sdef.max_count,
-                cross_pred=cross,
-                emit=tuple(sorted(referenced[sdef.alias])),
-                agg_emit=tuple(sorted(agg_emits[sdef.alias])),
-                index_emit=tuple(
-                    sorted(index_emits[sdef.alias], key=lambda t: (str(t[0]), t[1]))
-                ),
-            )
-            for sdef, flag, cross in steps
-        ]
-        spec = PatternSpec(
-            steps=tuple(steps),
-            within=pd.Timedelta(milliseconds=p.within_ms) if p.within_ms else None,
-            every=p.every,
-        )
-        m = match_pattern_stream(df, spec, watermark_delay=watermark)
-        last = spec.steps[-1].name
-        return m.select(
-            *[F.col(src).alias(o) for src, o in select_plan],
-            F.col(f"{last}_turn_idx").cast("bigint").alias("__seq"),
         )
 
     # -- query compilation ----------------------------------------------------
@@ -1852,22 +1261,14 @@ class EventFluxApp:
         df = self.stream_df(q.source, stack | {q.target})
         if q.where:
             df = df.filter(F.expr(q.where))
-        keys = [g.strip() for g in (q.group_by or "").split(",") if g.strip()]
+        keys = _Select(q).keys
         if q.window is not None:
             # SNAPSHOT over a tumbling window = the window bucket joins the
             # aggregation key (partials-over-buckets decomposition, VERDICT
             # r4 #5): at tick t the full per-(bucket, keys) state over
             # events with ts <= t emits — closed buckets show final values,
             # the open bucket its partial state
-            wms = int(q.window.params[0])
-            df = df.withColumn(
-                "__wb",
-                F.floor(
-                    F.col("__ts").cast("timestamp_ltz").cast("double")
-                    * 1000.0
-                    / F.lit(float(wms))
-                ).cast("bigint"),
-            )
+            df = df.withColumn("__wb", _tumbling_bucket(q))
             keys = ["__wb"] + keys
         aggs = [(e, a or e) for e, a in q.select_items if _AGG_RE.search(e)]
         interval_ms = q.output_rate[1]
@@ -1883,93 +1284,6 @@ class EventFluxApp:
             F.col("tick").cast("timestamp").alias("__ts"),
         )
 
-    def _run_absent_pattern(self, q: QueryDef, stack: frozenset) -> DataFrame:
-        """``PATTERN (e1=S[cond] -> NOT S2[cond2] FOR d)``: emit each
-        trigger event with NO matching absent-stream event in
-        ``(trigger.ts, trigger.ts + d]``. The reference only DESIGNED this
-        (``PATTERN_PROCESSING.md:34-38`` — "NOT A FOR duration, requires
-        TimerWheel"); the execution is ``cep.batch.match_absent_batch``'s
-        single-exchange vectorized probe."""
-        p: PatternDef = q.pattern
-        if len(p.steps) != 1:
-            raise ValueError(
-                "absent patterns support one trigger step: "
-                "PATTERN (e1=S[cond] -> NOT S2[cond] FOR d)"
-            )
-        from ..cep.batch import match_absent_batch
-
-        trig = p.steps[0]
-        ab_stream, ab_cond, for_ms = p.absent
-        streams = [trig.stream, ab_stream]
-        all_cols: dict[str, str] = {}
-        for s in dict.fromkeys(streams):
-            for c, t in self.streams[s].columns:
-                if c in all_cols and all_cols[c] != t:
-                    raise ValueError(
-                        f"column {c} type conflict across pattern streams"
-                    )
-                all_cols[c] = t
-        union = None
-        for s in dict.fromkeys(streams):
-            df = self.stream_df(s, stack)
-            have = {x for x, _ in self.streams[s].columns}
-            proj = [F.lit(s).alias("__src")]
-            proj += [
-                (F.col(c) if c in have else F.lit(None).cast(t)).alias(c)
-                for c, t in all_cols.items()
-            ]
-            proj += [F.col("__seq"), F.col("__ts")]
-            part = df.select(*proj)
-            union = part if union is None else union.unionByName(part)
-
-        if q.partition_keys:
-            key_cols = set(q.partition_keys.values())
-            if len(key_cols) != 1:
-                raise ValueError(
-                    "pattern PARTITION keys must share one column name"
-                )
-            key_expr = F.col(next(iter(key_cols))).cast("string")
-        else:
-            key_expr = F.lit("__global__")
-        trig_flag = F.col("__src") == trig.stream
-        if trig.condition:
-            trig_flag = trig_flag & F.expr(trig.condition)
-        ab_flag = F.col("__src") == ab_stream
-        if ab_cond:
-            ab_flag = ab_flag & F.expr(ab_cond)
-        union = (
-            union.withColumn("conv_id", key_expr)
-            .withColumn("turn_idx", F.col("__seq").cast("int"))
-            .withColumn("ts", F.col("__ts"))
-            .withColumn("__is_trig", trig_flag)
-            .withColumn("__is_abs", ab_flag)
-        )
-
-        select_plan, referenced, agg_emits, index_emits = _pattern_select_plan(
-            q.select_items, p.steps
-        )
-        if any(agg_emits.values()) or any(index_emits.values()):
-            raise ValueError(
-                "absent patterns support plain e1.col select items"
-            )
-        emit = tuple(sorted({"turn_idx", *referenced[trig.alias]}))
-        out = match_absent_batch(
-            union, "__is_trig", "__is_abs",
-            pd.Timedelta(milliseconds=for_ms),
-            order_cols=("ts", "turn_idx"), emit_cols=emit,
-        )
-        # the matcher emits trigger columns under their plain names; the
-        # select plan expects alias-qualified ones
-        for c in emit:
-            out = out.withColumnRenamed(c, f"{trig.alias}_{c}")
-        out = out.withColumnRenamed("ts", f"{trig.alias}_ts")
-        out_cols = [F.col(src).alias(o) for src, o in select_plan]
-        return out.select(
-            *out_cols,
-            F.col(f"{trig.alias}_turn_idx").cast("bigint").alias("__seq"),
-            F.col(f"{trig.alias}_ts").alias("__ts"),
-        )
-
     def _register(self, name: str, stack: frozenset) -> None:
         self.stream_df(name, stack).createOrReplaceTempView(name)
 
@@ -1978,15 +1292,13 @@ class EventFluxApp:
         for _, s, _, _ in q.joins:
             self._register(s, stack)
 
-        is_agg = bool(q.group_by) or any(
-            _is_agg_expr(e) for e, _ in q.select_items
-        )
-        items = [f"{e} AS {a}" if a else e for e, a in q.select_items]
+        select = _Select(q)
+        is_agg = select.is_agg
         pkey = q.partition_keys.get(q.source)  # PARTITION WITH key, if any
 
         src = q.source
         where = f" WHERE {q.where}" if q.where else ""
-        group = ""
+        win = None
         # named/shared window: FROM <window-stream> inherits its definition
         # (window_runtime.rs shared-buffer semantics — every reader sees the
         # same windowed contents)
@@ -2011,12 +1323,18 @@ class EventFluxApp:
                 # timestamp column instead of arrival time
                 attr, d = w.params[0], w.params[1]
                 win = f"window(cast({attr} AS timestamp), '{d} milliseconds')"
-            elif w.kind == "externalTime":
-                # externalTime(ts_attr, d): sliding expiry driven by the
-                # data timestamp — final retained set = events within d of
-                # the max surviving data time (same restatement as
-                # WINDOW('time') but on the declared attribute)
-                attr, d_ms = w.params[0], w.params[1]
+            elif w.kind in ("time", "externalTime"):
+                # time(d) sliding window (reference window/mod.rs time
+                # window: events expire d after arrival). On the app's
+                # deterministic logical clock the FINAL retained set — what
+                # run()'s final-state drain sees, same contract as
+                # WINDOW('length') — is every event within d of the LAST
+                # arrival; a scalar-subquery max anchors the bound.
+                # externalTime(ts_attr, d) is the same restatement on a
+                # DATA timestamp column instead of arrival time
+                attr, d_ms = (
+                    ("__ts", w.params[0]) if w.kind == "time" else w.params[:2]
+                )
                 src = (
                     f"(SELECT * FROM {q.source}{where}"
                     + (" AND " if where else " WHERE ")
@@ -2025,21 +1343,12 @@ class EventFluxApp:
                     f" FROM {q.source}{where}) - {d_ms * 1000})"
                 )
                 where = ""
-                win = None
             elif w.kind == "cron":
                 # cron window (window/mod.rs:1742): the buffered batch emits
                 # at every cron tick — batch restatement: each event belongs
                 # to the NEXT tick of the schedule (sql/cron.py); events
                 # after the final tick stay buffered (unemitted)
-                from .cron import Cron
-
-                cron = Cron(str(w.params[0]))
-                horizon = _EPOCH + datetime.timedelta(seconds=self._seq + 61)
-                ticks = [(t,) for t in cron.ticks(_EPOCH, horizon)]
-                if not ticks:
-                    raise ValueError(
-                        f"cron {w.params[0]!r} fires nowhere in the app horizon"
-                    )
+                ticks = [(t,) for t in _cron_ticks(str(w.params[0]), self._seq)]
                 self.spark.createDataFrame(
                     ticks, "tick timestamp"
                 ).createOrReplaceTempView("__cron_ticks")
@@ -2074,13 +1383,8 @@ class EventFluxApp:
                 # (sort_window_processor.rs:25); final retained set == batch
                 # top-K via row_number, __seq tiebreak keeps it deterministic
                 n = w.params[0]
-                attr_spec = str(w.params[1]).split()
-                attr = attr_spec[0]
-                direction = (
-                    "DESC"
-                    if len(attr_spec) > 1 and attr_spec[1].lower() == "desc"
-                    else "ASC"
-                )
+                attr, desc = _sort_key(w.params[1])
+                direction = "DESC" if desc else "ASC"
                 part = f"PARTITION BY {pkey} " if pkey else ""
                 src = (
                     f"(SELECT * FROM (SELECT *, row_number() OVER ({part}"
@@ -2088,24 +1392,6 @@ class EventFluxApp:
                     f" FROM {q.source}{where}) WHERE __rk <= {n})"
                 )
                 where = ""
-                win = None
-            elif w.kind == "time":
-                # time(d) sliding window (reference window/mod.rs time
-                # window: events expire d after arrival). On the app's
-                # deterministic logical clock the FINAL retained set — what
-                # run()'s final-state drain sees, same contract as
-                # WINDOW('length') — is every event within d of the LAST
-                # arrival; a scalar-subquery max anchors the bound
-                d_ms = w.params[0]
-                src = (
-                    f"(SELECT * FROM {q.source}{where}"
-                    + (" AND " if where else " WHERE ")
-                    + f"unix_micros(cast(__ts AS timestamp_ltz)) > "
-                    f"(SELECT max(unix_micros(cast(__ts AS timestamp_ltz)))"
-                    f" FROM {q.source}{where}) - {d_ms * 1000})"
-                )
-                where = ""
-                win = None
             elif w.kind == "length" and not is_agg:
                 # passthrough length window → Current+Expired changelog
                 # (app_runner_windows.rs:25-45 contract)
@@ -2118,7 +1404,6 @@ class EventFluxApp:
                     f" __seq DESC) AS __rn FROM {q.source}{where}) WHERE __rn <= {n})"
                 )
                 where = ""
-                win = None
             else:
                 # user window factory (functions/extensions.py ≙
                 # eventflux_manager.rs:272-278 add_window_factory +
@@ -2142,33 +1427,20 @@ class EventFluxApp:
                 view = f"__extwin_{q.target.lower()}"
                 wdf.createOrReplaceTempView(view)
                 src = view
-                win = None
-                if q.group_by:
-                    group = f" GROUP BY {q.group_by}"
-                    if pkey:
-                        group += f", {pkey}"
-            if win is not None:
-                if not is_agg:
-                    raise ValueError("time windows require aggregation in SQL layer")
-                group = f" GROUP BY {win}"
-                if q.group_by:
-                    group += f", {q.group_by}"
-                if pkey:
-                    group += f", {pkey}"
-        elif q.group_by:
-            group = f" GROUP BY {q.group_by}"
-            if pkey:
-                group += f", {pkey}"
-        elif pkey and is_agg:
-            # PARTITION WITH around a bare aggregate = per-key aggregation
-            # (reference partition/mod.rs:9 per-key query instances; note:
-            # the reference's own partition_sum test leaks state across keys
-            # — tests/app_runner_partitions.rs:64-71 asserts [1,3,6] — we
-            # implement the DOCUMENTED per-key isolation instead)
-            group = f" GROUP BY {pkey}"
+            if win is not None and not is_agg:
+                raise ValueError("time windows require aggregation in SQL layer")
+        # GROUP BY [window,] [keys,] [PARTITION key]: PARTITION WITH around
+        # an aggregate = per-key aggregation (reference partition/mod.rs:9
+        # per-key query instances; note: the reference's own partition_sum
+        # test leaks state across keys — tests/app_runner_partitions.rs:64-71
+        # asserts [1,3,6] — we implement the DOCUMENTED per-key isolation)
+        group_cols = [c for c in (win, q.group_by) if c]
+        if pkey and is_agg:
+            group_cols.append(pkey)
+        group = f" GROUP BY {', '.join(group_cols)}" if group_cols else ""
 
         carry_seq = not is_agg
-        sel = ", ".join(items)
+        sel = ", ".join(select.items)
         if carry_seq:
             # emission seq follows the DRIVING side: right-unidirectional
             # joins emit on right arrivals (join_input_stream.rs:23-28)
@@ -2282,110 +1554,200 @@ class EventFluxApp:
         out = length_window_changelog(
             df, n, order_cols=["__seq"], keys=[pkey] if pkey else None
         )
-        items = [
-            F.expr(e).alias(a) if a else F.expr(e) for e, a in q.select_items
-        ]
-        return out.select(
-            *items, F.col("emit_seq").alias("__seq"), F.col("__ts")
-        )
+        return out.selectExpr(*_Select(q).items, "emit_seq AS __seq", "__ts")
 
     # -- pattern queries ---------------------------------------------------
 
     def _run_pattern_query(self, q: QueryDef, stack: frozenset) -> DataFrame:
+        return self._lower_pattern(q, lambda s: self.stream_df(s, stack))
+
+    def _lower_pattern(
+        self, q: QueryDef, frame_of, watermark: str | None = None
+    ) -> DataFrame:
+        """The one pattern lowering of ``run()`` and ``run_streaming``.
+
+        The step streams (and an absent pattern's stream), each read through
+        ``frame_of(name)``, union into one unified-schema frame tagged with
+        ``__src``; PARTITION WITH keys it per NFA instance; every step
+        becomes a flag column and the pattern a :class:`PatternSpec`.
+        ``PATTERN (e1=S[cond] -> NOT S2[cond2] FOR d)`` emits each trigger
+        event with NO matching absent-stream event in ``(ts, ts + d]`` — the
+        reference only DESIGNED this (``PATTERN_PROCESSING.md:34-38``,
+        "requires TimerWheel").
+
+        With a ``watermark`` the lowering is live: every flag also requires
+        a real (non-sentinel) row, and the streaming matchers run (the
+        absent one arms a state timeout at each trigger's deadline, the
+        TimerWheel role). That is the only difference from batch."""
+        from ..cep.batch import match_absent_batch
+        from ..cep.streaming import match_absent_stream, match_pattern_stream
+
         p: PatternDef = q.pattern
-        if p.absent is not None:
-            return self._run_absent_pattern(q, stack)
-        stream_names = [s.stream for s in p.steps]
+        if p.absent is not None and len(p.steps) != 1:
+            raise ValueError(
+                "absent patterns support one trigger step: "
+                "PATTERN (e1=S[cond] -> NOT S2[cond] FOR d)"
+            )
+        names = list(dict.fromkeys(
+            [s.stream for s in p.steps] + ([p.absent[0]] if p.absent else [])
+        ))
         all_cols: dict[str, str] = {}
-        for s in dict.fromkeys(stream_names):
+        for s in names:
             for c, t in self.streams[s].columns:
-                if c in all_cols and all_cols[c] != t:
+                if all_cols.setdefault(c, t) != t:
                     raise ValueError(f"column {c} type conflict across pattern streams")
-                all_cols[c] = t
-
-        union = None
-        for s in dict.fromkeys(stream_names):
-            df = self.stream_df(s, stack)
-            proj = [F.lit(s).alias("__src")]
-            for c, t in all_cols.items():
-                proj.append(
-                    (F.col(c) if c in [x for x, _ in self.streams[s].columns]
-                     else F.lit(None).cast(t)).alias(c)
-                )
-            proj += [F.col("__seq"), F.col("__ts")]
-            part = df.select(*proj)
-            union = part if union is None else union.unionByName(part)
-
-        # PARTITION WITH (key OF Stream) → per-key NFA instances; without a
-        # partition the pattern is global (single key). The reference's
-        # patterns are global by default; PARTITION wraps them per key
-        # (partition/parser.rs:14, app_runner_partitions.rs).
-        if q.partition_keys:
-            key_cols = set(q.partition_keys.values())
-            if len(key_cols) != 1:
-                raise ValueError(
-                    "pattern PARTITION keys must share one column name, got "
-                    f"{sorted(key_cols)}"
-                )
-            key_expr = F.col(next(iter(key_cols))).cast("string")
-        else:
-            key_expr = F.lit("__global__")
-        union = (
-            union.withColumn("conv_id", key_expr)
+        parts = []
+        for s in names:
+            have = {c for c, _ in self.streams[s].columns}
+            parts.append(frame_of(s).select(
+                F.lit(s).alias("__src"),
+                *[(F.col(c) if c in have else F.lit(None).cast(t)).alias(c)
+                  for c, t in all_cols.items()],
+                "__seq", "__ts",
+            ))
+        df = (
+            functools.reduce(DataFrame.unionByName, parts)
+            .withColumn("conv_id", _partition_key(q))
             .withColumn("turn_idx", F.col("__seq").cast("int"))
             .withColumn("ts", F.col("__ts"))
         )
 
+        def flag(stream: str, cond: str | None) -> Column:
+            f = F.col("__src") == stream
+            if watermark is not None:
+                f = f & not_sentinel()
+            return f & F.expr(cond) if cond else f
+
         select_plan, referenced, agg_emits, index_emits = _pattern_select_plan(
             q.select_items, p.steps
         )
-
-        steps = []
-        for sdef in p.steps:
-            flag = f"__is_{sdef.alias}"
-            cond_expr = F.col("__src") == sdef.stream
-            cross = None
-            if sdef.condition:
-                if _EREF_RE.search(sdef.condition):
-                    cross = _compile_cross_pred(sdef.condition)
+        if p.absent is not None:
+            trig = p.steps[0]
+            ab_stream, ab_cond, for_ms = p.absent
+            if any(agg_emits.values()) or any(index_emits.values()):
+                raise ValueError("absent patterns support plain e1.col select items")
+            emit = tuple(sorted({"turn_idx", *referenced[trig.alias]}))
+            df = df.withColumn("__is_trig", flag(trig.stream, trig.condition))
+            df = df.withColumn("__is_abs", flag(ab_stream, ab_cond))
+            args = (df, "__is_trig", "__is_abs", pd.Timedelta(milliseconds=for_ms))
+            if watermark is None:
+                out = match_absent_batch(*args, emit_cols=emit)
+            else:
+                out = match_absent_stream(*args, emit_cols=emit, watermark_delay=watermark)
+            # the matcher emits trigger columns under their plain names; the
+            # select plan expects alias-qualified ones
+            for c in (*emit, "ts"):
+                out = out.withColumnRenamed(c, f"{trig.alias}_{c}")
+            last = trig.alias
+        else:
+            steps = []
+            for sdef in p.steps:
+                cond, cross = sdef.condition, None
+                if cond and _EREF_RE.search(cond):
+                    # cross-step refs (e2[x > e1.x]) compile to a closure
+                    # evaluated inside the shared NFA replay core
+                    cond, cross = None, _compile_cross_pred(sdef.condition)
                     for em in _EREF_RE.finditer(sdef.condition):
                         if em.group(1) != sdef.alias:
                             referenced[em.group(1)].add(em.group(2))
-                    for bare in re.finditer(r"\b(?<!\.)(\w+)\b", _EREF_RE.sub(" ", sdef.condition)):
-                        if bare.group(1) in all_cols:
-                            referenced[sdef.alias].add(bare.group(1))
-                else:
-                    cond_expr = cond_expr & F.expr(sdef.condition)
-            union = union.withColumn(flag, cond_expr)
-            steps.append((sdef, flag, cross))
-
-        spec = PatternSpec(
-            steps=tuple(
-                Step(
-                    sdef.alias,
-                    flag,
-                    sdef.min_count,
-                    sdef.max_count,
-                    cross_pred=cross,
-                    emit=tuple(sorted(referenced[sdef.alias])),
-                    agg_emit=tuple(sorted(agg_emits[sdef.alias])),
-                    index_emit=tuple(
-                        sorted(index_emits[sdef.alias], key=lambda t: (str(t[0]), t[1]))
-                    ),
-                )
-                for sdef, flag, cross in steps
-            ),
-            within=pd.Timedelta(milliseconds=p.within_ms) if p.within_ms else None,
-            every=p.every,
-        )
-        m = match_pattern_batch(union, spec)
-        out_cols = [F.col(src).alias(out) for src, out in select_plan]
-        last = spec.steps[-1].name
-        return m.select(
-            *out_cols,
+                    bare = re.finditer(r"\b(?<!\.)(\w+)\b", _EREF_RE.sub(" ", sdef.condition))
+                    referenced[sdef.alias] |= {b.group(1) for b in bare} & all_cols.keys()
+                df = df.withColumn(f"__is_{sdef.alias}", flag(sdef.stream, cond))
+                steps.append((sdef, cross))
+            # Steps are built AFTER the condition scan: a later step's
+            # cross-ref (e2[x > e1.x]) extends e1's emit set
+            spec = PatternSpec(
+                steps=tuple(
+                    Step(
+                        sdef.alias, f"__is_{sdef.alias}", sdef.min_count, sdef.max_count,
+                        cross_pred=cross,
+                        emit=tuple(sorted(referenced[sdef.alias])),
+                        agg_emit=tuple(sorted(agg_emits[sdef.alias])),
+                        index_emit=tuple(sorted(
+                            index_emits[sdef.alias], key=lambda t: (str(t[0]), t[1])
+                        )),
+                    )
+                    for sdef, cross in steps
+                ),
+                within=pd.Timedelta(milliseconds=p.within_ms) if p.within_ms else None,
+                every=p.every,
+            )
+            if watermark is None:
+                out = match_pattern_batch(df, spec)
+            else:
+                out = match_pattern_stream(df, spec, watermark_delay=watermark)
+            last = spec.steps[-1].name
+        return out.select(
+            *[F.col(src).alias(o) for src, o in select_plan],
             F.col(f"{last}_turn_idx").cast("bigint").alias("__seq"),
             F.col(f"{last}_ts").alias("__ts"),
         )
+
+
+class _Select:
+    """A query's SELECT list and GROUP BY, parsed once."""
+
+    def __init__(self, q: QueryDef):
+        self.keys = [g.strip() for g in (q.group_by or "").split(",") if g.strip()]
+        self.agg_items = [(e, a) for e, a in q.select_items if _is_agg_expr(e)]
+        self.is_agg = bool(q.group_by) or bool(self.agg_items)
+        #: the SELECT items as SQL text, for ``selectExpr``
+        self.items = [f"{e} AS {a}" if a else e for e, a in q.select_items]
+        self.aggs = [F.expr(e).alias(a) if a else F.expr(e) for e, a in self.agg_items]
+        #: the output columns of an aggregate, in SELECT order
+        self.outs = [F.col(a or e) for e, a in q.select_items]
+
+
+def _running_agg(stream: DataFrame, q: QueryDef, sel: _Select) -> DataFrame:
+    """A non-windowed running aggregation over a live stream. No
+    event-time operator follows one, so the sentinel drops first."""
+    src = drop_sentinel(stream)
+    if q.where:
+        src = src.filter(F.expr(q.where))
+    return src.groupBy(*sel.keys).agg(*sel.aggs).select(*sel.outs)
+
+
+def _partition_key(q: QueryDef) -> Column:
+    """PARTITION WITH (key OF Stream) → per-key NFA instances; without a
+    partition the pattern is global (single key). The reference's patterns
+    are global by default; PARTITION wraps them per key
+    (partition/parser.rs:14, app_runner_partitions.rs). A live pattern's
+    watermark stays GLOBAL: sentinels flush every key's pending state."""
+    if not q.partition_keys:
+        return F.lit("__global__")
+    key_cols = set(q.partition_keys.values())
+    if len(key_cols) != 1:
+        raise ValueError(
+            "pattern PARTITION keys must share one column name, got "
+            f"{sorted(key_cols)}"
+        )
+    return F.col(next(iter(key_cols))).cast("string")
+
+
+def _tumbling_bucket(q: QueryDef) -> Column:
+    """Index of the tumbling window each event falls in (OUTPUT SNAPSHOT
+    over a tumbling window keys its state by it)."""
+    wms = int(q.window.params[0])
+    return F.floor(
+        F.col("__ts").cast("timestamp_ltz").cast("double") * 1000.0 / F.lit(float(wms))
+    ).cast("bigint")
+
+
+def _cron_ticks(expr: str, seq: int) -> list[datetime.datetime]:
+    """A cron window's ticks over the app horizon (sql/cron.py)."""
+    from .cron import Cron
+
+    horizon = _EPOCH + datetime.timedelta(seconds=seq + 61)
+    ticks = Cron(expr).ticks(_EPOCH, horizon)
+    if not ticks:
+        raise ValueError(f"cron {expr!r} fires nowhere in the app horizon")
+    return ticks
+
+
+def _sort_key(spec) -> tuple[str, bool]:
+    """``'attr [asc|desc]'`` of a sort window → (attr, descending)."""
+    parts = str(spec).split()
+    return parts[0], len(parts) > 1 and parts[1].lower() == "desc"
 
 
 def _pattern_select_plan(select_items, steps):

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sql.feeds import SENTINEL_SEQ
+
 __all__ = [
     "tumbling_stream",
     "sliding_stream",
@@ -248,13 +250,12 @@ def length_batch_stream(
     value_col: str,
     out_col: str,
     order_col: str = "__seq",
-    flush_seq: int = 10**9,
 ) -> DataFrame:
     """Tumbling count window as a stateful streaming operator — the
     streaming twin of ``operators.windows.length_batch_agg`` (reference
     ``lengthBatch(N)``, window/mod.rs:645-963: emit + reset every N
     events). The buffer survives micro-batch boundaries in the state
-    store; a row with ``order_col >= flush_seq`` (the feed's far-future
+    store; a row with ``order_col >= SENTINEL_SEQ`` (the feed's far-future
     sentinel) flushes the partial tail batch — no timer needed."""
     import numpy as np  # noqa: F811
     import pandas as pd  # noqa: F811
@@ -262,7 +263,7 @@ def length_batch_stream(
 
     # vectorized emit-and-reset: complete n-blocks reduce as one reshaped
     # numpy aggregation per micro-batch (no per-event Python loop); the
-    # sentinel (order >= flush_seq, always last in seq order) flushes the
+    # sentinel (order >= SENTINEL_SEQ, always last in seq order) flushes the
     # partial tail
     blk_fns = {
         "sum": lambda B: B.sum(axis=1),
@@ -285,8 +286,8 @@ def length_batch_stream(
             carry, bid = np.empty(0), 0
         rows = pd.concat(list(pdfs)).sort_values(order_col)
         seqs = rows[order_col].to_numpy(dtype=np.int64)
-        real = rows[value_col].to_numpy(dtype=np.float64)[seqs < flush_seq]
-        flush = bool((seqs >= flush_seq).any())
+        real = rows[value_col].to_numpy(dtype=np.float64)[seqs < SENTINEL_SEQ]
+        flush = bool((seqs >= SENTINEL_SEQ).any())
         pool = np.concatenate([carry, real])
         k = len(pool) // n
         vals_out = blk(pool[: k * n].reshape(k, n)) if k else np.empty(0)
@@ -316,7 +317,6 @@ def sort_window_stream(
     n: int,
     attr: str,
     ascending: bool,
-    flush_seq: int = 10**9,
 ) -> DataFrame:
     """Live ``sort(N, attr)`` window — the streaming twin of the batch
     comparator-retention plan (reference ``sort_window_processor.rs:25``:
@@ -342,8 +342,8 @@ def sort_window_stream(
         blob = state.get[0] if state.exists else ""
         rows = pd.concat(list(pdfs)).drop(columns="__k")
         proto = rows.iloc[0:0]
-        real = rows[rows["__seq"] < flush_seq]
-        flush = bool((rows["__seq"] >= flush_seq).any())
+        real = rows[rows["__seq"] < SENTINEL_SEQ]
+        flush = bool((rows["__seq"] >= SENTINEL_SEQ).any())
         pool = pd.concat([_unpack(blob, proto), real], ignore_index=True)
         retained = pool.sort_values(
             [attr, "__seq"], ascending=[ascending, True], kind="stable"
@@ -365,7 +365,6 @@ def sort_window_stream(
 def time_window_stream(
     df: DataFrame,
     d_ms: int,
-    flush_seq: int = 10**9,
 ) -> DataFrame:
     """Live ``time(d)`` window on the app's logical clock — the streaming
     twin of the SQL layer's batch restatement (final retained set = events
@@ -388,8 +387,8 @@ def time_window_stream(
         blob, hw = (state.get[0], int(state.get[1])) if state.exists else ("", -(1 << 62))
         rows = pd.concat(list(pdfs)).drop(columns="__k")
         proto = rows.iloc[0:0]
-        real = rows[rows["__seq"] < flush_seq]
-        flush = bool((rows["__seq"] >= flush_seq).any())
+        real = rows[rows["__seq"] < SENTINEL_SEQ]
+        flush = bool((rows["__seq"] >= SENTINEL_SEQ).any())
         pool = pd.concat([_unpack(blob, proto), real], ignore_index=True)
         if len(real):
             hw = max(hw, int(real["__ts"].astype("int64").max() // 1_000_000))

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from ..sql.feeds import SENTINEL_SEQ
+
 _STATE_SCHEMA = "count bigint, bucket bigint, pending string, buffered string"
 
 
@@ -55,12 +57,11 @@ def output_rate_stream(
     mode: str,
     value: int,
     unit: str,
-    sentinel_seq: int = 10**9,
 ) -> DataFrame:
     """Apply OUTPUT [ALL|FIRST|LAST] EVERY <n> EVENTS / <d> TIME to a
     streaming DataFrame carrying ``__seq`` (arrival order) and ``__ts``
     (event time). Emitted rows keep the input schema. The far-future flush
-    sentinel (``__seq >= sentinel_seq``) advances time buckets and flushes
+    sentinel (``__seq >= SENTINEL_SEQ``) advances time buckets and flushes
     pending LAST candidates without being counted or withheld."""
     if unit == "TIME" and mode == "ALL":
         return stream  # tick releases the full buffer — content ≡ passthrough
@@ -76,8 +77,8 @@ def output_rate_stream(
             if len(pdf) == 0:
                 continue
             pdf = pdf.drop(columns="__g").sort_values("__seq", kind="stable")
-            real = pdf[pdf["__seq"] < sentinel_seq]
-            sent = pdf[pdf["__seq"] >= sentinel_seq]
+            # sentinel rows only advance buckets / flush state
+            real = pdf[pdf["__seq"] < SENTINEL_SEQ]
             if unit == "EVENTS":
                 if len(real):
                     pos = count + pd.RangeIndex(len(real))
@@ -118,7 +119,6 @@ def output_rate_stream(
                     pending = _pack(tails[pb[tails.index] == pb.max()])
                     if len(closed):
                         yield closed
-            del sent  # sentinel rows only advance buckets / flush state
         state.update((count, bucket, pending, buffered))
 
     return (
@@ -144,7 +144,6 @@ def snapshot_agg_stream(
     interval_ms: int,
     start_ms: int,
     n_ticks: int,
-    sentinel_seq: int = 10**9,
 ) -> DataFrame:
     """Streaming ``OUTPUT SNAPSHOT EVERY d`` over an aggregating query
     (``snapshot_output_rate.rs``: every d the FULL current aggregate state
@@ -180,7 +179,7 @@ def snapshot_agg_stream(
                 continue
             pdf = pdf.drop(columns="__g").sort_values("__seq", kind="stable")
             hw = max(hw, int(pdf["__ts"].astype("int64").max() // 1_000_000))
-            real = pdf[pdf["__seq"] < sentinel_seq].drop(columns="__seq")
+            real = pdf[pdf["__seq"] < SENTINEL_SEQ].drop(columns="__seq")
             proto = real.iloc[0:0]
             buf = pd.concat(
                 [_unpack(buf_blob, proto), real], ignore_index=True

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .datamodel import TABLE_NAMES
 
@@ -51,20 +51,3 @@ def assert_matches_oracle(
     assert len(got) == len(want), f"{name}: rowcount spark={len(got)} oracle={len(want)}"
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=False, rtol=1e-6, atol=1e-6)
 
-
-def run_entry_pair(
-    spark: SparkSession,
-    sf_dir: str,
-    query_fn,
-    oracle: str | None,
-    name: str = "query",
-) -> None:
-    df = query_fn(spark, sf_dir)
-    if oracle is None:
-        assert df.count() >= 0
-        return
-    con = duckdb_con(sf_dir)
-    try:
-        assert_matches_oracle(df, con, oracle, name)
-    finally:
-        con.close()
