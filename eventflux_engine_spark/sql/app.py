@@ -7,10 +7,15 @@ into input streams, collect a target stream's output rows.
 
 Execution model here: each ``send`` stamps a global arrival sequence (the
 analog of the reference's single-threaded arrival order); ``run(target)``
-materializes the dataflow bottom-up — every INSERT INTO query compiles to
-Spark SQL over temp views (standard clauses) or to the keyed-NFA pattern
-matcher (``FROM PATTERN``), with EventFlux window specs mapped to
-``window()``/``session_window()``/length-window formulations.
+materializes the dataflow bottom-up. ``_Select`` parses a query's clauses
+once, and one lowering turns them into DataFrame operations for both
+``run()`` and the live ``run_streaming()``: ``_lower`` for joins, WHERE,
+windows, GROUP BY/HAVING, the projection, ORDER BY/LIMIT and OUTPUT rate
+limiting, and ``_lower_pattern`` for the keyed-NFA pattern matcher (``FROM
+PATTERN``). No clause becomes SQL text and no temp view is registered. The
+live lowering differs only in the sentinel guard, the watermark and the
+stateful count/sort/time windows, rate limiters and snapshots; it raises a
+``ValueError`` naming any clause it cannot honour.
 
 Deliberate batch-semantics deltas from the push engine (documented, asserted
 in tests): non-windowed GROUP BY yields final aggregates (the reference
@@ -39,6 +44,7 @@ from .compiler import (
     PatternDef,
     QueryDef,
     StreamDef,
+    _split_top,
     parse_aggregation,
     parse_create,
     parse_delete,
@@ -75,6 +81,12 @@ def _is_agg_expr(e: str) -> bool:
 
 
 _EREF_RE = re.compile(r"\b(e\d+)\.(\w+)")
+
+#: windows whose event-time column joins the GROUP BY
+_EVENT_TIME_WINDOWS = ("tumbling", "sliding", "session", "cron", "externalTimeBatch")
+#: the ones a live watermark closes (append mode); cron and
+#: externalTimeBatch groups re-aggregate to a complete-mode final state
+_WATERMARK_WINDOWS = ("tumbling", "sliding", "session")
 
 
 def _sql_literal(text: str):
@@ -545,10 +557,7 @@ class EventFluxApp:
         on_demand_query.rs:132-150 update_or_insert_by)."""
         stmt = sql.strip().rstrip(";")
         head = stmt.split(None, 1)[0].upper()
-        upsert = bool(
-            re.match(r"UPDATE\s+OR\s+INSERT\b", stmt, re.IGNORECASE)
-        )
-        if head == "INSERT" and not upsert:
+        if head == "INSERT":
             # OnDemandQueryType::Insert: append one literal row to the store
             m = re.match(
                 r"INSERT\s+INTO\s+(\w+)\s+VALUES\s*\((.*)\)\s*$",
@@ -562,84 +571,16 @@ class EventFluxApp:
             table, vals_text = m.groups()
             if table not in self.streams:
                 raise ValueError(f"unknown table {table!r} in on-demand statement")
-            from .compiler import _split_top
-
             cols = [c for c, _ in self.streams[table].columns]
             vals = [v.strip() for v in _split_top(vals_text)]
             if len(vals) != len(cols):
                 raise ValueError(
                     f"{table} expects {len(cols)} values, got {len(vals)}"
                 )
-            row = {c: _sql_literal(v) for c, v in zip(cols, vals)}
-            state = self._table_state(table)
-            row.update(
-                {
-                    "__seq": self._seq,
-                    "__ts": _EPOCH + datetime.timedelta(seconds=self._seq),
-                }
+            self._table_state(table).append(
+                {c: _sql_literal(v) for c, v in zip(cols, vals)} | self._stamp()
             )
-            self._seq += 1
-            state.append(row)
             return 1
-        if upsert:
-            m = re.match(
-                r"UPDATE\s+OR\s+INSERT\s+INTO\s+(\w+)\s+SET\s+(.*?)"
-                r"(?:\s+WHERE\s+(.*))?$",
-                stmt, re.IGNORECASE | re.DOTALL,
-            )
-            if m is None:
-                raise ValueError(
-                    "on-demand UPDATE OR INSERT must be 'UPDATE OR INSERT "
-                    "INTO <table> SET col = expr[, ...] [WHERE <cond>]': "
-                    f"{stmt[:80]!r}"
-                )
-            table, set_text, cond_text = m.groups()
-            d = DmlDef("update", table, "__none__", (cond_text or "").strip())
-            from .compiler import _split_top
-
-            for item in _split_top(set_text):
-                am = re.match(r"([\w.]+)\s*=\s*(.+)$", item.strip(), re.DOTALL)
-                if am is None:
-                    raise ValueError(
-                        f"bad SET item in on-demand UPDATE OR INSERT: {item!r}"
-                    )
-                d.set_items.append(
-                    (am.group(1).split(".")[-1], am.group(2).strip())
-                )
-            if table not in self.streams:
-                raise ValueError(f"unknown table {table!r} in on-demand statement")
-            cols = [c for c, _ in self.streams[table].columns]
-            state = self._table_state(table)
-            cond = (
-                self._compile_dml_expr(d.condition, d, cols)
-                if d.condition
-                else (lambda row, event: True)
-            )
-            setters = [
-                (col, self._compile_dml_expr(expr, d, cols))
-                for col, expr in d.set_items
-            ]
-            n = 0
-            for row in state:
-                if cond(row, {}):
-                    row.update({col: fn(row, {}) for col, fn in setters})
-                    n += 1
-            if n == 0:
-                # miss → insert: the new row is built from the SET items
-                # over a null-initialized row (upsert_table_processor.rs
-                # miss branch semantics, applied store-side)
-                row = {c: None for c in cols}
-                row.update(
-                    {
-                        "__seq": self._seq,
-                        "__ts": _EPOCH + datetime.timedelta(seconds=self._seq),
-                    }
-                )
-                row.update({col: fn(row, {}) for col, fn in setters})
-                self._seq += 1
-                state.append(row)
-                n = 1
-            return n
         if head == "SELECT":
             tables = {d.table for d in self.dml} | {
                 n for n, s in self.streams.items() if s.is_table
@@ -649,24 +590,25 @@ class EventFluxApp:
             out = self.spark.sql(stmt)
             cols = [c for c in out.columns if not c.startswith("__")]
             return [tuple(r) for r in out.select(*cols).collect()]
+        upsert = bool(re.match(r"UPDATE\s+OR\s+INSERT\b", stmt, re.IGNORECASE))
         if head == "UPDATE":
+            kind = "UPDATE OR INSERT" if upsert else "UPDATE"
             m = re.match(
-                r"UPDATE\s+(\w+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
+                r"UPDATE\s+(?:OR\s+INSERT\s+INTO\s+)?(\w+)\s+SET\s+(.*?)"
+                r"(?:\s+WHERE\s+(.*))?$",
                 stmt, re.IGNORECASE | re.DOTALL,
             )
             if m is None:
                 raise ValueError(
-                    "on-demand UPDATE must be 'UPDATE <table> SET col = expr"
-                    f"[, ...] [WHERE <cond>]': {stmt[:80]!r}"
+                    f"on-demand {kind} must be '{kind}{' INTO' if upsert else ''} "
+                    f"<table> SET col = expr[, ...] [WHERE <cond>]': {stmt[:80]!r}"
                 )
             table, set_text, cond_text = m.groups()
             d = DmlDef("update", table, "__none__", (cond_text or "").strip())
-            from .compiler import _split_top
-
             for item in _split_top(set_text):
                 am = re.match(r"([\w.]+)\s*=\s*(.+)$", item.strip(), re.DOTALL)
                 if am is None:
-                    raise ValueError(f"bad SET item in on-demand UPDATE: {item!r}")
+                    raise ValueError(f"bad SET item in on-demand {kind}: {item!r}")
                 d.set_items.append((am.group(1).split(".")[-1], am.group(2).strip()))
         elif head == "DELETE":
             m = re.match(
@@ -705,7 +647,24 @@ class EventFluxApp:
             if cond(row, {}):
                 row.update({col: fn(row, {}) for col, fn in setters})
                 n += 1
+        if upsert and n == 0:
+            # miss → insert: the new row is built from the SET items over a
+            # null-initialized row (upsert_table_processor.rs miss branch
+            # semantics, applied store-side)
+            row = {c: None for c in cols} | self._stamp()
+            row.update({col: fn(row, {}) for col, fn in setters})
+            state.append(row)
+            n = 1
         return n
+
+    def _stamp(self) -> dict:
+        """The next arrival's ``__seq``/``__ts`` for a row added on demand."""
+        stamp = {
+            "__seq": self._seq,
+            "__ts": _EPOCH + datetime.timedelta(seconds=self._seq),
+        }
+        self._seq += 1
+        return stamp
 
     def run(self, target: str) -> list[tuple]:
         """Collect the target stream's rows in emission order (AppRunner
@@ -733,27 +692,25 @@ class EventFluxApp:
         2. feeds: every input stream becomes a chunked file feed that ends
            in a far-future sentinel row. ``sql/feeds.py`` owns the sentinel
            and the one rule for what a watermark has made final;
-        3. one lowering per terminal shape: row-level filter/projection
-           (incl. stream-table enrichment joins and stream-STREAM joins —
-           Spark's symmetric join state buffers both feeds), OUTPUT rate
-           limits and snapshots, windowed aggregation, time/sort windows,
-           non-windowed GROUP BY (running agg), and patterns, which share
-           the batch lowering (:meth:`_lower_pattern`);
+        3. the lowering ``run()`` uses: every chain stage and a non-pattern
+           terminal go through :meth:`_lower`, patterns through
+           :meth:`_lower_pattern`. Live, they differ from batch only in the
+           sentinel guard, the watermark and the stateful count, sort and
+           time windows, rate limiters and snapshots, and they raise a
+           ``ValueError`` naming any clause they cannot honour;
         4. one drain from a memory sink (:meth:`_drain`).
 
         ≙ the reference's actual runtime mode (runtime.start() + sources,
         eventflux_app_runtime.rs:674) — the batch ``run()`` is its replay
-        twin; parity between the two is pytest-asserted.
+        twin; parity between the two is pytest-asserted
+        (``tests/test_streaming_parity.py``).
         """
-        from ..streaming import pipelines as P
-
         qs = [q for q in self.queries if q.target == target]
         if len(qs) != 1:
             raise ValueError("run_streaming supports exactly one query per target")
         q = qs[0]
-        source, prelude, agg_stage = self._stream_chain(q)
-        sel = _Select(q)
-        w = q.window
+        sel = _Select(q, self.streams)
+        source, prelude = self._stream_chain(q, sel)
         snapshot = q.output_rate is not None and q.output_rate[0] == "SNAPSHOT"
         if q.output_rate is not None and not snapshot and (
             q.pattern is not None or sel.is_agg
@@ -767,27 +724,25 @@ class EventFluxApp:
             h != "inner" and not self.streams[s].is_table for h, s, _, _ in q.joins
         )
         with Feeds(self.spark, n_chunks) as feeds:
-            stream = self._apply_chain(
-                self._feed(feeds, source, OUTER_JOIN_KEY if outer_join else None),
-                prelude,
-                agg_stage,
-            )
 
-            def kept():
-                # the sentinel SURVIVES the predicate in front of an
-                # event-time operator, or the watermark never advances
-                return stream.filter(keep_sentinel(q.where)) if q.where else stream
+            def partner(s: str, how: str) -> DataFrame:
+                # a table joins as its final state; a stream as its own
+                # feed. An INNER join needs no event time, so that feed's
+                # sentinel drops; an outer one keeps it (with non-null key
+                # strings) because the pads flush only when BOTH sides'
+                # watermarks pass the bound
+                if self.streams[s].is_table:
+                    return F.broadcast(self.stream_df(s))
+                if how != "inner":
+                    return self._feed(feeds, s, OUTER_JOIN_KEY)
+                return drop_sentinel(self._feed(feeds, s))
 
-            last_only = False
-            if agg_stage is not None:
-                # terminal consumer of an aggregating intermediate: plain
-                # filter/projection over the running aggregation's state;
-                # complete-mode drain returns the FINAL state — exactly what
-                # batch run() computes for agg -> INSERT INTO S -> row-level
-                out = stream.filter(F.expr(q.where)) if q.where else stream
-                out, mode = out.selectExpr(*sel.items), "complete"
-            elif snapshot:
-                out, mode = self._snapshot_stream(q, kept(), sel), "append"
+            stream = self._feed(feeds, source, OUTER_JOIN_KEY if outer_join else None)
+            for u, usel in prelude:
+                stream, _ = self._lower(u, usel, stream, partner, watermark, feeds)
+            if snapshot:
+                kept = stream.filter(keep_sentinel(sel.where)) if sel.where else stream
+                out, mode = self._snapshot_stream(q, kept, sel), "append"
             elif q.pattern is not None:
                 # the chain's output is the first step's stream; every other
                 # step stream is its own feed with its own sentinel, because
@@ -799,45 +754,21 @@ class EventFluxApp:
                     watermark,
                 )
                 mode = "append"
-            elif w is not None and w.kind in ("time", "sort"):
-                # live time(d) / sort(N, attr) windows
-                # (sort_window_processor.rs:25): stateful retention on the
-                # app's logical clock; the sentinel flushes the FINAL
-                # retained set (the batch restatement's final-state contract)
-                if w.kind == "time":
-                    retained = P.time_window_stream(kept(), int(w.params[0]))
-                else:
-                    attr, desc = _sort_key(w.params[1])
-                    retained = P.sort_window_stream(
-                        kept(), int(w.params[0]), attr, not desc
-                    )
-                if sel.is_agg:
-                    out = P.group_agg_update_stream(retained, sel.keys, sel.aggs)
-                    out, mode = out.select(*sel.outs), "complete"
-                else:
-                    out, mode = retained.selectExpr(*sel.items, "__seq"), "append"
-            elif w is not None and sel.is_agg:
-                out, mode, last_only = self._window_agg_stream(
-                    q, kept(), sel, watermark
-                )
-            elif not sel.is_agg:
-                out, mode = self._row_stream(q, stream, sel, feeds, watermark), "append"
             else:
-                # non-windowed GROUP BY: running aggregation. The reference
-                # emits one row per touched group per chunk (update mode);
-                # the drained FINAL state is what batch run() returns, so the
-                # memory sink runs in complete mode (select_processor.rs:483-529)
-                out, mode = _running_agg(stream, q, sel), "complete"
-            return self._drain(out, f"__sqlstream_{target.lower()}", mode, last_only)
+                out, mode = self._lower(q, sel, stream, partner, watermark, feeds)
+            return self._drain(out, f"__sqlstream_{target.lower()}", mode)
 
-    def _stream_chain(self, q: QueryDef) -> tuple[str, list[QueryDef], "QueryDef | None"]:
+    def _stream_chain(
+        self, q: QueryDef, sel: "_Select"
+    ) -> tuple[str, list[tuple[QueryDef, "_Select"]]]:
         """Walk back through the INSERT INTO chain feeding ``q``
         (junction composition, stream_junction.rs). Returns the head
-        stream (the only one fed), the intermediate stages head first, and
-        the aggregating stage if there is one. Every intermediate stage is
-        row-level (filter/projection) or, at most once, a non-windowed
-        GROUP BY followed only by row-level stages."""
-        prelude: list[QueryDef] = []
+        stream (the only one fed) and the intermediate stages, head first,
+        each with its parsed clauses.
+        Every intermediate stage is row-level (filter/projection) or, at
+        most once, a non-windowed GROUP BY followed only by row-level
+        stages."""
+        prelude: list[tuple[QueryDef, _Select]] = []
         agg_stage = None
         head = q.pattern.steps[0].stream if q.pattern else q.source
         while True:
@@ -854,16 +785,15 @@ class EventFluxApp:
                     f"stream {head} is both sent-to and query-fed; streaming "
                     "chains support one producer"
                 )
-            u_agg = _Select(u).is_agg
-            if u.pattern or u.window or u.joins or (
-                u_agg and u.output_rate is not None
-            ):
+            usel = _Select(u, self.streams)
+            if u.pattern or usel.window or u.joins or u.output_rate is not None:
                 raise ValueError(
                     "streaming chain intermediates must be row-level "
                     "filter/projection or a non-windowed GROUP BY "
-                    f"aggregation (stage into {head} is not)"
+                    f"aggregation, without OUTPUT rate limiting (stage into "
+                    f"{head} is not)"
                 )
-            if u_agg:
+            if usel.is_agg:
                 # ONE aggregating intermediate per chain (stream_junction.rs
                 # chains arbitrary queries; the Spark restatement runs the
                 # running aggregation in-plan and drains the final state —
@@ -876,54 +806,32 @@ class EventFluxApp:
                         "intermediate stage"
                     )
                 agg_stage = u
-            prelude.insert(0, u)
+            prelude.insert(0, (u, usel))
             head = u.source
         if agg_stage is not None and (
-            q.pattern or q.window or q.joins or _Select(q).is_agg
+            q.pattern or sel.window or q.joins or sel.is_agg
             or q.output_rate is not None
         ):
             raise ValueError(
                 "a streaming chain with an aggregating intermediate "
                 "needs a row-level terminal query (filter/projection)"
             )
-        return head, prelude, agg_stage
+        return head, prelude
 
     def _feed(self, feeds: Feeds, name: str, strings: str | None = None) -> DataFrame:
         """Open a stream's own events as the next sentinel-terminated feed."""
         ddl, rows = self._base_rows(name)
         return feeds.open(T.StructType.fromDDL(ddl), rows, strings)
 
-    @staticmethod
-    def _apply_chain(
-        stream: DataFrame, prelude: list[QueryDef], agg_stage: "QueryDef | None"
-    ) -> DataFrame:
-        """Apply the chain's intermediate stages on the same streaming plan:
-        the junction between stages is an in-plan projection; an
-        aggregating stage becomes an in-plan running aggregation whose
-        state feeds the rest of the chain."""
-        post_agg = False
-        for u in prelude:
-            usel = _Select(u)
-            if u is agg_stage:
-                stream, post_agg = _running_agg(stream, u, usel), True
-            elif post_agg:
-                s = stream.filter(F.expr(u.where)) if u.where else stream
-                stream = s.selectExpr(*usel.items)
-            else:
-                # the sentinel must SURVIVE stage predicates or downstream
-                # event-time operators never flush
-                s = stream.filter(keep_sentinel(u.where)) if u.where else stream
-                stream = s.selectExpr(*usel.items, "__seq", "__ts")
-        return stream
-
-    def _drain(
-        self, out: DataFrame, name: str, mode: str, last_only: bool = False
-    ) -> list[tuple]:
+    def _drain(self, out: DataFrame, name: str, mode: str) -> list[tuple]:
         """Run the plan over every feed into a memory sink and collect it in
-        emission order without sentinel rows or ``__`` columns.
-        ``last_only`` keeps the final emission only (a per-arrival length
-        window's final state)."""
-        qh = out.writeStream.format("memory").queryName(name).outputMode(mode).start()
+        emission order without sentinel rows or ``__`` columns. Mode
+        ``last`` is append mode keeping the final emission only (a
+        per-arrival length window's final state)."""
+        qh = (
+            out.writeStream.format("memory").queryName(name)
+            .outputMode("append" if mode == "last" else mode).start()
+        )
         try:
             qh.processAllAvailable()
         finally:
@@ -939,26 +847,21 @@ class EventFluxApp:
             res = res.orderBy(*res.columns)
         cols = [c for c in res.columns if not c.startswith("__")]
         rows = [tuple(r) for r in res.select(*cols).collect()]
-        return rows[-1:] if last_only else rows
+        return rows[-1:] if mode == "last" else rows
 
     def _snapshot_stream(self, q: QueryDef, src: DataFrame, sel: "_Select") -> DataFrame:
         """OUTPUT SNAPSHOT EVERY d over a live aggregating query
         (snapshot_output_rate.rs): per-tick full-state emission as a
         stateful op; identical event-time restatement to the batch
         operator, so batch/streaming rows match."""
-        if q.pattern is not None or not sel.is_agg or (
-            q.window is not None and q.window.kind != "tumbling"
-        ):
-            raise ValueError(
-                "streaming OUTPUT SNAPSHOT supports non-windowed or "
-                "tumbling-windowed aggregating queries"
-            )
+        _check_snapshot(q, sel)
+        w = sel.window
         from ..operators.output import _parse_simple_agg
         from ..streaming.ratelimit import snapshot_agg_stream
 
         # tumbling window → the bucket start joins the state key (same
         # partials-over-buckets decomposition as the batch operator)
-        buckets = [] if q.window is None else [_tumbling_bucket(q).alias("__wb")]
+        buckets = [] if w is None else [_tumbling_bucket(w).alias("__wb")]
         parsed = [_parse_simple_agg(e) for e, _ in sel.agg_items]
         if any(p is None for p in parsed):
             raise ValueError(
@@ -1007,559 +910,391 @@ class EventFluxApp:
             ],
         )
 
-    def _window_agg_stream(
-        self, q: QueryDef, src: DataFrame, sel: "_Select", watermark: str
-    ) -> tuple[DataFrame, str, bool]:
-        """A live windowed aggregate: (plan, output mode, keep only the
-        last emission)."""
-        from ..streaming import pipelines as P
-
-        w, keys, aggs = q.window, sel.keys, sel.aggs
-        ms = [f"{x} milliseconds" for x in w.params]
-        if w.kind == "tumbling":
-            out = P.tumbling_stream(
-                src, ms[0], keys, aggs, ts_col="__ts", watermark=watermark
-            )
-        elif w.kind == "sliding":
-            out = P.sliding_stream(
-                src, ms[0], ms[1], keys, aggs, ts_col="__ts", watermark=watermark
-            )
-        elif w.kind == "session":
-            out = P.session_stream(
-                src, ms[0], keys, aggs, ts_col="__ts", watermark=watermark
-            )
-        elif w.kind == "cron":
-            # live cron(expr) window: the deterministic event-time
-            # restatement of the reference's wall-clock cron ticks
-            # (window/mod.rs:1742) — each event buckets to the NEXT tick of
-            # the schedule, computed Catalyst-side against the literal tick
-            # spine (events past the last tick stay buffered/unemitted, as in
-            # batch; the sentinel's bucket is null)
-            ticks = _cron_ticks(str(w.params[0]), self._seq)
-            arr = F.array(
-                *[
-                    F.lit(int(t.replace(tzinfo=datetime.timezone.utc).timestamp() * 1e6))
-                    .cast("bigint")
-                    for t in ticks
-                ]
-            )
-            ev_us = F.unix_micros(F.col("__ts").cast("timestamp"))
-            out = (
-                src.withColumn("__cron_bucket", F.array_min(F.filter(arr, lambda t: t >= ev_us)))
-                .filter(F.col("__cron_bucket").isNotNull())
-                .groupBy("__cron_bucket", *keys)
-                .agg(*aggs)
-            )
-        elif w.kind in ("length", "lengthBatch"):
-            am = re.match(
-                r"\s*(SUM|AVG|MIN|MAX|COUNT)\s*\(\s*(\w+)\s*\)\s*$",
-                sel.agg_items[0][0],
-                re.IGNORECASE,
-            ) if len(sel.agg_items) == 1 and not keys else None
-            if am is None:
-                raise ValueError(
-                    f"streaming WINDOW('{w.kind}') supports a single "
-                    "un-keyed SUM/AVG/MIN/MAX/COUNT aggregate"
-                )
-            out_name = sel.agg_items[0][1] or "agg"
-            args = (int(w.params[0]), am.group(1).lower(), am.group(2), out_name)
-            if w.kind == "length":
-                # per-arrival sliding count window as a stateful op; the
-                # drain keeps only the final emission to honor run()'s
-                # final-state contract (last N events' aggregate)
-                out = P.length_window_stream(drop_sentinel(src), *args)
-            else:
-                # tumbling count window: emit + reset every N events; the
-                # sentinel flushes the partial tail batch (no timer needed)
-                out = P.length_batch_stream(src, *args)
-                out = out.withColumnRenamed("batch_id", "__seq")
-            # cast the double emission to the declared target type
-            decl = dict(self.streams[q.target].columns)
-            if out_name in decl:
-                out = out.withColumn(out_name, F.col(out_name).cast(decl[out_name]))
-            return out, "append", w.kind == "length"
-        else:
-            raise ValueError(f"streaming WINDOW('{w.kind}') unsupported")
-        # strip window bounds; cron buckets re-aggregate as events arrive
-        # (no watermark closes them) → complete-mode final state, like the
-        # non-windowed running aggregation
-        out = out.select(*keys, *[
-            c for c in out.columns
-            if c not in keys and not c.startswith(("window_", "session_", "__"))
-        ])
-        return out, "complete" if w.kind == "cron" else "append", False
-
-    def _row_stream(
-        self, q: QueryDef, stream: DataFrame, sel: "_Select", feeds: Feeds, watermark: str
-    ) -> DataFrame:
-        """Row-level terminal: filter/projection, stream-table and
-        stream-stream joins, and an in-pipeline OUTPUT rate limiter."""
-        from ..streaming.ratelimit import output_rate_stream
-
-        partners = [j for j in q.joins if not self.streams[j[1]].is_table]
-        if partners and all(j[0] == "inner" for j in partners):
-            # the main sentinel must not join real partner rows (its
-            # neutral key values could collide); no event-time operator
-            # follows, so dropping it pre-join is safe. Outer joins keep it:
-            # the global watermark is the MIN across inputs, so the main
-            # feed must advance too or pads never flush
-            stream = drop_sentinel(stream)
-        out = stream.alias(q.source)
-        outer_projected = False
-        for how, sname, cond, _trig in q.joins:
-            if self.streams[sname].is_table:
-                # stream-table enrichment joins: the bound table state
-                # broadcasts into every micro-batch (≙ TableJoinProcessor's
-                # per-event compiled probe, table_join_processor.rs:17-137)
-                static = self.stream_df(sname).drop("__seq", "__ts")
-                out = out.join(F.broadcast(static.alias(sname)), F.expr(cond), how)
-                continue
-            # STREAM partner: its own feed, a real micro-batch stream-stream
-            # join (join_processor.rs's two live buffers ≙ Spark's symmetric
-            # join state). INNER emits eagerly per match — no watermark
-            # needed to flush. LEFT/RIGHT/FULL need an event-time bound (ON
-            # ... WITHIN d) so Spark can expire join state and emit the
-            # unmatched pads the reference's live outer joins produce
-            # (join_processor.rs:104-112).
-            within_ms = q.join_within.get(sname)
-            if how != "inner":
-                if within_ms is None:
-                    raise ValueError(
-                        "streaming outer stream-stream joins need an "
-                        "event-time bound: JOIN ... ON cond WITHIN d"
-                    )
-                if len(q.joins) != 1:
-                    raise ValueError(
-                        "streaming outer stream-stream joins support a single join"
-                    )
-                out = self._join_outer_stream(
-                    out, q, sel, how, sname, cond, within_ms, feeds, watermark
-                )
-                outer_projected = True
-                continue
-            partner = drop_sentinel(self._feed(feeds, sname)).drop("__seq")
-            if within_ms is None:
-                out = out.join(partner.drop("__ts").alias(sname), F.expr(cond), how)
-                continue
-            # keep the partner event time for the bound, under a name the
-            # SELECT items can't collide with
-            bound = F.abs(
-                F.unix_micros("__ts") - F.unix_micros("__pts")
-            ) <= F.lit(within_ms * 1000)
-            partner = partner.withColumnRenamed("__ts", "__pts").alias(sname)
-            out = out.join(partner, F.expr(cond) & bound, how).drop("__pts")
-        if outer_projected:
-            # an outer stream join already applied WHERE + the item
-            # projection; its sentinels flow THROUGH the join (their
-            # far-future pads advance a limiter's buckets and flush pending
-            # state; the limiter never counts them)
-            if q.output_rate is not None:
-                out = output_rate_stream(out, *q.output_rate)
-            return out.drop("__ts")
-        if q.where:
-            out = out.filter(F.expr(q.where))
-        if q.output_rate is None:
-            return out.selectExpr(*sel.items, "__seq")
-        # OUTPUT rate limiting runs INSIDE the live pipeline (ratelimit/*.rs
-        # at select_processor.rs:30-38) — a stateful counter / event-time
-        # bucket operator, not a post-hoc batch filter
-        out = out.selectExpr(*sel.items, "__seq", "__ts")
-        if partners:
-            # the INNER join dropped the sentinels pre-join, so the limiter
-            # gets its flush event from a row-less feed unioned AFTER the
-            # join, behind one empty file per data chunk
-            out = out.unionByName(feeds.open(out.schema, lead_empty=feeds.n_chunks))
-        return output_rate_stream(out, *q.output_rate).drop("__ts")
-
-    def _join_outer_stream(
-        self,
-        out: DataFrame,
-        q: QueryDef,
-        sel: "_Select",
-        how: str,
-        sname: str,
-        cond: str,
-        within_ms: int,
-        feeds: Feeds,
-        watermark: str,
-    ) -> DataFrame:
-        """Streaming LEFT/RIGHT/FULL stream-stream join with an event-time
-        bound (``ON cond WITHIN d``): both sides carry watermarks, the bound
-        becomes the range condition Spark's symmetric join state needs to
-        expire buffered rows, and unmatched rows surface as live null-pads
-        once the watermark passes — the reference's outer-join emission
-        (``join_processor.rs:104-112``, ``tests/app_runner_joins.rs:28-43``).
-
-        Returns the FULLY projected stream (select items + ``__seq`` +
-        ``__ts``, both coalesced across sides so pads keep an event time for
-        a downstream rate limiter): the pad filter must run while the join
-        aliases are still resolvable, so WHERE and the item projection
-        happen here, not in the caller."""
-        if within_ms >= 6 * 86_400_000:
-            # feeds' sentinels sit a week apart, so the bound itself keeps
-            # them from ever matching each other
-            raise ValueError(
-                "streaming outer-join WITHIN bounds must be under 6 days"
-            )
-        # the partner feed carries its own sentinel (pads flush only when
-        # BOTH sides' watermarks pass the bound) with NON-NULL join-key
-        # strings (feeds.OUTER_JOIN_KEY)
-        pstream = self._feed(feeds, sname, OUTER_JOIN_KEY)
-        main = out.withWatermark("__ts", watermark)
-        partner = (
-            pstream.withColumnRenamed("__seq", "__pseq")
-            .withColumnRenamed("__ts", "__pts")
-            .withWatermark("__pts", watermark)
-            .alias(sname)
-        )
-        # the canonical range form Spark's state-cleanup analyzer
-        # recognizes (plain interval arithmetic on the two event-time
-        # columns — wrapping them in unix_micros would defeat detection)
-        bound = F.expr(
-            f"__pts >= __ts - INTERVAL {within_ms} MILLISECONDS AND "
-            f"__pts <= __ts + INTERVAL {within_ms} MILLISECONDS"
-        )
-        # NO sentinel-exclusion conjuncts here and NO in-plan pad filter:
-        # any deterministic single-side predicate gets pushed below that
-        # side's watermark node, hiding the sentinel from watermark
-        # tracking. Sentinel pads are dropped at the drain instead (after
-        # the __seq coalesce below).
-        j = main.join(partner, F.expr(cond) & bound, how)
-        if q.where:
-            # the guard keeps sentinel pads alive for a downstream rate
-            # limiter's flush; it references BOTH sides' seq columns, so it
-            # cannot be pushed below either watermark node
-            j = j.filter(keep_sentinel(q.where, "__seq", "__pseq"))
-        return j.selectExpr(
-            *sel.items,
-            "coalesce(__seq, __pseq) AS __seq",
-            "coalesce(__ts, __pts) AS __ts",
-        )
-
-    # -- query compilation ----------------------------------------------------
+    # -- the one clause lowering of run() and run_streaming ---------------------
 
     def _run_query(self, q: QueryDef, stack: frozenset) -> DataFrame:
-        if q.pattern is not None:
-            return self._run_pattern_query(q, stack)
-        if q.output_rate is not None and q.output_rate[0] == "SNAPSHOT":
-            return self._run_snapshot_query(q, stack)
-        return self._run_select_query(q, stack)
+        def frame_of(s: str, how: str = "inner") -> DataFrame:
+            return self.stream_df(s, stack)
 
-    def _run_snapshot_query(self, q: QueryDef, stack: frozenset) -> DataFrame:
+        if q.pattern is not None:
+            return self._lower_pattern(q, frame_of)
+        sel = _Select(q, self.streams)
+        if q.output_rate is not None and q.output_rate[0] == "SNAPSHOT":
+            return self._run_snapshot_query(q, sel, frame_of(q.source))
+        return self._lower(q, sel, frame_of(q.source), frame_of)[0]
+
+    def _run_snapshot_query(self, q: QueryDef, sel: "_Select", df: DataFrame) -> DataFrame:
         """OUTPUT SNAPSHOT EVERY d (snapshot_output_rate.rs): every d ticks
         emit the FULL current aggregate state — restated on the app's event
         clock as per-tick cumulative aggregates (operators/output.py)."""
         from ..operators import output as OUT
 
-        if not (q.group_by or any(_AGG_RE.search(e) for e, _ in q.select_items)):
-            raise ValueError("OUTPUT SNAPSHOT requires an aggregating query")
-        if q.window is not None and q.window.kind != "tumbling":
-            raise ValueError(
-                "OUTPUT SNAPSHOT supports non-windowed or tumbling-windowed "
-                "aggregating queries"
-            )
-        df = self.stream_df(q.source, stack | {q.target})
-        if q.where:
-            df = df.filter(F.expr(q.where))
-        keys = _Select(q).keys
-        if q.window is not None:
+        _check_snapshot(q, sel)
+        w = sel.window
+        if sel.where:
+            df = df.filter(F.expr(sel.where))
+        keys = sel.keys
+        if w is not None:
             # SNAPSHOT over a tumbling window = the window bucket joins the
             # aggregation key (partials-over-buckets decomposition, VERDICT
             # r4 #5): at tick t the full per-(bucket, keys) state over
             # events with ts <= t emits — closed buckets show final values,
             # the open bucket its partial state
-            df = df.withColumn("__wb", _tumbling_bucket(q))
+            df = df.withColumn("__wb", _tumbling_bucket(w))
             keys = ["__wb"] + keys
-        aggs = [(e, a or e) for e, a in q.select_items if _AGG_RE.search(e)]
+        aggs = [(e, a or e) for e, a in sel.agg_items]
         interval_ms = q.output_rate[1]
         end = _EPOCH + datetime.timedelta(seconds=max(self._seq, 1))
         out = OUT.output_snapshot_agg(
             df, interval_ms, "__ts", keys, aggs, _EPOCH, end
         )
-        sel = [F.col(a or e) for e, a in q.select_items]
+        cols = [F.col(a or e) for e, a in q.select_items]
         order = [F.col("tick")] + [F.col(k) for k in keys]
         return out.select(
-            *sel,
+            *cols,
             F.row_number().over(Window.orderBy(*order)).alias("__seq"),
             F.col("tick").cast("timestamp").alias("__ts"),
         )
 
-    def _register(self, name: str, stack: frozenset) -> None:
-        self.stream_df(name, stack).createOrReplaceTempView(name)
+    def _lower(
+        self,
+        q: QueryDef,
+        sel: "_Select",
+        src: DataFrame,
+        frame_of,
+        watermark: str | None = None,
+        feeds: Feeds | None = None,
+    ) -> tuple[DataFrame, str]:
+        """The one lowering of a non-pattern query for ``run()`` and
+        ``run_streaming``: joins, WHERE, the window, GROUP BY [window,]
+        [keys,] [PARTITION key] with HAVING or the SELECT projection, then
+        ORDER BY / LIMIT / OFFSET and OUTPUT rate limiting, every clause
+        read from ``sel``. ``src`` is the source stream's frame and
+        ``frame_of(name, how)`` a join partner's.
 
-    def _run_select_query(self, q: QueryDef, stack: frozenset) -> DataFrame:
-        self._register(q.source, stack)
-        for _, s, _, _ in q.joins:
-            self._register(s, stack)
+        With a ``watermark`` the lowering is live, and only these differ:
+        the sentinel guard (``sql/feeds.py``), the watermark of event-time
+        windows and outer stream joins, and the stateful count, sort and
+        time windows and rate limiter (``streaming/``). A clause the live
+        plan cannot honour raises (:meth:`_check_live`). Returns the plan
+        and its streaming output mode: ``append``, ``complete``, or
+        ``last`` (append, keeping only the final emission)."""
+        from ..streaming import pipelines as P
 
-        select = _Select(q)
-        is_agg = select.is_agg
-        pkey = q.partition_keys.get(q.source)  # PARTITION WITH key, if any
-
-        src = q.source
-        where = f" WHERE {q.where}" if q.where else ""
-        win = None
-        # named/shared window: FROM <window-stream> inherits its definition
-        # (window_runtime.rs shared-buffer semantics — every reader sees the
-        # same windowed contents)
-        window = q.window
-        sdef = self.streams.get(q.source)
-        if window is None and sdef is not None and sdef.shared_window is not None:
-            window = sdef.shared_window
-        if window is not None:
-            w = window
-            if w.kind == "tumbling":
-                win = f"window(__ts, '{w.params[0]} milliseconds')"
-            elif w.kind == "sliding":
-                win = (
-                    f"window(__ts, '{w.params[0]} milliseconds',"
-                    f" '{w.params[1]} milliseconds')"
-                )
-            elif w.kind == "session":
-                win = f"session_window(__ts, '{w.params[0]} milliseconds')"
-            elif w.kind == "externalTimeBatch":
-                # externalTimeBatch(ts_attr, d) (reference window/mod.rs
-                # externalTimeBatch): tumbling batches keyed on a DATA
-                # timestamp column instead of arrival time
-                attr, d = w.params[0], w.params[1]
-                win = f"window(cast({attr} AS timestamp), '{d} milliseconds')"
-            elif w.kind in ("time", "externalTime"):
-                # time(d) sliding window (reference window/mod.rs time
-                # window: events expire d after arrival). On the app's
-                # deterministic logical clock the FINAL retained set — what
-                # run()'s final-state drain sees, same contract as
-                # WINDOW('length') — is every event within d of the LAST
-                # arrival; a scalar-subquery max anchors the bound.
-                # externalTime(ts_attr, d) is the same restatement on a
-                # DATA timestamp column instead of arrival time
-                attr, d_ms = (
-                    ("__ts", w.params[0]) if w.kind == "time" else w.params[:2]
-                )
-                src = (
-                    f"(SELECT * FROM {q.source}{where}"
-                    + (" AND " if where else " WHERE ")
-                    + f"unix_micros(cast({attr} AS timestamp_ltz)) > "
-                    f"(SELECT max(unix_micros(cast({attr} AS timestamp_ltz)))"
-                    f" FROM {q.source}{where}) - {d_ms * 1000})"
-                )
-                where = ""
-            elif w.kind == "cron":
-                # cron window (window/mod.rs:1742): the buffered batch emits
-                # at every cron tick — batch restatement: each event belongs
-                # to the NEXT tick of the schedule (sql/cron.py); events
-                # after the final tick stay buffered (unemitted)
-                ticks = [(t,) for t in _cron_ticks(str(w.params[0]), self._seq)]
-                self.spark.createDataFrame(
-                    ticks, "tick timestamp"
-                ).createOrReplaceTempView("__cron_ticks")
-                src = (
-                    f"(SELECT *, (SELECT min(tick) FROM __cron_ticks"
-                    f" WHERE tick >= __ts) AS __cron_bucket FROM {q.source})"
-                )
-                bucket_ok = "__cron_bucket IS NOT NULL"
-                where = (
-                    f" WHERE ({q.where}) AND {bucket_ok}"
-                    if q.where
-                    else f" WHERE {bucket_ok}"
-                )
-                win = "__cron_bucket"
-            elif w.kind == "lengthBatch":
-                # tumbling count window (window/mod.rs:645-963): consecutive
-                # batches of N per arrival order (partial tail included),
-                # aggregated per batch — row_number bucketing, one window
-                # pass + hash agg
-                n = w.params[0]
-                part = f"PARTITION BY {pkey} " if pkey else ""
-                src = (
-                    f"(SELECT *, cast(floor((row_number() OVER ({part}ORDER BY"
-                    f" __seq) - 1) / {n}) AS INT) AS __batch"
-                    f" FROM {q.source}{where})"
-                )
-                where = ""
-                win = "__batch"
-            elif w.kind == "sort":
-                # sort(N, 'attr [asc|desc]') — keep the N best events under
-                # the comparator, evict the worst
-                # (sort_window_processor.rs:25); final retained set == batch
-                # top-K via row_number, __seq tiebreak keeps it deterministic
-                n = w.params[0]
-                attr, desc = _sort_key(w.params[1])
-                direction = "DESC" if desc else "ASC"
-                part = f"PARTITION BY {pkey} " if pkey else ""
-                src = (
-                    f"(SELECT * FROM (SELECT *, row_number() OVER ({part}"
-                    f"ORDER BY {attr} {direction}, __seq) AS __rk"
-                    f" FROM {q.source}{where}) WHERE __rk <= {n})"
-                )
-                where = ""
-            elif w.kind == "length" and not is_agg:
-                # passthrough length window → Current+Expired changelog
-                # (app_runner_windows.rs:25-45 contract)
-                return self._length_changelog(q, w.params[0])
-            elif w.kind == "length":
-                n = w.params[0]
-                part = f"PARTITION BY {pkey} " if pkey else ""
-                src = (
-                    f"(SELECT * FROM (SELECT *, row_number() OVER ({part}ORDER BY"
-                    f" __seq DESC) AS __rn FROM {q.source}{where}) WHERE __rn <= {n})"
-                )
-                where = ""
-            else:
-                # user window factory (functions/extensions.py ≙
-                # eventflux_manager.rs:272-278 add_window_factory +
-                # WindowProcessorFactory lookup): the factory transforms the
-                # source stream into the window's retained contents
-                from ..functions import extensions as ext
-
-                factory = ext.get_window_factory(w.kind)
-                if factory is None:
-                    raise ValueError(
-                        f"WINDOW('{w.kind}') unsupported in the SQL layer — "
-                        "use the DataFrame operators (operators/windows.py) "
-                        "or register an extension via add_window_factory"
-                    )
-                src_df = self.spark.table(q.source)
-                if q.where:
-                    # filter precedes the window, as in the reference chain
-                    src_df = src_df.filter(F.expr(q.where))
-                    where = ""
-                wdf = factory(src_df, list(w.params), pkey)
-                view = f"__extwin_{q.target.lower()}"
-                wdf.createOrReplaceTempView(view)
-                src = view
-            if win is not None and not is_agg:
-                raise ValueError("time windows require aggregation in SQL layer")
-        # GROUP BY [window,] [keys,] [PARTITION key]: PARTITION WITH around
-        # an aggregate = per-key aggregation (reference partition/mod.rs:9
-        # per-key query instances; note: the reference's own partition_sum
-        # test leaks state across keys — tests/app_runner_partitions.rs:64-71
-        # asserts [1,3,6] — we implement the DOCUMENTED per-key isolation)
-        group_cols = [c for c in (win, q.group_by) if c]
-        if pkey and is_agg:
-            group_cols.append(pkey)
-        group = f" GROUP BY {', '.join(group_cols)}" if group_cols else ""
-
-        carry_seq = not is_agg
-        sel = ", ".join(select.items)
-        if carry_seq:
-            # emission seq follows the DRIVING side: right-unidirectional
-            # joins emit on right arrivals (join_input_stream.rs:23-28)
-            driver = q.source
-            for _, s, _, trig in q.joins:
-                if trig == "right":
-                    driver = s
-            seq_src = f"{driver}.__seq" if q.joins else "__seq"
-            sel += f", {seq_src} AS __seq, "
-            seq_ts = f"{driver}.__ts" if q.joins else "__ts"
-            sel += f"{seq_ts} AS __ts"
-
-        join_parts = []
-        for how, s, cond, trig in q.joins:
-            if s in q.join_within:
-                # event-time bound (ON ... WITHIN d): identical predicate in
-                # batch and streaming so the two modes stay row-identical
-                us = q.join_within[s] * 1000
-                cond = (
-                    f"({cond}) AND abs(unix_micros({q.source}.__ts) - "
-                    f"unix_micros({s}.__ts)) <= {us}"
-                )
-            if trig == "left":
-                # only LEFT arrivals emit: the left event must arrive after
-                # the right one was buffered
-                cond = f"({cond}) AND {q.source}.__seq > {s}.__seq"
-            elif trig == "right":
-                cond = f"({cond}) AND {s}.__seq > {q.source}.__seq"
-            join_parts.append(
-                f" {how.upper().replace('_', ' ')} JOIN {s} ON {cond}"
+        live = watermark is not None
+        if live:
+            self._check_live(q, sel)
+        if "__seq" not in src.columns:
+            # a live chain stage after a running aggregate: filter and
+            # projection over its state, which the complete-mode drain
+            # returns final (what run() computes for the same chain)
+            out = src.filter(F.expr(sel.where)) if sel.where else src
+            return out.selectExpr(*sel.items), "complete"
+        w = sel.window
+        kind = w.kind if w else None
+        if w is not None and q.joins:
+            raise ValueError(f"WINDOW('{kind}') over a JOIN is unsupported")
+        if kind in (*_EVENT_TIME_WINDOWS, "lengthBatch") and not sel.is_agg:
+            raise ValueError(f"WINDOW('{kind}'): time windows require aggregation")
+        df = self._join(q, src, frame_of, watermark) if q.joins else src
+        if sel.where:
+            # live, the sentinel survives the predicate: an event-time
+            # operator or a rate limiter downstream needs it to flush
+            pads = [f"__seq_{s}" for how, s, _, _ in q.joins if how != "inner"]
+            df = df.filter(
+                keep_sentinel(sel.where, "__seq", *pads) if live else F.expr(sel.where)
             )
-        join_sql = "".join(join_parts)
-        sql = f"SELECT {sel} FROM {src}{join_sql}{where}{group}"
-        if q.having:
-            sql += f" HAVING {q.having}"
-        if q.order_by:
-            sql += f" ORDER BY {q.order_by}"
-        if q.limit is not None:
-            sql += f" LIMIT {q.limit}"
-        if q.offset is not None:
-            sql += f" OFFSET {q.offset}"
-        out = self.spark.sql(sql)
+        group: list[Column] = []
+        out, mode = None, "append"
+        if kind in _EVENT_TIME_WINDOWS:
+            if kind == "cron":
+                df = df.withColumn("__cron", self._cron_bucket(w))
+                df = df.filter(F.col("__cron").isNotNull())
+                group.append(F.col("__cron"))
+            else:
+                group.append(_window_col(w))
+            if live and kind in _WATERMARK_WINDOWS:
+                df = df.withWatermark("__ts", watermark)
+        elif kind == "length" and not sel.is_agg:
+            # passthrough length window → Current+Expired changelog
+            # (app_runner_windows.rs:25-45 contract)
+            from ..operators.windows import length_window_changelog
 
-        if not carry_seq:
+            keys = [sel.pkey] if sel.pkey else None
+            out = length_window_changelog(df, w.params[0], ["__seq"], keys)
+            out = out.selectExpr(*sel.items, "emit_seq AS __seq", "__ts")
+        elif live and kind in ("length", "lengthBatch"):
+            return self._count_window_stream(q, sel, df)
+        elif live and kind is not None:
+            # live time(d) / sort(N, attr) windows (sort_window_processor.rs
+            # :25): stateful retention on the app's logical clock; the
+            # sentinel flushes the FINAL retained set, the batch
+            # restatement's final-state contract
+            if kind == "time":
+                df = P.time_window_stream(df, int(w.params[0]))
+            else:
+                attr, desc = _sort_key(w.params[1])
+                df = P.sort_window_stream(df, int(w.params[0]), attr, not desc)
+        elif kind is not None:
+            df = self._retain(sel, df)
+            if kind == "lengthBatch":
+                group.append(F.col("__batch"))
+        if out is None and sel.is_agg:
+            if live and kind not in _WATERMARK_WINDOWS:
+                # no watermark closes these groups: the sentinel drops, and
+                # the complete-mode drain returns their final state
+                df, mode = drop_sentinel(df), "complete"
+            out = _aggregate(df, sel, group + [F.expr(k) for k in sel.group])
+        elif out is None:
+            seq, ts = _emission(q)
+            out = df.selectExpr(*sel.items, f"{seq} AS __seq", f"{ts} AS __ts")
+        if live:
+            if q.output_rate is not None:
+                from ..streaming.ratelimit import output_rate_stream
+
+                # OUTPUT rate limiting runs INSIDE the live pipeline
+                # (ratelimit/*.rs at select_processor.rs:30-38). An INNER
+                # join dropped the sentinels, so the limiter gets its flush
+                # event from a row-less feed unioned AFTER the join, behind
+                # one empty file per data chunk
+                if any(how == "inner" for how, _, _, _ in q.joins):
+                    out = out.unionByName(
+                        feeds.open(out.schema, lead_empty=feeds.n_chunks)
+                    )
+                out = output_rate_stream(out, *q.output_rate)
+            return out, mode
+        if sel.order:
+            out = out.orderBy(*sel.order)
+        if sel.offset is not None:
+            out = out.offset(sel.offset)
+        if sel.limit is not None:
+            out = out.limit(sel.limit)
+        if sel.is_agg:
             # aggregates get fresh emission seqs in deterministic group order
+            out = out.drop(*[f"__o{i}" for i in range(len(sel.order_aggs))])
             out = out.withColumn(
                 "__seq",
                 F.row_number().over(Window.orderBy(*out.columns)) + F.lit(self._seq),
             ).withColumn("__ts", F.lit(_EPOCH).cast("timestamp"))
-        elif q.order_by:
+        elif sel.order:
             # ORDER BY defines the emission order of the output chunk
             # (order_by_event_comparator.rs applied at select_processor.rs:531)
-            order_cols = []
-            for item in q.order_by.split(","):
-                item = item.strip()
-                if item.upper().endswith(" DESC"):
-                    order_cols.append(F.expr(item[:-5].strip()).desc())
-                else:
-                    order_cols.append(F.expr(re.sub(r"\s+ASC$", "", item, flags=re.IGNORECASE)))
-            out = out.drop("__seq").withColumn(
-                "__seq", F.row_number().over(Window.orderBy(*order_cols))
-            )
+            out = out.withColumn("__seq", F.row_number().over(Window.orderBy(*sel.order)))
         if q.output_rate is not None:
-            mode, value, unit = q.output_rate
-            if unit == "EVENTS":
-                out = out.withColumn(
-                    "__rn", F.row_number().over(Window.orderBy("__seq"))
+            out = _rate_limit(out, *q.output_rate)
+        return out, mode
+
+    def _check_live(self, q: QueryDef, sel: "_Select") -> None:
+        """Raise a ``ValueError`` naming each clause ``run_streaming`` cannot
+        honour: the live lowering never drops a clause ``run()`` reads."""
+        kind = sel.window.kind if sel.window else None
+        for clause, value in (
+            ("ORDER BY", sel.order), ("LIMIT", sel.limit), ("OFFSET", sel.offset)
+        ):
+            if value is not None:
+                raise ValueError(
+                    f"streaming {clause} is unsupported: a live stream has no "
+                    "final set of rows to sort or cut"
                 )
-                if mode == "ALL":
-                    # complete n-blocks only; trailing partial block stays
-                    # buffered (events_output_rate.rs ALL behavior)
-                    total = out.withColumn(
-                        "__n", F.count(F.lit(1)).over(Window.partitionBy())
-                    )
-                    out = total.filter(
-                        F.col("__rn") <= F.floor(F.col("__n") / value) * value
-                    ).drop("__rn", "__n")
-                else:
-                    # FIRST via 0-based position: EVERY 1 emits every event
-                    keep = (
-                        ((F.col("__rn") - 1) % value == 0)
-                        if mode == "FIRST"
-                        else (F.col("__rn") % value == 0)
-                    )
-                    out = out.filter(keep).drop("__rn")
-            else:  # TIME (time_output_rate.rs): d-wide buckets of event time
-                if mode != "ALL":
-                    bucket = F.floor(
-                        F.col("__ts").cast("timestamp_ltz").cast("double")
-                        * 1000 / value
-                    )
-                    order = (
-                        F.col("__seq").asc() if mode == "FIRST" else F.col("__seq").desc()
-                    )
-                    out = out.withColumn(
-                        "__rn", F.row_number().over(Window.partitionBy(bucket).orderBy(order))
-                    ).filter(F.col("__rn") == 1).drop("__rn")
-                # ALL EVERY d TIME: every buffered event emits at the next
-                # tick — batch restatement is a passthrough
+        if kind not in (None, *_EVENT_TIME_WINDOWS, "time", "sort", "length", "lengthBatch"):
+            raise ValueError(f"streaming WINDOW('{kind}') is unsupported")
+        if kind == "length" and not sel.is_agg:
+            raise ValueError(
+                "streaming WINDOW('length') passthrough is unsupported: "
+                "run() emits its Current+Expired changelog"
+            )
+        if kind in ("sort", "length", "lengthBatch") and sel.pkey:
+            raise ValueError(
+                f"streaming PARTITION WITH over WINDOW('{kind}') is "
+                "unsupported: the live count and sort windows are unkeyed"
+            )
+        if kind in ("length", "lengthBatch") and sel.having:
+            raise ValueError(f"streaming HAVING over WINDOW('{kind}') is unsupported")
+        if kind in ("time", "sort") and q.output_rate is not None:
+            raise ValueError(
+                f"streaming OUTPUT rate limiting over WINDOW('{kind}') is "
+                "unsupported"
+            )
+        for how, s, _, _ in q.joins:
+            if self.streams[s].is_table:
+                continue
+            if any(u.target == s for u in self.queries):
+                raise ValueError(
+                    f"streaming JOIN partner {s} is fed by a query: a live "
+                    "partner feed carries only the events sent to it"
+                )
+            if sel.is_agg:
+                raise ValueError(
+                    "streaming aggregates over a stream-stream JOIN are unsupported"
+                )
+            if how == "inner":
+                continue
+            within_ms = q.join_within.get(s)
+            if within_ms is None:
+                raise ValueError(
+                    "streaming outer stream-stream joins need an "
+                    "event-time bound: JOIN ... ON cond WITHIN d"
+                )
+            if len(q.joins) != 1:
+                raise ValueError(
+                    "streaming outer stream-stream joins support a single join"
+                )
+            if within_ms >= 6 * 86_400_000:
+                # feeds' sentinels sit a week apart, so the bound itself
+                # keeps them from ever matching each other
+                raise ValueError(
+                    "streaming outer-join WITHIN bounds must be under 6 days"
+                )
+
+    def _join(
+        self, q: QueryDef, df: DataFrame, frame_of, watermark: str | None = None
+    ) -> DataFrame:
+        """A query's joins. Each partner's ``__seq``/``__ts`` become
+        ``__seq_<S>``/``__ts_<S>``, and its ON condition gains the ``WITHIN
+        d`` event-time bound and the UNIDIRECTIONAL arrival order: only the
+        marked side's arrivals emit, against partner rows that arrived
+        before them (join_input_stream.rs:23-28).
+
+        Live, an INNER join needs no event time, so the source's sentinel
+        drops before it (its neutral key values could join real partner
+        rows, or fail to, depending on the data). An outer stream join
+        keeps it and watermarks both sides: Spark expires the symmetric
+        join state and emits the unmatched pads once both pass the bound
+        (join_processor.rs:104-112).
+        Its bound is the range form Spark's state-cleanup analyzer
+        recognizes: plain interval arithmetic on the two event-time
+        columns. No sentinel-exclusion conjunct goes here: a single-side
+        predicate is pushed below that side's watermark node and hides the
+        sentinel from it; the drain drops sentinel pads instead."""
+        streams = {s for _, s, _, _ in q.joins if not self.streams[s].is_table}
+        live_outer = watermark is not None and any(
+            how != "inner" and s in streams for how, s, _, _ in q.joins
+        )
+        if live_outer:
+            df = df.withWatermark("__ts", watermark)
+        elif watermark is not None and any(how == "inner" for how, _, _, _ in q.joins):
+            df = drop_sentinel(df)
+        out = df.alias(q.source)
+        for how, s, cond, trig in q.joins:
+            p = frame_of(s, how).withColumnRenamed("__seq", f"__seq_{s}")
+            p = p.withColumnRenamed("__ts", f"__ts_{s}")
+            if live_outer and s in streams:
+                p = p.withWatermark(f"__ts_{s}", watermark)
+            on = F.expr(cond)
+            if s in q.join_within:
+                d = f"INTERVAL {q.join_within[s]} MILLISECONDS"
+                on = on & F.expr(f"__ts_{s} >= __ts - {d} AND __ts_{s} <= __ts + {d}")
+            if trig == "left":
+                on = on & (F.col("__seq") > F.col(f"__seq_{s}"))
+            elif trig == "right":
+                on = on & (F.col(f"__seq_{s}") > F.col("__seq"))
+            out = out.join(p.alias(s), on, how)
         return out
 
-    def _length_changelog(self, q: QueryDef, n: int) -> DataFrame:
-        """WINDOW('length', N) passthrough: emit Current rows plus Expired
-        eviction records, expired-before-current within an arrival."""
-        from ..operators.windows import length_window_changelog
+    def _retain(self, sel: "_Select", df: DataFrame) -> DataFrame:
+        """The batch restatement of a count, sort or time window or a user
+        window factory: the rows the window holds at the end (``run()``'s
+        final-state contract). lengthBatch tags each row with its
+        ``__batch`` instead."""
+        w = sel.window
+        part = Window.partitionBy(*[sel.pkey] if sel.pkey else [])
+        if w.kind in ("time", "externalTime"):
+            # time(d) (reference window/mod.rs: events expire d after
+            # arrival): on the app's deterministic logical clock the FINAL
+            # retained set is every event within d of the LAST arrival.
+            # externalTime(ts_attr, d) is the same on a DATA timestamp
+            attr, d_ms = ("__ts", w.params[0]) if w.kind == "time" else w.params[:2]
+            t = F.unix_micros(F.col(attr).cast("timestamp_ltz"))
+            df = df.withColumn("__last", F.max(t).over(Window.partitionBy()))
+            return df.filter(t > F.col("__last") - d_ms * 1000).drop("__last")
+        if w.kind == "sort":
+            # sort(N, 'attr [asc|desc]') keeps the N best events under the
+            # comparator (sort_window_processor.rs:25); __seq breaks ties
+            attr, desc = _sort_key(w.params[1])
+            best = F.col(attr).desc() if desc else F.col(attr).asc()
+            rank = F.row_number().over(part.orderBy(best, "__seq"))
+            return df.withColumn("__rk", rank).filter(F.col("__rk") <= w.params[0]).drop("__rk")
+        if w.kind == "length":
+            rank = F.row_number().over(part.orderBy(F.col("__seq").desc()))
+            return df.withColumn("__rk", rank).filter(F.col("__rk") <= w.params[0]).drop("__rk")
+        if w.kind == "lengthBatch":
+            # tumbling count window (window/mod.rs:645-963): consecutive
+            # batches of N in arrival order, partial tail included
+            nth = F.row_number().over(part.orderBy("__seq")) - 1
+            return df.withColumn("__batch", F.floor(nth / w.params[0]).cast("int"))
+        # user window factory (functions/extensions.py ≙
+        # eventflux_manager.rs:272-278 add_window_factory +
+        # WindowProcessorFactory lookup): the factory transforms the
+        # filtered stream into the window's retained contents
+        from ..functions import extensions as ext
 
-        df = self.stream_df(q.source)
-        if q.where:
-            df = df.filter(F.expr(q.where))
-        pkey = q.partition_keys.get(q.source)
-        out = length_window_changelog(
-            df, n, order_cols=["__seq"], keys=[pkey] if pkey else None
-        )
-        return out.selectExpr(*_Select(q).items, "emit_seq AS __seq", "__ts")
+        factory = ext.get_window_factory(w.kind)
+        if factory is None:
+            raise ValueError(
+                f"WINDOW('{w.kind}') unsupported in the SQL layer — "
+                "use the DataFrame operators (operators/windows.py) "
+                "or register an extension via add_window_factory"
+            )
+        return factory(df, list(w.params), sel.pkey)
+
+    def _count_window_stream(
+        self, q: QueryDef, sel: "_Select", df: DataFrame
+    ) -> tuple[DataFrame, str]:
+        """A live length(N) / lengthBatch(N) window: a stateful operator
+        that evaluates the query's one aggregate itself."""
+        from ..streaming import pipelines as P
+
+        w = sel.window
+        am = re.fullmatch(
+            r"\s*(SUM|AVG|MIN|MAX|COUNT)\s*\(\s*(\w+)\s*\)\s*",
+            sel.agg_items[0][0],
+            re.IGNORECASE,
+        ) if len(sel.items) == 1 and sel.agg_items and not sel.keys else None
+        if am is None:
+            raise ValueError(
+                f"streaming WINDOW('{w.kind}') supports a single "
+                "un-keyed SUM/AVG/MIN/MAX/COUNT aggregate"
+            )
+        out_name = sel.agg_items[0][1] or "agg"
+        args = (int(w.params[0]), am.group(1).lower(), am.group(2), out_name)
+        if w.kind == "length":
+            # per-arrival sliding count window; the drain keeps only the
+            # final emission to honor run()'s final-state contract (the
+            # last N events' aggregate)
+            out, mode = P.length_window_stream(drop_sentinel(df), *args), "last"
+        else:
+            # emit + reset every N events; the sentinel flushes the partial
+            # tail batch (no timer needed)
+            out = P.length_batch_stream(df, *args).withColumnRenamed("batch_id", "__seq")
+            mode = "append"
+        # cast the double emission to the declared target type
+        decl = dict(self.streams[q.target].columns)
+        if out_name in decl:
+            out = out.withColumn(out_name, F.col(out_name).cast(decl[out_name]))
+        return out, mode
+
+    def _cron_bucket(self, w) -> Column:
+        """The cron tick an event belongs to (window/mod.rs:1742, restated
+        on event time): the first tick of the schedule at or after the
+        event, looked up in a literal tick spine over the app horizon
+        (sql/cron.py). Null past the last tick: those events stay
+        buffered, unemitted."""
+        from .cron import Cron
+
+        expr = str(w.params[0])
+        horizon = _EPOCH + datetime.timedelta(seconds=self._seq + 61)
+        ticks = Cron(expr).ticks(_EPOCH, horizon)
+        if not ticks:
+            raise ValueError(f"cron {expr!r} fires nowhere in the app horizon")
+        spine = F.array(*[
+            F.lit(int(t.replace(tzinfo=datetime.timezone.utc).timestamp() * 1e6))
+            .cast("bigint")
+            for t in ticks
+        ])
+        at = F.unix_micros(F.col("__ts").cast("timestamp"))
+        return F.array_min(F.filter(spine, lambda t: t >= at))
 
     # -- pattern queries ---------------------------------------------------
-
-    def _run_pattern_query(self, q: QueryDef, stack: frozenset) -> DataFrame:
-        return self._lower_pattern(q, lambda s: self.stream_df(s, stack))
 
     def _lower_pattern(
         self, q: QueryDef, frame_of, watermark: str | None = None
@@ -1582,6 +1317,12 @@ class EventFluxApp:
         from ..cep.batch import match_absent_batch
         from ..cep.streaming import match_absent_stream, match_pattern_stream
 
+        sel = _Select(q, self.streams)
+        _unread("a PATTERN query", (
+            ("WHERE", sel.where), ("GROUP BY", sel.keys), ("HAVING", sel.having),
+            ("ORDER BY", sel.order), ("LIMIT", sel.limit), ("OFFSET", sel.offset),
+            ("OUTPUT", q.output_rate),
+        ))
         p: PatternDef = q.pattern
         if p.absent is not None and len(p.steps) != 1:
             raise ValueError(
@@ -1685,26 +1426,150 @@ class EventFluxApp:
 
 
 class _Select:
-    """A query's SELECT list and GROUP BY, parsed once."""
+    """A query's clauses, parsed once: the one reading that ``run()`` and
+    ``run_streaming`` both lower (:meth:`EventFluxApp._lower`)."""
 
-    def __init__(self, q: QueryDef):
+    def __init__(self, q: QueryDef, streams: dict[str, StreamDef]):
+        sd = streams.get(q.source)
+        self.where = q.where
+        #: the inline window, else the named (CREATE WINDOW) source's: every
+        #: reader of a named window sees the same windowed contents
+        #: (window_runtime.rs shared-buffer semantics)
+        self.window = q.window or (sd.shared_window if sd else None)
+        #: PARTITION WITH key of the source (partition/mod.rs:9 per-key
+        #: query instances): it keys aggregates and count/sort windows
+        self.pkey = q.partition_keys.get(q.source)
         self.keys = [g.strip() for g in (q.group_by or "").split(",") if g.strip()]
         self.agg_items = [(e, a) for e, a in q.select_items if _is_agg_expr(e)]
         self.is_agg = bool(q.group_by) or bool(self.agg_items)
+        #: GROUP BY keys plus the PARTITION key: per-key aggregate isolation.
+        #: The reference's own partition_sum test leaks state across keys
+        #: (tests/app_runner_partitions.rs:64-71 asserts [1,3,6]); this is
+        #: the DOCUMENTED per-key isolation
+        self.group = self.keys + ([self.pkey] if self.pkey and self.is_agg else [])
         #: the SELECT items as SQL text, for ``selectExpr``
         self.items = [f"{e} AS {a}" if a else e for e, a in q.select_items]
-        self.aggs = [F.expr(e).alias(a) if a else F.expr(e) for e, a in self.agg_items]
-        #: the output columns of an aggregate, in SELECT order
-        self.outs = [F.col(a or e) for e, a in q.select_items]
+        inputs = {
+            c for s in (q.source, *[j[1] for j in q.joins]) if s in streams
+            for c, _ in streams[s].columns
+        }
+
+        def aggregate(text: str) -> str:
+            # an aggregate over the input rows, in which a SELECT alias that
+            # is no input column stands for its expression
+            for e, a in q.select_items:
+                if a and a not in inputs:
+                    text = re.sub(rf"(?<![\w.]){a}\b", f"({e})", text)
+            return text
+
+        #: HAVING, one more aggregate of the GROUP BY
+        self.having = aggregate(q.having) if q.having else None
+        #: ORDER BY as sort columns. An aggregate sorts on hidden aggregates
+        #: ``__o<i>`` (``order_aggs``) computed with its GROUP BY
+        self.order, self.order_aggs = None, []
+        for i, item in enumerate(_split_top(q.order_by or "")):
+            m = re.fullmatch(r"(.+?)\s+(ASC|DESC)", item.strip(), re.IGNORECASE | re.DOTALL)
+            e, desc = (m.group(1), m.group(2).upper() == "DESC") if m else (item, False)
+            if self.is_agg:
+                self.order_aggs.append(F.expr(aggregate(e)).alias(f"__o{i}"))
+            c = F.col(f"__o{i}") if self.is_agg else F.expr(e)
+            self.order = (self.order or []) + [c.desc() if desc else c]
+        self.limit, self.offset = q.limit, q.offset
 
 
-def _running_agg(stream: DataFrame, q: QueryDef, sel: _Select) -> DataFrame:
-    """A non-windowed running aggregation over a live stream. No
-    event-time operator follows one, so the sentinel drops first."""
-    src = drop_sentinel(stream)
-    if q.where:
-        src = src.filter(F.expr(q.where))
-    return src.groupBy(*sel.keys).agg(*sel.aggs).select(*sel.outs)
+def _window_col(w) -> Column:
+    """The event-time window column of a tumbling, sliding, session or
+    externalTimeBatch window. externalTimeBatch(ts_attr, d) (reference
+    window/mod.rs) tumbles on a DATA timestamp column instead of arrival
+    time."""
+    if w.kind == "externalTimeBatch":
+        return F.window(F.col(w.params[0]).cast("timestamp"), f"{w.params[1]} milliseconds")
+    ms = [f"{p} milliseconds" for p in w.params]
+    if w.kind == "session":
+        return F.session_window("__ts", ms[0])
+    return F.window("__ts", *ms)
+
+
+def _aggregate(df: DataFrame, sel: _Select, group: list[Column]) -> DataFrame:
+    """GROUP BY ``group`` with the SELECT items as the aggregate list and
+    HAVING and the ORDER BY keys as more, hidden aggregates. The items come
+    out in SELECT order, named as Spark SQL names them, followed by the
+    ``__o<i>`` sort keys."""
+    hidden = [f"__g{i}" for i in range(len(group))]
+    having = [F.expr(sel.having).alias("__having")] if sel.having else []
+    out = df.groupBy(*[c.alias(h) for c, h in zip(group, hidden)]).agg(
+        *[F.expr(i) for i in sel.items], *having, *sel.order_aggs
+    )
+    if having:
+        out = out.filter("__having")
+    return out.drop(*hidden, "__having")
+
+
+def _check_snapshot(q: QueryDef, sel: _Select) -> None:
+    """The query shape OUTPUT SNAPSHOT takes in both modes; any other
+    clause raises rather than being ignored."""
+    w = sel.window
+    if q.pattern is not None or not sel.is_agg or (w is not None and w.kind != "tumbling"):
+        raise ValueError(
+            "OUTPUT SNAPSHOT supports non-windowed or tumbling-windowed "
+            "aggregating queries"
+        )
+    _unread("OUTPUT SNAPSHOT", (
+        ("JOIN", q.joins), ("PARTITION WITH", sel.pkey), ("HAVING", sel.having),
+        ("ORDER BY", sel.order), ("LIMIT", sel.limit), ("OFFSET", sel.offset),
+    ))
+
+
+def _unread(what: str, clauses) -> None:
+    """Raise for the first of ``(clause, parsed value)`` that is set:
+    ``what`` does not read it, in either mode."""
+    for clause, value in clauses:
+        if value not in (None, []):
+            raise ValueError(f"{what} with {clause} is unsupported")
+
+
+def _emission(q: QueryDef) -> tuple[str, str]:
+    """The ``__seq``/``__ts`` a row-level result carries: the driving
+    side's. A right-UNIDIRECTIONAL join emits on partner arrivals
+    (join_input_stream.rs:23-28); a pad of an outer join takes the
+    partner's."""
+    seq, ts = "__seq", "__ts"
+    for how, s, _, trig in q.joins:
+        if trig == "right":
+            seq, ts = f"__seq_{s}", f"__ts_{s}"
+        elif how != "inner":
+            seq, ts = f"coalesce({seq}, __seq_{s})", f"coalesce({ts}, __ts_{s})"
+    return seq, ts
+
+
+def _rate_limit(out: DataFrame, mode: str, value: int, unit: str) -> DataFrame:
+    """The batch restatement of OUTPUT FIRST|LAST|ALL EVERY n EVENTS / d
+    TIME over rows in ``__seq`` order."""
+    if unit == "EVENTS":
+        out = out.withColumn("__rn", F.row_number().over(Window.orderBy("__seq")))
+        if mode == "ALL":
+            # complete n-blocks only; trailing partial block stays
+            # buffered (events_output_rate.rs ALL behavior)
+            total = out.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy()))
+            return total.filter(
+                F.col("__rn") <= F.floor(F.col("__n") / value) * value
+            ).drop("__rn", "__n")
+        # FIRST via 0-based position: EVERY 1 emits every event
+        keep = (
+            ((F.col("__rn") - 1) % value == 0)
+            if mode == "FIRST"
+            else (F.col("__rn") % value == 0)
+        )
+        return out.filter(keep).drop("__rn")
+    # TIME (time_output_rate.rs): d-wide buckets of event time. ALL EVERY d
+    # TIME emits every buffered event at the next tick — a passthrough
+    if mode == "ALL":
+        return out
+    bucket = F.floor(F.col("__ts").cast("timestamp_ltz").cast("double") * 1000 / value)
+    order = F.col("__seq").asc() if mode == "FIRST" else F.col("__seq").desc()
+    return out.withColumn(
+        "__rn", F.row_number().over(Window.partitionBy(bucket).orderBy(order))
+    ).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def _partition_key(q: QueryDef) -> Column:
@@ -1724,24 +1589,13 @@ def _partition_key(q: QueryDef) -> Column:
     return F.col(next(iter(key_cols))).cast("string")
 
 
-def _tumbling_bucket(q: QueryDef) -> Column:
+def _tumbling_bucket(w) -> Column:
     """Index of the tumbling window each event falls in (OUTPUT SNAPSHOT
     over a tumbling window keys its state by it)."""
-    wms = int(q.window.params[0])
     return F.floor(
-        F.col("__ts").cast("timestamp_ltz").cast("double") * 1000.0 / F.lit(float(wms))
+        F.col("__ts").cast("timestamp_ltz").cast("double") * 1000.0
+        / F.lit(float(int(w.params[0])))
     ).cast("bigint")
-
-
-def _cron_ticks(expr: str, seq: int) -> list[datetime.datetime]:
-    """A cron window's ticks over the app horizon (sql/cron.py)."""
-    from .cron import Cron
-
-    horizon = _EPOCH + datetime.timedelta(seconds=seq + 61)
-    ticks = Cron(expr).ticks(_EPOCH, horizon)
-    if not ticks:
-        raise ValueError(f"cron {expr!r} fires nowhere in the app horizon")
-    return ticks
 
 
 def _sort_key(spec) -> tuple[str, bool]:

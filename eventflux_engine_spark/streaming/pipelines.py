@@ -18,7 +18,6 @@ from ..sql.feeds import SENTINEL_SEQ
 
 __all__ = [
     "tumbling_stream",
-    "sliding_stream",
     "session_stream",
     "group_agg_update_stream",
     "stream_stream_join",
@@ -44,25 +43,6 @@ def tumbling_stream(
     return (
         _ltz(df, ts_col).withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), duration).alias("w"), *keys)
-        .agg(*aggs)
-        .withColumn("window_start", F.col("w.start"))
-        .withColumn("window_end", F.col("w.end"))
-        .drop("w")
-    )
-
-
-def sliding_stream(
-    df: DataFrame,
-    size: str,
-    slide: str,
-    keys: list[str],
-    aggs: list[Column],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    return (
-        _ltz(df, ts_col).withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), size, slide).alias("w"), *keys)
         .agg(*aggs)
         .withColumn("window_start", F.col("w.start"))
         .withColumn("window_end", F.col("w.end"))

@@ -2417,3 +2417,57 @@ class TestSortWindowSQL:
         batch = app.run("Out")
         streamed = app.run_streaming("Out", n_chunks=4)
         assert streamed == batch == [(90,)]
+
+
+class TestSessionCatalog:
+    def test_run_leaves_the_session_catalog_alone(self, spark):
+        # run() lowers every clause as DataFrame operations: no temp view of
+        # a stream, a cron tick spine or a window factory's output is made,
+        # and a user's view named like a stream keeps its contents
+        from eventflux_engine_spark.functions import extensions as ext
+
+        ext.add_window_factory("every_other", lambda df, params, pkey: df.filter("__seq % 2 = 0"))
+        spark.createDataFrame([("mine",)], "note string").createOrReplaceTempView("S")
+        before = sorted(t.name for t in spark.catalog.listTables())
+        app = EventFluxApp(spark).execute(
+            """
+            CREATE STREAM S (k INT, v INT);
+            CREATE TABLE T (k INT, label VARCHAR);
+            CREATE STREAM Joined (v INT, label VARCHAR);
+            CREATE STREAM Ticks (total BIGINT);
+            CREATE STREAM Every (total BIGINT);
+            INSERT INTO Joined SELECT S.v, T.label FROM S JOIN T ON S.k = T.k;
+            INSERT INTO Ticks SELECT SUM(v) AS total FROM S WINDOW('cron', '*/3 * * * * *');
+            INSERT INTO Every SELECT SUM(v) AS total FROM S WINDOW('every_other');
+            """
+        )
+        app.send("T", [(1, "one")])
+        app.send("S", [(1, 10), (2, 20), (1, 30), (2, 40)])
+        assert app.run("Joined") == [(10, "one"), (30, "one")]
+        assert app.run("Ticks") == [(40,), (60,)]  # ticks at 3 s and 6 s
+        assert app.run("Every") == [(60,)]  # seq 2 and 4
+        try:
+            assert sorted(t.name for t in spark.catalog.listTables()) == before
+            assert spark.table("S").collect()[0].note == "mine"
+        finally:
+            spark.catalog.dropTempView("S")
+
+
+@pytest.mark.parametrize(
+    "tail, want",
+    [
+        ("ORDER BY SUM(v) DESC LIMIT 1", [("b", 230)]),
+        ("ORDER BY total LIMIT 1", [("a", 107)]),
+        ("HAVING total > 200 ORDER BY sym", [("b", 230)]),
+    ],
+)
+def test_aggregate_order_by_reads_aggregates_and_aliases(spark, tail, want):
+    app = EventFluxApp(spark).execute(
+        f"""
+        CREATE STREAM S (sym VARCHAR, v INT);
+        CREATE STREAM Out (sym VARCHAR, total BIGINT);
+        INSERT INTO Out SELECT sym, SUM(v) AS total FROM S GROUP BY sym {tail};
+        """
+    )
+    app.send("S", [("a", 1), ("a", 2), ("b", 10), ("a", 4), ("b", 20), ("a", 100), ("b", 200)])
+    assert app.run("Out") == want

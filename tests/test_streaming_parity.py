@@ -5,6 +5,8 @@ and NULL group keys."""
 
 import datetime
 
+import pytest
+
 from eventflux_engine_spark.sql.app import EventFluxApp
 
 EVENTS = [(0, 5), (1, 6), (0, 7)]
@@ -155,3 +157,252 @@ class TestNullGroupKey:
 
     def test_tumbling_window(self, spark):
         self._check(spark, "WINDOW('tumbling', 1 MINUTE)")
+
+
+# -- one clause lowering: every clause run() reads, run_streaming() reads too
+
+SYM = [("a", 1), ("a", 2), ("b", 10), ("a", 4), ("b", 20), ("a", 100), ("b", 200)]
+SYM_DDL = "CREATE STREAM S (sym VARCHAR, v INT);"
+_ETS = datetime.datetime(2024, 6, 1)
+
+
+def _parity_sent(spark, sql, sends, **kw):
+    """``_parity`` over events sent to several streams, in list order."""
+    app = EventFluxApp(spark).execute(sql)
+    for stream, rows in sends:
+        app.send(stream, rows)
+    batch = app.run("Out")
+    assert sorted(app.run_streaming("Out", **kw), key=str) == sorted(batch, key=str)
+    return sorted(batch, key=str)
+
+
+CLAUSE_PARITY = {
+    "having": (
+        SYM_DDL + """
+        CREATE STREAM Out (sym VARCHAR, total BIGINT);
+        INSERT INTO Out SELECT sym, SUM(v) AS total FROM S
+        GROUP BY sym HAVING SUM(v) > 110;
+        """,
+        [("S", SYM)],
+        [("b", 230)],
+    ),
+    "tumbling_having": (
+        SYM_DDL + """
+        CREATE STREAM Out (sym VARCHAR, total BIGINT);
+        INSERT INTO Out SELECT sym, SUM(v) AS total FROM S
+        WINDOW('tumbling', 5 SECONDS) GROUP BY sym HAVING SUM(v) > 10;
+        """,
+        [("S", SYM)],
+        [("a", 100), ("b", 200), ("b", 30)],
+    ),
+    "having_on_alias": (
+        SYM_DDL + """
+        CREATE STREAM Out (sym VARCHAR, total BIGINT);
+        INSERT INTO Out SELECT sym, SUM(v) AS total FROM S
+        GROUP BY sym HAVING total > 110;
+        """,
+        [("S", SYM)],
+        [("b", 230)],
+    ),
+    "partition_sum": (
+        SYM_DDL + """
+        CREATE STREAM Out (total BIGINT);
+        PARTITION WITH (sym OF S)
+        BEGIN
+            INSERT INTO Out SELECT SUM(v) AS total FROM S;
+        END;
+        """,
+        [("S", SYM)],
+        [(107,), (230,)],
+    ),
+    "partition_tumbling": (
+        SYM_DDL + """
+        CREATE STREAM Out (total BIGINT);
+        PARTITION WITH (sym OF S)
+        BEGIN
+            INSERT INTO Out SELECT SUM(v) AS total FROM S
+            WINDOW('tumbling', 5 SECONDS);
+        END;
+        """,
+        [("S", SYM)],
+        [(100,), (200,), (30,), (7,)],
+    ),
+    "named_tumbling_window": (
+        SYM_DDL + """
+        CREATE WINDOW W (sym VARCHAR, v INT) WINDOW('tumbling', 5 SECONDS);
+        CREATE STREAM Out (sym VARCHAR, total BIGINT);
+        INSERT INTO W SELECT sym, v FROM S;
+        INSERT INTO Out SELECT sym, SUM(v) AS total FROM W GROUP BY sym;
+        """,
+        [("S", SYM)],
+        [("a", 100), ("a", 7), ("b", 200), ("b", 30)],
+    ),
+    "external_time_batch": (
+        """
+        CREATE STREAM S (ets TIMESTAMP, v INT);
+        CREATE STREAM Out (total BIGINT);
+        INSERT INTO Out SELECT SUM(v) AS total FROM S
+        WINDOW('externalTimeBatch', 'ets', 10 SECONDS);
+        """,
+        # data times scrambled against arrival; one event per 10 s bucket
+        [("S", [(_ETS + datetime.timedelta(seconds=s), v)
+                for s, v in ((1, 1), (25, 4), (12, 2), (38, 8))])],
+        [(1,), (2,), (4,), (8,)],
+    ),
+    "unidirectional_join": (
+        """
+        CREATE STREAM L (id INT, lv INT);
+        CREATE STREAM R (id INT, rv INT);
+        CREATE STREAM Out (lv INT, rv INT);
+        INSERT INTO Out SELECT L.lv, R.rv FROM L UNIDIRECTIONAL JOIN R
+        ON L.id = R.id;
+        """,
+        # only L arrivals emit, against the R rows that arrived before them
+        [("R", [(1, 10)]), ("L", [(1, 1)]), ("R", [(1, 20)]), ("L", [(1, 2)])],
+        [(1, 10), (2, 10), (2, 20)],
+    ),
+    "select_order_differs_from_group_order": (
+        SYM_DDL + """
+        CREATE STREAM Out (total BIGINT, sym VARCHAR);
+        INSERT INTO Out SELECT SUM(v) AS total, sym FROM S
+        WINDOW('tumbling', 5 SECONDS) GROUP BY sym;
+        """,
+        [("S", SYM)],
+        [(100, "a"), (200, "b"), (30, "b"), (7, "a")],
+    ),
+    "table_join_rate_limit": (
+        """
+        CREATE STREAM S (k INT, v INT);
+        CREATE TABLE T (k INT, label VARCHAR);
+        CREATE STREAM Out (v INT, label VARCHAR);
+        INSERT INTO Out SELECT S.v, T.label FROM S JOIN T ON S.k = T.k
+        OUTPUT LAST EVERY 3 SECONDS;
+        """,
+        # the last 3 s bucket flushes although the join drops the sentinel
+        [("T", [(1, "one")]), ("S", [(1, v) for v in range(8)])],
+        [(1, "one"), (4, "one"), (7, "one")],
+    ),
+    # no app test read these two windows in either mode
+    "sliding": (
+        SYM_DDL + """
+        CREATE STREAM Out (sym VARCHAR, total BIGINT);
+        INSERT INTO Out SELECT sym, SUM(v) AS total FROM S
+        WINDOW('sliding', 4 SECONDS, 2 SECONDS) GROUP BY sym;
+        """,
+        [("S", SYM)],
+        # windows [-2,2) [0,4) [2,6) [4,8) [6,10)
+        [("a", 100), ("a", 104), ("a", 3), ("a", 7),
+         ("b", 10), ("b", 200), ("b", 220), ("b", 30)],
+    ),
+    "session": (
+        SYM_DDL + """
+        CREATE STREAM Out (sym VARCHAR, total BIGINT);
+        INSERT INTO Out SELECT sym, SUM(v) AS total FROM S
+        WINDOW('session', 1500 MILLISECONDS) GROUP BY sym;
+        """,
+        [("S", SYM)],
+        # a arrives at 0, 1, 3, 5 s and b at 2, 4, 6 s
+        [("a", 100), ("a", 3), ("a", 4), ("b", 10), ("b", 20), ("b", 200)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CLAUSE_PARITY))
+def test_clause_parity(spark, case):
+    """run_streaming() reads every clause run() reads."""
+    sql, sends, want = CLAUSE_PARITY[case]
+    assert _parity_sent(spark, sql, sends, n_chunks=2) == want
+
+
+REJECTED = {
+    "order_by_limit": (
+        "sym VARCHAR, v INT", "SELECT sym, v FROM S ORDER BY v DESC LIMIT 2", "ORDER BY"),
+    "limit_offset": ("sym VARCHAR, v INT", "SELECT sym, v FROM S LIMIT 2 OFFSET 1", "LIMIT"),
+    "length_passthrough": (
+        "sym VARCHAR, v INT", "SELECT sym, v FROM S WINDOW('length', 2)", r"WINDOW\('length'\)"),
+    "partition_length_batch": (
+        "total BIGINT", "SELECT SUM(v) AS total FROM S WINDOW('lengthBatch', 2)",
+        "PARTITION WITH"),
+    "length_having": (
+        "total BIGINT", "SELECT SUM(v) AS total FROM S WINDOW('length', 2) HAVING SUM(v) > 3",
+        "HAVING"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(REJECTED))
+def test_streaming_rejects_what_it_cannot_honour(spark, case):
+    """A clause the live plan cannot honour raises a ValueError naming it;
+    run() still answers."""
+    out, select, clause = REJECTED[case]
+    body = f"INSERT INTO Out {select};"
+    if case.startswith("partition"):
+        body = f"PARTITION WITH (sym OF S) BEGIN {body} END;"
+    app = EventFluxApp(spark).execute(SYM_DDL + f"CREATE STREAM Out ({out});" + body)
+    app.send("S", SYM)
+    assert app.run("Out")
+    with pytest.raises(ValueError, match=clause):
+        app.run_streaming("Out")
+
+
+@pytest.mark.parametrize("window", ["tumbling', 5 SECONDS", "lengthBatch', 2"])
+def test_row_level_time_window_rejected_in_both_modes(spark, window):
+    app = EventFluxApp(spark).execute(
+        SYM_DDL + f"""
+        CREATE STREAM Out (sym VARCHAR, v INT);
+        INSERT INTO Out SELECT sym, v FROM S WINDOW('{window});
+        """
+    )
+    app.send("S", SYM)
+    for run in (app.run, app.run_streaming):
+        with pytest.raises(ValueError, match="require aggregation"):
+            run("Out")
+
+
+def test_query_fed_join_partner_rejected_live(spark):
+    # a live partner feed carries only the stream's own sent events
+    app = EventFluxApp(spark).execute(
+        """
+        CREATE STREAM L (id INT);
+        CREATE STREAM Src (id INT);
+        CREATE STREAM R (id INT);
+        CREATE STREAM Out (id INT);
+        INSERT INTO R SELECT id FROM Src;
+        INSERT INTO Out SELECT L.id FROM L JOIN R ON L.id = R.id;
+        """
+    )
+    app.send("Src", [(1,)])
+    app.send("L", [(1,)])
+    assert app.run("Out") == [(1,)]
+    with pytest.raises(ValueError, match="JOIN partner R"):
+        app.run_streaming("Out")
+
+
+_SNAPSHOT = SYM_DDL + """
+    CREATE STREAM Out (sym VARCHAR, total BIGINT);
+    INSERT INTO Out SELECT sym, SUM(v) AS total FROM S GROUP BY sym
+    {} OUTPUT SNAPSHOT EVERY 2 SECONDS;
+"""
+_PATTERN = SYM_DDL + """
+    CREATE STREAM Out (v1 INT, v2 INT);
+    INSERT INTO Out SELECT e1.v AS v1, e2.v AS v2
+    FROM PATTERN (EVERY (e1=S -> e2=S[v > e1.v])) {};
+"""
+#: OUTPUT SNAPSHOT restates per-tick state and a pattern emits its matches;
+#: neither reads these clauses, in either mode
+UNREAD = {
+    "snapshot_having": (_SNAPSHOT.format("HAVING SUM(v) > 10"), "HAVING"),
+    "snapshot_order_by": (_SNAPSHOT.format("ORDER BY sym LIMIT 1"), "ORDER BY"),
+    "pattern_limit": (_PATTERN.format("LIMIT 1"), "LIMIT"),
+    "pattern_order_by": (_PATTERN.format("ORDER BY v1 DESC"), "ORDER BY"),
+    "pattern_output_rate": (_PATTERN.format("OUTPUT FIRST EVERY 2 EVENTS"), "OUTPUT"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(UNREAD))
+def test_unread_clauses_rejected_in_both_modes(spark, case):
+    sql, clause = UNREAD[case]
+    app = EventFluxApp(spark).execute(sql)
+    app.send("S", SYM)
+    for run in (app.run, app.run_streaming):
+        with pytest.raises(ValueError, match=clause):
+            run("Out")
