@@ -323,7 +323,13 @@ def match_absent_block(
     violated = np.zeros(len(trig), dtype=bool)
     if len(absent):
         ts, ns = ts_ticks(block, ts_col)
-        nxt_idx = np.searchsorted(absent, trig, side="right")
+        # probe from the last row of the trigger's (key, ts) run: an absent
+        # row at the trigger's own ts is outside (ts, ts + d]
+        run_ends = np.flatnonzero(
+            np.r_[(codes[1:] != codes[:-1]) | (ts[1:] != ts[:-1]), True]
+        )
+        end = run_ends[np.searchsorted(run_ends, trig)]
+        nxt_idx = np.searchsorted(absent, end, side="right")
         nxt = absent[np.minimum(nxt_idx, len(absent) - 1)]
         violated = (
             (nxt_idx < len(absent))

@@ -1,4 +1,4 @@
-"""Streaming executor for pattern specs: keyed NFA in
+"""Streaming executor for pattern specs: keyed matchers in
 ``applyInPandasWithState`` (the north-star design, SURVEY.md §2.6).
 
 Correct event-time semantics under out-of-order arrival:
@@ -13,9 +13,11 @@ Correct event-time semantics under out-of-order arrival:
    passes it — even if no new data arrives for the key.
 
 This preserves the reference's strict arrival-order invariant (SURVEY §7.4)
-with bounded lateness = the watermark delay. Partial matches and buffered
-rows persist across micro-batches as JSON in the state store (RocksDB-backed
-in production configs), so the query is resumable from checkpoint.
+with bounded lateness = the watermark delay. Buffered rows persist across
+micro-batches as one typed Arrow frame (``streaming/rowstate.py``); the
+NFA's partial matches, Python natives built by ``run_nfa``, persist as
+JSON. The state store (RocksDB-backed in production configs) makes the
+query resumable from checkpoint.
 
 Scale: state per key is O(buffered window + live partial matches); the
 within-deadline prunes instances, the watermark prunes the buffer. Keys are
@@ -26,22 +28,22 @@ use.
 from __future__ import annotations
 
 import json
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..streaming.rowstate import pack, unpack
 from .batch import output_schema
-from .nfa import run_nfa
+from .nfa import match_absent_block, run_nfa
 from .spec import PatternSpec
 
-STATE_SCHEMA = "buffered STRING, instances STRING, matched_done BOOLEAN"
-
-
-def _ts_to_ns(series: pd.Series) -> pd.Series:
-    return pd.to_datetime(series).astype("datetime64[ns]")
+STATE_SCHEMA = "buffered binary, instances STRING, matched_done BOOLEAN"
 
 
 def match_pattern_stream(
@@ -66,67 +68,42 @@ def match_pattern_stream(
         needed.update(s.emit)
         needed.update(c for _, c in s.agg_emit)
     needed.update(spec.order_cols)
-    buffer_cols = sorted(needed - {key_col})
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            buffered_json, instances_json, matched_done = state.get
-            buffered: dict[str, list] = json.loads(buffered_json)
-            instances = json.loads(instances_json)
+            held, instances_json, matched_done = state.get
+            held, instances = unpack(held), json.loads(instances_json)
         else:
-            buffered = {c: [] for c in buffer_cols}
-            instances = []
-            matched_done = False
-
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for c in buffer_cols:
-                vals = pdf[c]
-                if c == ts_col:
-                    vals = _ts_to_ns(vals).astype("int64")
-                buffered[c].extend(
-                    v.item() if hasattr(v, "item") else v for v in vals
-                )
+            held, instances, matched_done = None, [], False
+        pool = pd.concat([held, *pdfs], ignore_index=True)
 
         wm_ms = state.getCurrentWatermarkMs()
-        wm_ns = wm_ms * 1_000_000
-        ts_vals = buffered[ts_col]
-        ready_idx = [i for i, t in enumerate(ts_vals) if t <= wm_ns]
-        rest_idx = [i for i, t in enumerate(ts_vals) if t > wm_ns]
-
+        final = pool[ts_col] <= pd.Timestamp(wm_ms, unit="ms")
         out_rows: list[dict] = []
-        if ready_idx:
-            ready = {c: [buffered[c][i] for i in ready_idx] for c in buffer_cols}
-            pdf = pd.DataFrame(ready)
-            pdf[ts_col] = pd.to_datetime(pdf[ts_col])
-            pdf[key_col] = key[0]
+        if final.any():
             out_rows, instances, matched_done = run_nfa(
-                pdf, spec, instances=instances, matched_done=matched_done
+                pool[final], spec, instances=instances, matched_done=matched_done
             )
-            buffered = {c: [buffered[c][i] for i in rest_idx] for c in buffer_cols}
+            pool = pool[~final]
 
         done_flag_needed = (not spec.every) and matched_done
-        if not buffered[ts_col] and not instances and not done_flag_needed:
+        if pool.empty and not instances and not done_flag_needed:
             state.remove()  # nothing to remember — fresh state is equivalent
         else:
-            state.update(
-                (json.dumps(buffered), json.dumps(instances), bool(matched_done))
-            )
-            if buffered[ts_col]:
+            state.update((pack(pool), json.dumps(instances), bool(matched_done)))
+            if len(pool):
                 # wake this key when the watermark passes its oldest buffered
                 # event (must arm strictly past the current watermark)
-                wake_ms = max(min(buffered[ts_col]) // 1_000_000, wm_ms + 1)
-                state.setTimeoutTimestamp(wake_ms)
+                oldest_ms = pool[ts_col].min().value // 1_000_000
+                state.setTimeoutTimestamp(max(oldest_ms, wm_ms + 1))
 
         if out_rows:
-            out = pd.DataFrame(out_rows)
-            yield out[col_order]
+            yield pd.DataFrame(out_rows)[col_order]
 
     pruned = (
-        df.select(key_col, *buffer_cols)
+        df.select(*sorted(needed))
         # watermark needs TIMESTAMP (LTZ); UTC session makes the cast exact
         .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .withWatermark(ts_col, watermark_delay)
@@ -141,8 +118,6 @@ def match_pattern_stream(
 
 
 # -- live absent patterns (NOT A FOR d) --------------------------------------
-
-ABSENT_STATE_SCHEMA = "buffered STRING, pending STRING, absents STRING"
 
 
 def match_absent_stream(
@@ -159,22 +134,20 @@ def match_absent_stream(
     proves NO absent event of its key landed in ``(trig.ts, trig.ts + d]``.
 
     The reference only DESIGNED this (``PATTERN_PROCESSING.md:34-38`` — "NOT
-    A FOR duration, requires TimerWheel"); the live restatement arms a state
-    timeout at the pending trigger's deadline — the TimerWheel role — while
-    the same finality discipline as :func:`match_pattern_stream` buffers
-    rows until the watermark passes them:
+    A FOR duration, requires TimerWheel"). Each key buffers its rows, and
+    every invocation runs the batch kernel :func:`match_absent_block` over
+    the final cut, the rows with ``ts <= watermark``:
 
-    - a trigger is RESOLVABLE once ``trig.ts + d <= watermark`` (every
-      absent event that could cancel it is final by then);
-    - resolved triggers emit iff no recorded absent ts falls in the window,
-      then leave state; unresolved ones wait, woken by the event-time
-      timeout even if no new data arrives for the key;
-    - recorded absent timestamps are pruned to those that can still cancel
-      a pending trigger, so state is O(pending + in-flight), never history.
+    - a trigger with ``ts + d <= watermark`` has every absent row that could
+      cancel it in that cut, so the kernel's verdict on it is final and it
+      is emitted;
+    - then rows with ``ts <= watermark - d`` leave the buffer, so each
+      trigger is emitted exactly once, while every absent row that can still
+      cancel a pending trigger (``ts > trig.ts > watermark - d``) stays;
+    - an event-time timeout at the oldest buffered row's ``ts + d`` — the
+      TimerWheel role — wakes the key even if no new data arrives for it.
     """
-    duration_ns = int(pd.Timedelta(duration).value)
-    from pyspark.sql import types as T
-
+    d = pd.Timedelta(duration)
     by_name = {f.name: f.dataType for f in df.schema.fields}
     fields = [T.StructField(key_col, by_name[key_col])]
     fields += [T.StructField(c, by_name[c]) for c in emit_cols]
@@ -182,113 +155,50 @@ def match_absent_stream(
     out_schema = T.StructType(fields)
     col_order = [f.name for f in out_schema.fields]
 
-    buffer_cols = sorted(
-        {ts_col, "turn_idx", trigger_flag, absent_flag, *emit_cols} - {key_col}
+    pruned = (
+        df.select(*sorted({key_col, ts_col, "turn_idx", trigger_flag, absent_flag, *emit_cols}))
+        .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        .withWatermark(ts_col, watermark_delay)
     )
+    # the kernel's block takes Spark's column types, with timestamps as the
+    # naive nanoseconds pandas holds them in
+    block_schema = pa.schema([
+        pa.field(f.name, pa.timestamp("ns") if pa.types.is_timestamp(f.type) else f.type)
+        for f in to_arrow_schema(pruned.schema)
+    ])
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buffered_json, pending_json, absents_json = state.get
-            buffered: dict[str, list] = json.loads(buffered_json)
-            pending: list[dict] = json.loads(pending_json)
-            absents: list[int] = json.loads(absents_json)
-        else:
-            buffered = {c: [] for c in buffer_cols}
-            pending, absents = [], []
-
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for c in buffer_cols:
-                vals = pdf[c]
-                if c == ts_col:
-                    vals = _ts_to_ns(vals).astype("int64")
-                buffered[c].extend(
-                    v.item() if hasattr(v, "item") else v for v in vals
-                )
-
+        held = unpack(state.get[0]) if state.exists else None
+        pool = pd.concat([held, *pdfs], ignore_index=True)
         wm_ms = state.getCurrentWatermarkMs()
-        wm_ns = wm_ms * 1_000_000
-        ts_vals = buffered[ts_col]
-        ready_idx = [i for i, t in enumerate(ts_vals) if t <= wm_ns]
-        if ready_idx:
-            ready_idx.sort(
-                key=lambda i: (ts_vals[i], buffered["turn_idx"][i])
-            )
-            for i in ready_idx:
-                if buffered[trigger_flag][i]:
-                    pending.append(
-                        {
-                            "ts": ts_vals[i],
-                            **{c: buffered[c][i] for c in emit_cols},
-                        }
-                    )
-                if buffered[absent_flag][i]:
-                    absents.append(ts_vals[i])
-            keep = [i for i, t in enumerate(ts_vals) if t > wm_ns]
-            buffered = {c: [buffered[c][i] for i in keep] for c in buffer_cols}
+        wm = pd.Timestamp(wm_ms, unit="ms")
 
-        out_rows: list[dict] = []
-        still: list[dict] = []
-        for p in pending:  # arrival (ts, turn_idx) order — kept on append
-            if p["ts"] + duration_ns <= wm_ns:
-                if not any(
-                    p["ts"] < a <= p["ts"] + duration_ns for a in absents
-                ):
-                    out_rows.append(p)
-            else:
-                still.append(p)
-        pending = still
-        # an absent ts can only cancel a trigger with trig.ts < a; triggers
-        # not yet pending all have ts > watermark >= every recorded absent,
-        # so absents at or before the earliest pending trigger are dead
-        if pending:
-            floor_ns = min(p["ts"] for p in pending)
-            absents = [a for a in absents if a > floor_ns]
-        else:
-            absents = []
+        final = pool[pool[ts_col] <= wm].sort_values([ts_col, "turn_idx"], kind="stable")
+        out = None
+        if len(final):
+            block = pa.RecordBatch.from_pandas(final, schema=block_schema, preserve_index=False)
+            out = match_absent_block(
+                block, key_col, ts_col, trigger_flag, absent_flag, d.value, emit_cols
+            ).to_pandas()
+            out = out[out["ts"] <= wm - d].rename(columns={"conv_id": key_col})
 
-        if not buffered[ts_col] and not pending:
+        pool = pool[pool[ts_col] > wm - d]
+        if pool.empty:
             state.remove()
         else:
-            state.update(
-                (json.dumps(buffered), json.dumps(pending), json.dumps(absents))
-            )
-            wake_candidates = []
-            if buffered[ts_col]:
-                wake_candidates.append(min(buffered[ts_col]) // 1_000_000)
-            if pending:
-                # the TimerWheel deadline: first pending trigger expiry
-                wake_candidates.append(
-                    min(p["ts"] + duration_ns for p in pending) // 1_000_000
-                )
-            if wake_candidates:
-                state.setTimeoutTimestamp(max(min(wake_candidates), wm_ms + 1))
+            state.update((pack(pool),))
+            deadline_ms = (pool[ts_col].min() + d).value // 1_000_000
+            state.setTimeoutTimestamp(max(deadline_ms, wm_ms + 1))
 
-        if out_rows:
-            out = pd.DataFrame(
-                [
-                    {
-                        key_col: key[0],
-                        **{c: p[c] for c in emit_cols},
-                        "ts": pd.Timestamp(p["ts"]),
-                    }
-                    for p in out_rows
-                ]
-            )
+        if out is not None and len(out):
             yield out[col_order]
 
-    pruned = (
-        df.select(key_col, *buffer_cols)
-        .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark_delay)
-    )
     return pruned.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
-        stateStructType=ABSENT_STATE_SCHEMA,
+        stateStructType="buffered binary",
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

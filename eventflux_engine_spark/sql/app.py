@@ -1544,32 +1544,17 @@ def _emission(q: QueryDef) -> tuple[str, str]:
 
 def _rate_limit(out: DataFrame, mode: str, value: int, unit: str) -> DataFrame:
     """The batch restatement of OUTPUT FIRST|LAST|ALL EVERY n EVENTS / d
-    TIME over rows in ``__seq`` order."""
-    if unit == "EVENTS":
-        out = out.withColumn("__rn", F.row_number().over(Window.orderBy("__seq")))
-        if mode == "ALL":
-            # complete n-blocks only; trailing partial block stays
-            # buffered (events_output_rate.rs ALL behavior)
-            total = out.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy()))
-            return total.filter(
-                F.col("__rn") <= F.floor(F.col("__n") / value) * value
-            ).drop("__rn", "__n")
-        # FIRST via 0-based position: EVERY 1 emits every event
-        keep = (
-            ((F.col("__rn") - 1) % value == 0)
-            if mode == "FIRST"
-            else (F.col("__rn") % value == 0)
-        )
-        return out.filter(keep).drop("__rn")
-    # TIME (time_output_rate.rs): d-wide buckets of event time. ALL EVERY d
-    # TIME emits every buffered event at the next tick — a passthrough
-    if mode == "ALL":
-        return out
-    bucket = F.floor(F.col("__ts").cast("timestamp_ltz").cast("double") * 1000 / value)
-    order = F.col("__seq").asc() if mode == "FIRST" else F.col("__seq").desc()
-    return out.withColumn(
-        "__rn", F.row_number().over(Window.partitionBy(bucket).orderBy(order))
-    ).filter(F.col("__rn") == 1).drop("__rn")
+    TIME over rows in ``__seq`` order (``operators/output.py``)."""
+    from ..operators import output as OUT
+
+    if unit == "TIME":
+        return OUT.output_every_time(out, value, mode, "__ts", [], ["__seq"])
+    every = {
+        "FIRST": OUT.output_first_every,
+        "LAST": OUT.output_last_every,
+        "ALL": OUT.output_all_every,
+    }[mode]
+    return every(out, value, [], ["__seq"])
 
 
 def _partition_key(q: QueryDef) -> Column:

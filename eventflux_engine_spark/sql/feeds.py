@@ -56,8 +56,8 @@ SENTINEL_GAP = datetime.timedelta(days=7)
 #: sentinel would be dropped at the scan (keyed aggregates keep NULL)
 OUTER_JOIN_KEY = "\x00sentinel"
 
-# type-correct NEUTRAL values, not nulls: the rate limiter's packed state
-# round-trips through pandas astype, and a NaN breaks an integer cast
+# type-correct NEUTRAL values, not nulls, for the sentinel's non-string
+# columns
 _NEUTRAL = {
     T.ByteType: 0,
     T.ShortType: 0,

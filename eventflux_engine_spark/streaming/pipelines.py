@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sql.feeds import SENTINEL_SEQ
+from .rowstate import pack, unpack
 
 __all__ = [
     "tumbling_stream",
@@ -311,32 +312,28 @@ def sort_window_stream(
     import pandas as pd  # noqa: F811
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .ratelimit import _pack, _unpack
-
-    cols = [f.name for f in df.schema.fields]
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     )
 
     def proc(key, pdfs, state):
-        blob = state.get[0] if state.exists else ""
+        held = unpack(state.get[0]) if state.exists else None
         rows = pd.concat(list(pdfs)).drop(columns="__k")
-        proto = rows.iloc[0:0]
         real = rows[rows["__seq"] < SENTINEL_SEQ]
         flush = bool((rows["__seq"] >= SENTINEL_SEQ).any())
-        pool = pd.concat([_unpack(blob, proto), real], ignore_index=True)
+        pool = pd.concat([held, real], ignore_index=True)
         retained = pool.sort_values(
             [attr, "__seq"], ascending=[ascending, True], kind="stable"
         ).head(n)
         if flush and len(retained):
             yield retained
-        state.update((_pack(retained),))
+        state.update((pack(retained),))
 
     return (
         df.withColumn("__k", F.lit(0))
         .groupBy("__k")
         .applyInPandasWithState(
-            proc, out_schema, "buf string", "append",
+            proc, out_schema, "buf binary", "append",
             GroupStateTimeout.NoTimeout,
         )
     )
@@ -357,19 +354,16 @@ def time_window_stream(
     import pandas as pd  # noqa: F811
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .ratelimit import _pack, _unpack
-
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     )
 
     def proc(key, pdfs, state):
-        blob, hw = (state.get[0], int(state.get[1])) if state.exists else ("", -(1 << 62))
+        held, hw = (unpack(state.get[0]), int(state.get[1])) if state.exists else (None, -(1 << 62))
         rows = pd.concat(list(pdfs)).drop(columns="__k")
-        proto = rows.iloc[0:0]
         real = rows[rows["__seq"] < SENTINEL_SEQ]
         flush = bool((rows["__seq"] >= SENTINEL_SEQ).any())
-        pool = pd.concat([_unpack(blob, proto), real], ignore_index=True)
+        pool = pd.concat([held, real], ignore_index=True)
         if len(real):
             hw = max(hw, int(real["__ts"].astype("int64").max() // 1_000_000))
         if len(pool):
@@ -377,13 +371,13 @@ def time_window_stream(
             pool = pool[ts_ms > hw - d_ms]
         if flush and len(pool):
             yield pool
-        state.update((_pack(pool), hw))
+        state.update((pack(pool), hw))
 
     return (
         df.withColumn("__k", F.lit(0))
         .groupBy("__k")
         .applyInPandasWithState(
-            proc, out_schema, "buf string, hw bigint", "append",
+            proc, out_schema, "buf binary, hw bigint", "append",
             GroupStateTimeout.NoTimeout,
         )
     )

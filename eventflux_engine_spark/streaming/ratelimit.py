@@ -22,12 +22,13 @@
 One global ``applyInPandasWithState`` group holds the counters — the rate
 limiter is a per-QUERY serial point in the reference too
 (``stream_junction.rs`` ordered dispatch); sharded per-key rate limiting
-falls out of adding real keys to the groupBy.
+falls out of adding real keys to the groupBy. The rows it holds between
+micro-batches (the ALL remainder, the LAST candidate, the snapshot
+partials and not-yet-due events) are typed Arrow frames packed by
+:mod:`.rowstate`.
 """
 
 from __future__ import annotations
-
-import io
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,21 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..sql.feeds import SENTINEL_SEQ
+from .rowstate import pack, unpack
 
-_STATE_SCHEMA = "count bigint, bucket bigint, pending string, buffered string"
-
-
-def _pack(pdf: pd.DataFrame) -> str:
-    return "" if pdf is None or len(pdf) == 0 else pdf.to_json(
-        orient="split", date_unit="ns", date_format="epoch"
-    )
-
-
-def _unpack(blob: str, like: pd.DataFrame) -> pd.DataFrame:
-    if not blob:
-        return like.iloc[0:0]
-    pdf = pd.read_json(io.StringIO(blob), orient="split", convert_dates=False)
-    return pdf.astype(like.dtypes.to_dict())
+_STATE_SCHEMA = "count bigint, bucket bigint, pending binary, buffered binary"
 
 
 def output_rate_stream(
@@ -72,7 +61,7 @@ def output_rate_stream(
         if state.exists:
             count, bucket, pending, buffered = state.get
         else:
-            count, bucket, pending, buffered = 0, -1, "", ""
+            count, bucket, pending, buffered = 0, -1, None, None
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
@@ -87,11 +76,12 @@ def output_rate_stream(
                     elif mode == "LAST":
                         out = real[(pos % value) == (value - 1)]
                     else:  # ALL: release complete blocks, hold the remainder
-                        held = _unpack(buffered, real)
-                        pool = pd.concat([held, real], ignore_index=True)
+                        pool = pd.concat(
+                            [unpack(buffered), real], ignore_index=True
+                        )
                         n_full = (len(pool) // value) * value
                         out = pool.iloc[:n_full]
-                        buffered = _pack(pool.iloc[n_full:])
+                        buffered = pack(pool.iloc[n_full:])
                     count += len(real)
                     if len(out):
                         yield out
@@ -108,15 +98,13 @@ def output_rate_stream(
                         bucket = int(bkts.max())
                         yield out
                 else:  # LAST: hold each bucket's candidate until it closes
-                    pool = pd.concat(
-                        [_unpack(pending, pdf), pdf], ignore_index=True
-                    )
+                    pool = pd.concat([unpack(pending), pdf], ignore_index=True)
                     pb = (
                         pool["__ts"].astype("int64") // 1_000_000 // value
                     ).astype("int64")
                     tails = pool.groupby(pb, sort=True).tail(1)
                     closed = tails[pb[tails.index] < pb.max()]
-                    pending = _pack(tails[pb[tails.index] == pb.max()])
+                    pending = pack(tails[pb[tails.index] == pb.max()])
                     if len(closed):
                         yield closed
         state.update((count, bucket, pending, buffered))
@@ -132,7 +120,7 @@ def output_rate_stream(
 
 # -- OUTPUT SNAPSHOT EVERY d over aggregating queries, streaming ------------
 
-_SNAP_STATE = "hw bigint, next_tick bigint, accs string, buf string"
+_SNAP_STATE = "hw bigint, next_tick bigint, accs binary, buf binary"
 
 
 def snapshot_agg_stream(
@@ -171,20 +159,17 @@ def snapshot_agg_stream(
 
     def fn(key, pdfs, state):
         if state.exists:
-            hw, next_tick, accs_blob, buf_blob = state.get
+            hw, next_tick, accs, buf = state.get
+            accs, buf = unpack(accs), unpack(buf)
         else:
-            hw, next_tick, accs_blob, buf_blob = -(1 << 62), 1, "", ""
+            hw, next_tick, accs, buf = -(1 << 62), 1, None, None
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
             pdf = pdf.drop(columns="__g").sort_values("__seq", kind="stable")
             hw = max(hw, int(pdf["__ts"].astype("int64").max() // 1_000_000))
             real = pdf[pdf["__seq"] < SENTINEL_SEQ].drop(columns="__seq")
-            proto = real.iloc[0:0]
-            buf = pd.concat(
-                [_unpack(buf_blob, proto), real], ignore_index=True
-            )
-            accs = _unpack(accs_blob, _accs_proto(proto, gcols, parsed))
+            buf = pd.concat([buf, real], ignore_index=True)
             outs = []
             while (
                 next_tick <= n_ticks
@@ -196,7 +181,7 @@ def snapshot_agg_stream(
                 buf = buf[ts_ms > t_ms]
                 if len(due):
                     accs = _fold(accs, due, gcols, parsed)
-                if len(accs):
+                if accs is not None and len(accs):
                     emit = accs[gcols].copy() if gcols else pd.DataFrame(
                         index=accs.index
                     )
@@ -216,8 +201,7 @@ def snapshot_agg_stream(
                 next_tick += 1
             if outs:
                 yield pd.concat(outs, ignore_index=True)
-            buf_blob, accs_blob = _pack(buf), _pack(accs)
-        state.update((hw, next_tick, accs_blob, buf_blob))
+        state.update((hw, next_tick, pack(accs), pack(buf)))
 
     return (
         stream.withColumn("__g", F.lit(0))
@@ -228,25 +212,9 @@ def snapshot_agg_stream(
     )
 
 
-def _accs_proto(proto: pd.DataFrame, gcols: list[str], parsed) -> pd.DataFrame:
-    cols: dict = {k: proto[k] for k in gcols}
-    for i, (afn, _arg) in enumerate(parsed):
-        if afn == "count":
-            cols[f"_c{i}"] = pd.Series(dtype="int64")
-        elif afn == "sum":
-            cols[f"_s{i}"] = pd.Series(dtype="float64")
-        elif afn == "avg":
-            cols[f"_s{i}"] = pd.Series(dtype="float64")
-            cols[f"_c{i}"] = pd.Series(dtype="int64")
-        elif afn == "min":
-            cols[f"_m{i}"] = pd.Series(dtype="float64")
-        else:
-            cols[f"_x{i}"] = pd.Series(dtype="float64")
-    return pd.DataFrame(cols)
-
-
-def _fold(accs: pd.DataFrame, due: pd.DataFrame, gcols, parsed) -> pd.DataFrame:
-    """Fold a block of newly-due events into the running per-key partials."""
+def _fold(accs: pd.DataFrame | None, due: pd.DataFrame, gcols, parsed) -> pd.DataFrame:
+    """Fold a block of newly-due events into the running per-key partials
+    (``None`` before the first fold)."""
     # per-key partials of the due block
     g = due.groupby(gcols, sort=False, dropna=False) if gcols else None
     parts: dict = {}

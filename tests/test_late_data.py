@@ -12,12 +12,14 @@ import os
 import shutil
 import uuid
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from eventflux_engine_spark.cep import PatternSpec, Step, match_pattern_batch
-from eventflux_engine_spark.cep.streaming import match_pattern_stream
+from eventflux_engine_spark.cep.batch import match_absent_batch
+from eventflux_engine_spark.cep.streaming import match_absent_stream, match_pattern_stream
 from eventflux_engine_spark.datamodel import synth_transcripts
 
 SPEC = PatternSpec(
@@ -94,6 +96,57 @@ def test_out_of_order_within_watermark_matches_batch(spark, tmpdir):
         got[cols].sort_values(cols).reset_index(drop=True),
         want[cols].sort_values(cols).reset_index(drop=True),
     )
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_absent_out_of_order_within_watermark_matches_batch(spark, tmpdir, seed):
+    """PECJ's disorder property for the live absent matcher: any arrival
+    order within the watermark delay gives the in-order (batch) result."""
+    t = synth_transcripts(spark, 2000, 64).toPandas()
+    # each row arrives up to 25 minutes behind its event time: a row seen
+    # before another is at most 25 minutes younger, so under the 30-minute
+    # watermark delay no row is ever late, wherever the chunk cuts fall
+    rng = np.random.default_rng(seed)
+    jitter = pd.to_timedelta(rng.uniform(0, 25 * 60, len(t)), unit="s")
+    arrival = t.assign(_at=t["ts"] + jitter).sort_values("_at").drop(columns="_at")
+    sentinel = pd.DataFrame(
+        [{
+            "conv_id": "__sentinel__", "turn_idx": 0, "role": "user",
+            "text": "", "tool": "", "ts": t["ts"].max() + pd.Timedelta(days=30),
+        }]
+    )
+    n_chunks = 12  # ~5 h of event time each
+    bounds = [round(i * len(arrival) / n_chunks) for i in range(n_chunks + 1)]
+    chunks = [arrival.iloc[a:b] for a, b in zip(bounds, bounds[1:])] + [sentinel]
+
+    feed = os.path.join(tmpdir, "feed")
+    os.makedirs(feed)
+    for i, c in enumerate(chunks):
+        c = c.assign(turn_idx=c["turn_idx"].astype("int32"))
+        c.to_parquet(
+            os.path.join(feed, f"c{i:03d}.parquet"), index=False,
+            coerce_timestamps="us", allow_truncated_timestamps=True,
+        )
+
+    schema = spark.createDataFrame(t).schema
+    stream = _flags(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(feed)
+    )
+    out = match_absent_stream(
+        stream, "is_user", "is_assistant", "20 minutes", watermark_delay="30 minutes"
+    )
+    name = f"absent_late_{seed}"
+    q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+    q.processAllAvailable()
+    q.stop()
+    got = spark.sql(f"SELECT * FROM {name}").filter(F.col("conv_id") != "__sentinel__")
+    want = match_absent_batch(_flags(spark.createDataFrame(t)), "is_user", "is_assistant", "20 minutes")
+    cols = ["conv_id", "turn_idx", "ts"]
+    got, want = (
+        df.toPandas()[cols].sort_values(cols).reset_index(drop=True) for df in (got, want)
+    )
+    assert 0 < len(want) < (t["role"] == "user").sum()
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_too_late_rows_are_dropped(spark, tmpdir):

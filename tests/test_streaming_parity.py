@@ -406,3 +406,80 @@ def test_unread_clauses_rejected_in_both_modes(spark, case):
     for run in (app.run, app.run_streaming):
         with pytest.raises(ValueError, match=clause):
             run("Out")
+
+
+# -- rows a live operator holds between micro-batches keep their types -----
+
+_CODES = "CREATE STREAM S (code VARCHAR, v INT);"
+#: each case's held rows cross a micro-batch boundary (``n_chunks=2``):
+#: numeric-looking strings stay strings and a NULL BOOLEAN stays NULL
+HELD_ROW_TYPES = {
+    "sort_window_numeric_strings": (
+        _CODES + """
+        CREATE STREAM Out (code VARCHAR, v INT);
+        INSERT INTO Out SELECT code, v FROM S WINDOW('sort', 2, 'v desc');
+        """,
+        [("007", 1), ("008", 5), ("009", 3)],
+        [("008", 5), ("009", 3)],
+    ),
+    "time_window_group_by_numeric_strings": (
+        _CODES + """
+        CREATE STREAM Out (code VARCHAR, n BIGINT);
+        INSERT INTO Out SELECT code, COUNT(*) AS n FROM S
+        WINDOW('time', 100000) GROUP BY code;
+        """,
+        [("007", 1), ("008", 5), ("007", 3)],
+        [("007", 2), ("008", 1)],
+    ),
+    "output_last_every_time_numeric_strings": (
+        _CODES + """
+        CREATE STREAM Out (code VARCHAR, v INT);
+        INSERT INTO Out SELECT code, v FROM S OUTPUT LAST EVERY 2 SECONDS;
+        """,
+        [("007", 1), ("008", 5), ("009", 3), ("010", 4)],
+        [("008", 5), ("010", 4)],
+    ),
+    "snapshot_group_by_numeric_strings": (
+        _CODES + """
+        CREATE STREAM Out (code VARCHAR, n BIGINT);
+        INSERT INTO Out SELECT code, COUNT(*) AS n FROM S GROUP BY code
+        OUTPUT SNAPSHOT EVERY 2 SECONDS;
+        """,
+        [("007", 1), ("008", 5), ("009", 3)],
+        [("007", 1), ("008", 1), ("009", 1)],
+    ),
+    "sort_window_nullable_boolean": (
+        """
+        CREATE STREAM S (ok BOOLEAN, v INT);
+        CREATE STREAM Out (v INT, ok BOOLEAN);
+        INSERT INTO Out SELECT v, ok FROM S WINDOW('sort', 2, 'v desc');
+        """,
+        [(True, 1), (None, 5), (False, 3)],
+        [(3, False), (5, None)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HELD_ROW_TYPES))
+def test_held_rows_keep_their_types(spark, case):
+    sql, rows, want = HELD_ROW_TYPES[case]
+    assert _parity(spark, sql, rows, n_chunks=2) == want
+
+
+def test_absent_row_tied_with_trigger_does_not_cancel_it(spark):
+    # NOT ... FOR d looks at (trigger.ts, trigger.ts + d]: a same-key absent
+    # row at the trigger's own ts is outside it
+    sql = """
+        CREATE STREAM S (kind VARCHAR, v INT);
+        CREATE STREAM Out (v INT);
+        INSERT INTO Out SELECT e1.v
+        FROM PATTERN (e1=S[kind = 'ask'] -> NOT S[kind = 'ok'] FOR 5 seconds);
+    """
+    t0 = datetime.datetime(2024, 1, 1)
+    app = EventFluxApp(spark).execute(sql)
+    app.send(
+        "S", [("ask", 1), ("ok", 0), ("ask", 2)],
+        ts=[t0, t0, t0 + datetime.timedelta(seconds=20)],
+    )
+    batch = sorted(app.run("Out"))
+    assert sorted(app.run_streaming("Out", n_chunks=2)) == batch == [(1,), (2,)]

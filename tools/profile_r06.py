@@ -20,26 +20,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE  # noqa: E402
 from eventflux_engine_spark.plans import QUERIES  # noqa: E402
 from eventflux_engine_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "tumbling_turn_counts", "sliding_window_agg", "session_window_agg",
-    "length_window_avg", "sort_window_topk", "enrichment_cost_rollup",
-    "stream_stream_join", "group_agg_all", "salted_group_agg",
-    "pattern_user_assistant", "pattern_user_tool_assistant",
-    "dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_cosine",
-    "similarity_topk_bruteforce", "similarity_ivf_topk",
-    "similarity_ivf_trained", "text_quality_scores", "dml_update_additive",
-    "incremental_agg_within_per", "tpch_q5_local_supplier_volume",
-    "dedup_cluster_resolution", "curation_decontaminate",
-    "tpch_q21_waiting_supplier", "tpch_q13_customer_distribution",
-    "multimodal_bmp_resize", "events_asof_attribution", "text_bm25_topk",
-    "text_bpe_train", "events_hll_distinct", "multimodal_png_palette",
-    "events_cms_topk", "dedup_substring_spans", "events_bloom_prune_join",
-    "events_quantile_histogram", "dedup_incremental_probe",
-    "curation_pipeline_e2e", "events_gapfill_locf",
-]
 
 
 def main() -> None:
