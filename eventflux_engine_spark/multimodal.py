@@ -8,9 +8,10 @@ engine treats them as first-class columns:
 - **meta**: typed struct ``(kind, width, height, duration_ms, format)`` so
   filters/partitioning work WITHOUT decoding (predicate pushdown on meta,
   payload column pruned unless a stage needs bytes).
-- **decode / feature-extract / resize / frame-sample**: Arrow-batched
-  ``mapInPandas`` operators. Three STANDARD containers are decoded for REAL
-  — no external codec needed, because each is pure header math + a
+- **decode / feature-extract / resize / frame-sample**: plain per-row
+  Python functions, run over Arrow batches by the one boundary helper
+  :func:`_map_rows`. Three STANDARD containers are decoded for REAL — no
+  external codec needed, because each is pure header math + a
   ``np.frombuffer`` view: RIFF/WAVE PCM16 (:func:`decode_wav_stats`),
   24-bit uncompressed BMP (:func:`decode_bmp_stats`, with a real
   nearest-neighbor :func:`resize_images` over decoded pixels), and
@@ -18,10 +19,9 @@ engine treats them as first-class columns:
   first COMPRESSED format — is decoded for real too (:func:`parse_png`:
   zlib is stdlib), covering 8-bit grayscale, truecolor, indexed-color via
   PLTE, and 16-bit grayscale, in both sequential and Adam7-interlaced
-  streams. All are value-hash-gated end to end. Only JPEG (PIL) remains
-  stubbed behind an import-try — the one path that genuinely needs an
-  external library; its Spark-side plumbing — schema, batch shape,
-  partitioning, UDF signatures — is real and tested.
+  streams. All are value-hash-gated end to end. :func:`extract_features`
+  is the one stub decoder: it reads the synthetic ASCII header and byte
+  statistics, and says so in its ``decoder`` column.
 
 Deterministic derivation: assets derive from ``documents`` (payload =
 ASCII header + UTF-8 text bytes), so every aggregate over payload bytes has
@@ -30,22 +30,19 @@ an exact DuckDB oracle (md5/octet_length over the same string).
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+import struct
+import zlib
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .datamodel import spread_input
-
-try:  # real decoders are absent in this sandbox — keep the import gated
-    from PIL import Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    _HAVE_PIL = False
 
 ASSET_META = T.StructType(
     [
@@ -61,17 +58,38 @@ KINDS = ["image", "audio", "video"]
 FORMATS = {"image": "png", "audio": "wav", "video": "mp4"}
 
 
+def _map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """Run ``fn(*row)`` over every row of ``df`` in Arrow batches
+    (``mapInArrow``) — the one place a multimodal operator crosses the
+    Python boundary. ``fn`` returns zero or more output tuples per input
+    row. Each output column is built with the Arrow type of the DDL
+    ``schema``, so an out-of-range value raises instead of wrapping."""
+    out = to_arrow_schema(T.StructType.fromDDL(schema))
 
-def _spread_codec(docs: DataFrame) -> DataFrame:
-    """spread_input at HALF the core count for the codec generators: their
-    consumers chain up to three Python stages per task, so worker-pool
-    pressure is partitions x stages — half-width keeps every core busy
-    (each task runs ~3 concurrently active stages) at half the workers.
-    Measured at sf0.1: bmp_resize 1.2-1.7 s at full width vs 0.7-0.9 s at
-    half; at sf10 the difference is amortized by the per-doc kernel work.
-    """
-    sc = docs.sparkSession.sparkContext
-    return spread_input(docs, max(2, sc.defaultParallelism // 2))
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols = [c.to_pylist() for c in batch.columns]
+            rows = [r for row in zip(*cols) for r in fn(*row)]
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, f.type) for c, f in zip(zip(*rows), out)],
+                    schema=out,
+                )
+
+    return df.mapInArrow(run, schema)
+
+
+def _from_documents(
+    docs: DataFrame, encode: Callable[[int, str], Iterable[tuple]], schema: str
+) -> DataFrame:
+    """Run a codec's ``encode(doc_id, text)`` over ``documents``, spread
+    to the full core count: a one-row-group scan is one task, and on 4
+    cores the PNG gates ran 2.0-2.4x slower unspread (sf0.1) and 1.5x
+    (sf0.1) to 3.2-3.4x (sf1.0) slower at half width than at full."""
+    return _map_rows(spread_input(docs.select("doc_id", "text")), encode, schema)
+
 
 def assets_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic multimodal asset table derived from ``documents``.
@@ -129,56 +147,26 @@ _FEATURE_SCHEMA = (
 )
 
 
-def extract_features(assets: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """Decode/feature-extract over Arrow batches (``mapInPandas``).
+def _features(asset_id: int, payload: bytes, kind: str) -> Iterator[tuple]:
+    try:
+        dims = payload.partition(b";")[0].partition(b":")[2]
+        w, _, h = dims.partition(b"x")
+        width, height, ok = int(w), int(h), True
+    except ValueError:
+        width, height, ok = -1, -1, False
+    arr = np.frombuffer(payload, dtype=np.uint8)
+    mean = float(arr.mean()) if len(arr) else 0.0
+    yield asset_id, kind, len(payload), ok, width, height, mean, "stub"
 
-    Real path (PIL present): decode image payloads, return true dimensions.
-    Sandbox path: deterministic fake — parse the ASCII header, compute byte
-    statistics with vectorized numpy (real batch plumbing, no per-row
-    Python beyond the frombuffer view).
-    """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            n_bytes = payloads.map(len).astype("int32")
-            headers, widths, heights, ok, means = [], [], [], [], []
-            for b in payloads:
-                try:
-                    head, _, _ = bytes(b).partition(b";")
-                    tag, _, dims = head.partition(b":")
-                    w, _, h = dims.partition(b"x")
-                    widths.append(int(w))
-                    heights.append(int(h))
-                    ok.append(True)
-                except Exception:
-                    widths.append(-1)
-                    heights.append(-1)
-                    ok.append(False)
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                means.append(float(arr.mean()) if len(arr) else 0.0)
-            if _HAVE_PIL:
-                decoder = "pil"  # pragma: no cover — lib absent in sandbox
-                raise NotImplementedError(
-                    "real image decode path requires validation against "
-                    "actual encoded payloads; enable when media libs ship"
-                )
-            else:
-                decoder = "stub"
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["meta"].map(lambda m: m["kind"]),
-                    "n_bytes": n_bytes,
-                    "header_ok": ok,
-                    "decl_width": pd.Series(widths, dtype="int32"),
-                    "decl_height": pd.Series(heights, dtype="int32"),
-                    "byte_mean": means,
-                    "decoder": decoder,
-                }
-            )
-
-    return assets.mapInPandas(run, schema=_FEATURE_SCHEMA)
+def extract_features(assets: DataFrame) -> DataFrame:
+    """Stub decode/feature-extract: parse the ASCII header for the declared
+    dimensions and take the payload's byte mean (``decoder`` = ``"stub"``).
+    The Spark-side plumbing — schema, batch shape, partitioning — is the
+    same one every real codec below uses."""
+    return _map_rows(
+        assets.select("asset_id", "payload", "meta.kind"), _features, _FEATURE_SCHEMA
+    )
 
 
 _DECODE_SCHEMA = (
@@ -187,45 +175,34 @@ _DECODE_SCHEMA = (
 )
 
 
+def _sample_stats(asset_id: int, payload: bytes, kind: str) -> Iterator[tuple]:
+    sep = payload.index(b";")  # header terminator
+    body = np.frombuffer(payload, dtype=np.uint8, offset=sep + 1)
+    n = len(body)
+    # floor-quantized mean (x10^4): round() half-even vs DuckDB's
+    # half-away flips the last digit at exact halves
+    yield (
+        asset_id,
+        kind,
+        n,
+        int(np.floor(float(body.mean()) * 10_000)) if n else 0,
+        int(body.min()) if n else 0,
+        int(body.max()) if n else 0,
+    )
+
+
 def decode_sample_stats(assets: DataFrame) -> DataFrame:
     """REAL decode of the synthetic uncompressed container (≙ WAV-PCM /
     raw-raster header math — no external codec needed): parse the ASCII
     header, view the body as raw 8-bit samples (``np.frombuffer``, zero
     copy), reduce with vectorized numpy. Unlike :func:`extract_features`'
-    codec stubs, THIS decode is exact and oracle-checkable — the body bytes
+    stub, THIS decode is exact and oracle-checkable — the body bytes
     are ASCII, so DuckDB recomputes the same sample values via
     ``ascii(substr(...))``.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, ns, means, mins, maxs = [], [], [], [], [], []
-            for aid, b, m in zip(pdf["asset_id"], pdf["payload"], pdf["meta"]):
-                raw = bytes(b)
-                sep = raw.index(b";")  # header terminator
-                body = np.frombuffer(raw, dtype=np.uint8, offset=sep + 1)
-                ids.append(aid)
-                kinds.append(m["kind"])
-                ns.append(len(body))
-                # floor-quantized mean (x10^4): round() half-even vs
-                # DuckDB's half-away flips the last digit at exact halves
-                means.append(
-                    int(np.floor(float(body.mean()) * 10_000)) if len(body) else 0
-                )
-                mins.append(int(body.min()) if len(body) else 0)
-                maxs.append(int(body.max()) if len(body) else 0)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "kind": kinds,
-                    "n_samples": pd.Series(ns, dtype="int32"),
-                    "px_mean_q": means,
-                    "px_min": pd.Series(mins, dtype="int32"),
-                    "px_max": pd.Series(maxs, dtype="int32"),
-                }
-            )
-
-    return assets.mapInPandas(run, schema=_DECODE_SCHEMA)
+    return _map_rows(
+        assets.select("asset_id", "payload", "meta.kind"), _sample_stats, _DECODE_SCHEMA
+    )
 
 
 # -- REAL standard-container codec: RIFF/WAVE PCM16 --------------------------
@@ -240,41 +217,25 @@ WAV_RATES = (8000, 16000, 24000)
 _WAV_SCHEMA = "asset_id long, payload binary, sample_rate int"
 
 
+def _wav_asset(doc_id: int, text: str) -> Iterator[tuple]:
+    rate = WAV_RATES[doc_id % 3]
+    body = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    data = ((body.astype(np.int16) - 128) << 8).astype("<i2").tobytes()
+    hdr = struct.pack(
+        "<4sI4s4sIHHIIHH4sI",
+        b"RIFF", 36 + len(data), b"WAVE",
+        b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16,
+        b"data", len(data),
+    )
+    yield doc_id, hdr + data, rate
+
+
 def wav_assets_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic REAL WAV (RIFF PCM16 mono) assets derived from
     ``documents``: sample[i] = (text_byte[i] - 128) << 8, sample rate
     8/16/24 kHz by doc_id — every decoded statistic is recomputable from the
     source text, so the decode gate is value-hashed end to end."""
-    import struct
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, rates = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                rate = WAV_RATES[int(did) % 3]
-                body = np.frombuffer(
-                    str(text).encode("utf-8"), dtype=np.uint8
-                )
-                samples = ((body.astype(np.int16) - 128) << 8).astype("<i2")
-                data = samples.tobytes()
-                hdr = struct.pack(
-                    "<4sI4s4sIHHIIHH4sI",
-                    b"RIFF", 36 + len(data), b"WAVE",
-                    b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16,
-                    b"data", len(data),
-                )
-                ids.append(int(did))
-                payloads.append(hdr + data)
-                rates.append(rate)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": payloads,
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                }
-            )
-
-    return _spread_codec(docs.select("doc_id", "text")).mapInPandas(run, schema=_WAV_SCHEMA)
+    return _from_documents(docs, _wav_asset, _WAV_SCHEMA)
 
 
 def parse_wav(raw: bytes) -> tuple[int, int, int, bytes]:
@@ -307,43 +268,30 @@ _WAV_STATS_SCHEMA = (
 )
 
 
+def _wav_stats(asset_id: int, payload: bytes) -> Iterator[tuple]:
+    channels, rate, bits, data = parse_wav(payload)
+    if channels != 1 or bits != 16:
+        raise ValueError("decoder expects PCM16 mono")
+    s = np.frombuffer(data, dtype="<i2")
+    n = len(s)
+    total = int(s.sum(dtype=np.int64))
+    yield (
+        asset_id,
+        rate,
+        n,
+        n * 1000 // rate,
+        int(s.min()) if n else 0,
+        int(s.max()) if n else 0,
+        (total * 10_000) // n if n else 0,
+    )
+
+
 def decode_wav_stats(assets: DataFrame) -> DataFrame:
     """REAL WAV decode over Arrow batches: RIFF chunk walk, ``<i2``
     frombuffer sample view, vectorized reductions. ``amp_mean_q`` is the
     exact floor((sum*10^4)/n) in integer arithmetic (engine-portable);
     ``duration_ms`` the exact floor(n*1000/rate)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                channels, rate, bits, data = parse_wav(bytes(b))
-                if channels != 1 or bits != 16:
-                    raise ValueError("decoder expects PCM16 mono")
-                s = np.frombuffer(data, dtype="<i2")
-                n = len(s)
-                total = int(s.sum(dtype=np.int64))
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "sample_rate": rate,
-                        "n_samples": n,
-                        "duration_ms": n * 1000 // rate,
-                        "amp_min": int(s.min()) if n else 0,
-                        "amp_max": int(s.max()) if n else 0,
-                        "amp_mean_q": (total * 10_000) // n if n else 0,
-                    }
-                )
-            if not rows:
-                continue
-            out = pd.DataFrame(rows)
-            out["sample_rate"] = out["sample_rate"].astype("int32")
-            out["n_samples"] = out["n_samples"].astype("int32")
-            out["amp_min"] = out["amp_min"].astype("int32")
-            out["amp_max"] = out["amp_max"].astype("int32")
-            yield out
-
-    return assets.mapInPandas(run, schema=_WAV_STATS_SCHEMA)
+    return _map_rows(assets.select("asset_id", "payload"), _wav_stats, _WAV_STATS_SCHEMA)
 
 
 # -- REAL standard-container codec #2: BMP (Windows DIB, 24-bit, BI_RGB) -----
@@ -354,13 +302,17 @@ def decode_wav_stats(assets: DataFrame) -> DataFrame:
 # BI_RGB-only, and both bottom-up (biHeight > 0) and top-down (biHeight < 0)
 # row orders, so it reads third-party uncompressed BMPs, not just its own.
 
-_BMP_SCHEMA = "asset_id long, payload binary, width int, height int"
+# BMP and PNG image assets and their decoded gray statistics
+_IMAGE_SCHEMA = "asset_id long, payload binary, width int, height int"
+
+_GRAY_STATS_SCHEMA = (
+    "asset_id long, width int, height int, n_px int, px_min int, "
+    "px_max int, px_sum bigint"
+)
 
 
 def _bmp_encode(gray: "np.ndarray") -> bytes:
     """Encode an (h, w) uint8 gray array as a 24-bit BI_RGB BMP (B=G=R)."""
-    import struct
-
     h, w = gray.shape
     stride = (w * 3 + 3) & ~3  # rows padded to 4-byte boundaries
     rows = np.zeros((h, stride), dtype=np.uint8)
@@ -379,8 +331,6 @@ def parse_bmp(raw: bytes) -> "np.ndarray":
     (h, w) uint8 gray array (B channel; writer emits B=G=R). Honors the file
     header's pixel-data offset, row padding, and negative-height (top-down)
     images like any real parser."""
-    import struct
-
     if raw[:2] != b"BM":
         raise ValueError("not a BMP file")
     data_off = struct.unpack_from("<I", raw, 10)[0]
@@ -396,100 +346,65 @@ def parse_bmp(raw: bytes) -> "np.ndarray":
     return (rows if top_down else rows[::-1])[:, :, 0].copy()
 
 
+def _bmp_asset(doc_id: int, text: str) -> Iterator[tuple]:
+    w = 8 + doc_id % 9
+    h = 8 + doc_id % 7
+    body = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    idx = (np.arange(h * w) % len(body)).reshape(h, w)
+    yield doc_id, _bmp_encode(body[idx]), w, h
+
+
 def bmp_assets_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic REAL BMP assets derived from ``documents``: a
     (8+doc_id%7)-row × (8+doc_id%9)-col grayscale raster whose pixel (r, c)
     is the text byte at index ((r*w + c) mod len(text)) — every decoded or
     resized statistic is recomputable from the source text, so the whole
     encode → decode → resize path is value-hash-gated."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, ws, hs = [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                w = 8 + int(did) % 9
-                h = 8 + int(did) % 7
-                body = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                idx = (np.arange(h * w) % len(body)).reshape(h, w)
-                ids.append(int(did))
-                payloads.append(_bmp_encode(body[idx]))
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": payloads,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
-
-    return _spread_codec(docs.select("doc_id", "text")).mapInPandas(run, schema=_BMP_SCHEMA)
+    return _from_documents(docs, _bmp_asset, _IMAGE_SCHEMA)
 
 
-_BMP_STATS_SCHEMA = (
-    "asset_id long, width int, height int, n_px int, px_min int, "
-    "px_max int, px_sum bigint"
-)
+def _gray_stats(parse, asset_id: int, payload: bytes) -> Iterator[tuple]:
+    """Exact integer stats of one image decoded by ``parse``."""
+    g = parse(payload)
+    yield (
+        asset_id,
+        g.shape[1],
+        g.shape[0],
+        g.size,
+        int(g.min()),
+        int(g.max()),
+        int(g.sum(dtype=np.int64)),
+    )
 
 
 def decode_bmp_stats(assets: DataFrame) -> DataFrame:
     """REAL BMP decode over Arrow batches: header walk, padded bottom-up row
     recovery, vectorized reductions — exact integer stats."""
+    return _map_rows(
+        assets.select("asset_id", "payload"),
+        functools.partial(_gray_stats, parse_bmp),
+        _GRAY_STATS_SCHEMA,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                g = parse_bmp(bytes(b))
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": g.shape[1],
-                        "height": g.shape[0],
-                        "n_px": g.size,
-                        "px_min": int(g.min()),
-                        "px_max": int(g.max()),
-                        "px_sum": int(g.sum(dtype=np.int64)),
-                    }
-                )
-            if not rows:
-                continue
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_px", "px_min", "px_max"):
-                out[c] = out[c].astype("int32")
-            yield out
 
-    return assets.mapInPandas(run, schema=_BMP_STATS_SCHEMA)
+def _resize(width: int, height: int, asset_id: int, payload: bytes) -> Iterator[tuple]:
+    g = parse_bmp(payload)
+    h, w = g.shape
+    rr = (np.arange(height) * h) // height
+    cc = (np.arange(width) * w) // width
+    yield asset_id, _bmp_encode(g[np.ix_(rr, cc)]), width, height
 
 
 def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
     """REAL image resize (stub retired): decode the BMP payload, nearest-
     neighbor resample to (width, height) — src(r, c) = in(r·h // H', c·w //
     W'), the exact-integer floor mapping — and re-encode as BMP. Contract
-    preserved: (payload, …) → (payload', width', height') via mapInPandas
-    with the same batch shape as :func:`extract_features`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                g = parse_bmp(bytes(b))
-                h, w = g.shape
-                rr = (np.arange(height) * h) // height
-                cc = (np.arange(width) * w) // width
-                ids.append(int(aid))
-                payloads.append(_bmp_encode(g[np.ix_(rr, cc)]))
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": payloads,
-                    "width": pd.Series([width] * len(ids), dtype="int32"),
-                    "height": pd.Series([height] * len(ids), dtype="int32"),
-                }
-            )
-
-    return assets.mapInPandas(run, schema=_BMP_SCHEMA)
+    preserved: (payload, …) → (payload', width', height')."""
+    return _map_rows(
+        assets.select("asset_id", "payload"),
+        functools.partial(_resize, width, height),
+        _IMAGE_SCHEMA,
+    )
 
 
 # -- REAL standard-container codec #3: YUV4MPEG2 (.y4m) ----------------------
@@ -503,44 +418,31 @@ Y4M_FPS = (25, 1)  # F25:1 -> exact 40 ms frame period
 _Y4M_SCHEMA = "asset_id long, payload binary, n_frames int"
 
 
+def _y4m_asset(doc_id: int, text: str) -> Iterator[tuple]:
+    w = 8 + 2 * (doc_id % 5)
+    h = 6 + 2 * (doc_id % 4)
+    nf = 4 + doc_id % 5
+    body = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    n = len(body)
+    parts = [
+        f"YUV4MPEG2 W{w} H{h} F{Y4M_FPS[0]}:{Y4M_FPS[1]} "
+        "Ip A1:1 C420\n".encode()
+    ]
+    ysz, csz = w * h, (w // 2) * (h // 2)
+    for f in range(nf):
+        parts.append(b"FRAME\n")
+        parts.append(body[(7 * f + np.arange(ysz)) % n].tobytes())
+        parts.append(body[(11 * f + np.arange(csz)) % n].tobytes())
+        parts.append(body[(13 * f + np.arange(csz)) % n].tobytes())
+    yield doc_id, b"".join(parts), nf
+
+
 def y4m_assets_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic REAL .y4m assets from ``documents``: (4 + doc_id%5)
     frames of (8+2·(doc_id%5))×(6+2·(doc_id%4)) C420 video where frame f's
     Y(i) = text byte at ((7·f + i) mod len), U(i)/V(i) at ((11·f + i) mod
     len)/((13·f + i) mod len) — frame-exact stats recomputable from text."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, nfs = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                w = 8 + 2 * (did % 5)
-                h = 6 + 2 * (did % 4)
-                nf = 4 + did % 5
-                body = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                n = len(body)
-                parts = [
-                    f"YUV4MPEG2 W{w} H{h} F{Y4M_FPS[0]}:{Y4M_FPS[1]} "
-                    "Ip A1:1 C420\n".encode()
-                ]
-                ysz, csz = w * h, (w // 2) * (h // 2)
-                for f in range(nf):
-                    parts.append(b"FRAME\n")
-                    parts.append(body[(7 * f + np.arange(ysz)) % n].tobytes())
-                    parts.append(body[(11 * f + np.arange(csz)) % n].tobytes())
-                    parts.append(body[(13 * f + np.arange(csz)) % n].tobytes())
-                ids.append(did)
-                payloads.append(b"".join(parts))
-                nfs.append(nf)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": payloads,
-                    "n_frames": pd.Series(nfs, dtype="int32"),
-                }
-            )
-
-    return _spread_codec(docs.select("doc_id", "text")).mapInPandas(run, schema=_Y4M_SCHEMA)
+    return _from_documents(docs, _y4m_asset, _Y4M_SCHEMA)
 
 
 def parse_y4m_header(raw: bytes) -> tuple[int, int, int, int, int]:
@@ -572,49 +474,41 @@ _FRAME_SCHEMA = (
 )
 
 
+def _frames(every_ms: int, asset_id: int, payload: bytes) -> Iterator[tuple]:
+    w, h, num, den, pos = parse_y4m_header(payload)
+    ysz, csz = w * h, (w // 2) * (h // 2)
+    step = max(1, every_ms * num // (1000 * den))
+    idx = 0
+    while pos < len(payload):
+        if payload[pos : pos + 5] != b"FRAME":
+            raise ValueError("corrupt frame marker")
+        pos = payload.index(b"\n", pos) + 1  # frame params skipped
+        if idx % step == 0:
+            y = np.frombuffer(payload, np.uint8, count=ysz, offset=pos)
+            yield (
+                asset_id,
+                idx,
+                idx * 1000 * den // num,
+                w,
+                h,
+                int(y.min()),
+                int(y.max()),
+                int(y.sum(dtype=np.int64)),
+            )
+        pos += ysz + 2 * csz
+        idx += 1
+
+
 def sample_frames(assets: DataFrame, every_ms: int) -> DataFrame:
     """REAL video frame sampling (stub retired): parse the .y4m header, walk
     the fixed-size FRAME records, emit one row per sampled frame — every
     ``step``-th frame where step = max(1, every_ms·fps_num // (1000·fps_den))
     — with exact-integer Y-plane stats and ts_ms = idx·1000·den // num."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(b)
-                w, h, num, den, pos = parse_y4m_header(raw)
-                ysz, csz = w * h, (w // 2) * (h // 2)
-                step = max(1, every_ms * num // (1000 * den))
-                idx = 0
-                while pos < len(raw):
-                    if raw[pos : pos + 5] != b"FRAME":
-                        raise ValueError("corrupt frame marker")
-                    pos = raw.index(b"\n", pos) + 1  # frame params skipped
-                    if idx % step == 0:
-                        y = np.frombuffer(raw, np.uint8, count=ysz, offset=pos)
-                        rows.append(
-                            {
-                                "asset_id": int(aid),
-                                "frame_idx": idx,
-                                "ts_ms": idx * 1000 * den // num,
-                                "width": w,
-                                "height": h,
-                                "y_min": int(y.min()),
-                                "y_max": int(y.max()),
-                                "y_sum": int(y.sum(dtype=np.int64)),
-                            }
-                        )
-                    pos += ysz + 2 * csz
-                    idx += 1
-            if not rows:
-                continue
-            out = pd.DataFrame(rows)
-            for c in ("frame_idx", "width", "height", "y_min", "y_max"):
-                out[c] = out[c].astype("int32")
-            yield out
-
-    return assets.mapInPandas(run, schema=_FRAME_SCHEMA)
+    return _map_rows(
+        assets.select("asset_id", "payload"),
+        functools.partial(_frames, every_ms),
+        _FRAME_SCHEMA,
+    )
 
 
 # -- REAL compressed-image codec: PNG (8-bit gray + RGB, DEFLATE) ------------
@@ -632,19 +526,12 @@ def sample_frames(assets: DataFrame, every_ms: int) -> DataFrame:
 # left/upper-left references step bpp bytes back per spec, so it reads
 # third-party PNGs of all four shapes, sequential or Adam7-interlaced
 # (seven independently-filtered sub-images scattered on the §8.2 pass
-# grid). Only JPEG remains with the PIL stub — the genuinely-external
-# codec.
-
-import zlib
+# grid).
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
-_PNG_SCHEMA = "asset_id long, payload binary, width int, height int"
-
 
 def _png_chunk(tag: bytes, data: bytes) -> bytes:
-    import struct
-
     return (
         struct.pack(">I", len(data))
         + tag
@@ -707,8 +594,6 @@ def _png_encode(img: "np.ndarray", level: int = 6, interlace: bool = False) -> b
     (h, w) uint16 array as 16-bit grayscale (big-endian samples per
     spec). ``interlace=True`` writes an Adam7 stream (interlace method 1:
     seven independently-filtered sub-images in spec pass order)."""
-    import struct
-
     rgb = img.ndim == 3
     deep = img.dtype == np.uint16
     h, w = img.shape[:2]
@@ -742,8 +627,6 @@ def _png_encode_palette(
     """Encode an (h, w) uint8 index raster with a (k, 3) uint8 palette as
     an 8-bit indexed-color PNG (color type 3, PLTE chunk before IDAT per
     spec). Scanlines carry palette INDEXES (bpp = 1)."""
-    import struct
-
     h, w = idx.shape
     if idx.max(initial=0) >= len(palette):
         raise ValueError("palette index out of range")
@@ -834,10 +717,7 @@ def parse_png(raw: bytes) -> "np.ndarray":
     per-row reconstruction of all five filter types with the spec's
     bpp-byte left step (filters are byte-wise at every depth). Returns
     (h, w) uint8 for gray8, (h, w, 3) uint8 for RGB and palette, (h, w)
-    uint16 for gray16. JPEG/PIL remains the one genuinely-external
-    stub."""
-    import struct
-
+    uint16 for gray16."""
     if raw[:8] != _PNG_SIG:
         raise ValueError("not a PNG file")
     pos, idat, dims, plte, depth, ctype = 8, [], None, None, 8, 0
@@ -908,36 +788,29 @@ def parse_png(raw: bytes) -> "np.ndarray":
     return px.reshape(h, w, 3) if bpp == 3 else px
 
 
+def _png_asset(doc_id: int, text: str) -> Iterator[tuple]:
+    w = 9 + doc_id % 8
+    h = 7 + doc_id % 6
+    body = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    idx = ((3 * np.arange(h * w) + 1) % len(body)).reshape(h, w)
+    yield doc_id, _png_encode(body[idx]), w, h
+
+
 def png_assets_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic REAL PNG assets from ``documents``: a (7+doc_id%6)-row
     × (9+doc_id%8)-col grayscale raster whose pixel j (row-major) is the
     text byte at ((3·j + 1) mod len(text)) — every decoded statistic is
     recomputable from the source text, value-hash-gating the whole
     deflate-encode → inflate-decode → unfilter chain."""
+    return _from_documents(docs, _png_asset, _IMAGE_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, ws, hs = [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                w = 9 + did % 8
-                h = 7 + did % 6
-                body = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                idx = ((3 * np.arange(h * w) + 1) % len(body)).reshape(h, w)
-                ids.append(did)
-                payloads.append(_png_encode(body[idx]))
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": payloads,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
 
-    return _spread_codec(docs.select("doc_id", "text")).mapInPandas(run, schema=_PNG_SCHEMA)
+def _png_interlaced_asset(doc_id: int, text: str) -> Iterator[tuple]:
+    w = 10 + doc_id % 9
+    h = 9 + doc_id % 7
+    body = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    idx = ((7 * np.arange(h * w) + 3) % len(body)).reshape(h, w)
+    yield doc_id, _png_encode(body[idx], interlace=True), w, h
 
 
 def png_interlaced_assets_from_documents(docs: DataFrame) -> DataFrame:
@@ -947,67 +820,37 @@ def png_interlaced_assets_from_documents(docs: DataFrame) -> DataFrame:
     with interlace method 1 — dimensions chosen so most rasters span
     several pass-grid cells and every image exercises all seven Adam7
     passes' geometry (including empty-pass handling at the small end)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, ws, hs = [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                w = 10 + did % 9
-                h = 9 + did % 7
-                body = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                idx = ((7 * np.arange(h * w) + 3) % len(body)).reshape(h, w)
-                ids.append(did)
-                payloads.append(_png_encode(body[idx], interlace=True))
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": payloads,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
-
-    return _spread_codec(docs.select("doc_id", "text")).mapInPandas(run, schema=_PNG_SCHEMA)
-
-
-_PNG_STATS_SCHEMA = (
-    "asset_id long, width int, height int, n_px int, px_min int, "
-    "px_max int, px_sum bigint"
-)
+    return _from_documents(docs, _png_interlaced_asset, _IMAGE_SCHEMA)
 
 
 def decode_png_stats(assets: DataFrame) -> DataFrame:
     """REAL PNG decode over Arrow batches: inflate + unfilter, exact integer
     stats (DEFLATE's actual compression ratio is pinned in pytest — it is a
     zlib-level/version artifact, not an oracle-stable value)."""
+    return _map_rows(
+        assets.select("asset_id", "payload"),
+        functools.partial(_gray_stats, parse_png),
+        _GRAY_STATS_SCHEMA,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                g = parse_png(bytes(b))
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": g.shape[1],
-                        "height": g.shape[0],
-                        "n_px": g.size,
-                        "px_min": int(g.min()),
-                        "px_max": int(g.max()),
-                        "px_sum": int(g.sum(dtype=np.int64)),
-                    }
-                )
-            if not rows:
-                continue
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_px", "px_min", "px_max"):
-                out[c] = out[c].astype("int32")
-            yield out
 
-    return assets.mapInPandas(run, schema=_PNG_STATS_SCHEMA)
+def _png_palette_asset(doc_id: int, text: str) -> Iterator[tuple]:
+    w = 8 + doc_id % 7
+    h = 6 + doc_id % 5
+    body = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    idx = (
+        body[(5 * np.arange(h * w) + 2) % len(body)] % 16
+    ).reshape(h, w).astype(np.uint8)
+    i = np.arange(16)
+    pal = np.stack(
+        [
+            (17 * i + doc_id % 7) % 256,
+            (29 * i + doc_id % 11) % 256,
+            (53 * i + doc_id % 13) % 256,
+        ],
+        axis=1,
+    ).astype(np.uint8)
+    yield doc_id, _png_encode_palette(idx, pal), w, h
 
 
 def png_palette_assets_from_documents(docs: DataFrame) -> DataFrame:
@@ -1017,41 +860,7 @@ def png_palette_assets_from_documents(docs: DataFrame) -> DataFrame:
     index raster whose pixel j (row-major) is text byte ((5j + 2) mod n)
     mod 16 — every decoded RGB statistic is recomputable from the source
     text, value-hash-gating the PLTE path end to end."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, ws, hs = [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                w = 8 + did % 7
-                h = 6 + did % 5
-                body = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                idx = (
-                    body[(5 * np.arange(h * w) + 2) % len(body)] % 16
-                ).reshape(h, w).astype(np.uint8)
-                i = np.arange(16)
-                pal = np.stack(
-                    [
-                        (17 * i + did % 7) % 256,
-                        (29 * i + did % 11) % 256,
-                        (53 * i + did % 13) % 256,
-                    ],
-                    axis=1,
-                ).astype(np.uint8)
-                ids.append(did)
-                payloads.append(_png_encode_palette(idx, pal))
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "payload": payloads,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
-
-    return _spread_codec(docs.select("doc_id", "text")).mapInPandas(run, schema=_PNG_SCHEMA)
+    return _from_documents(docs, _png_palette_asset, _IMAGE_SCHEMA)
 
 
 _PNG_RGB_STATS_SCHEMA = (
@@ -1060,36 +869,27 @@ _PNG_RGB_STATS_SCHEMA = (
 )
 
 
+def _rgb_stats(asset_id: int, payload: bytes) -> Iterator[tuple]:
+    px = parse_png(payload)
+    if px.ndim != 3:  # pragma: no cover - guard
+        raise ValueError("expected an RGB-producing PNG")
+    sums = px.sum(axis=(0, 1), dtype=np.int64)
+    yield (
+        asset_id,
+        px.shape[1],
+        px.shape[0],
+        px.shape[0] * px.shape[1],
+        int(sums[0]),
+        int(sums[1]),
+        int(sums[2]),
+        int(px.min()),
+        int(px.max()),
+    )
+
+
 def decode_png_rgb_stats(assets: DataFrame) -> DataFrame:
     """REAL decode of RGB-producing PNGs (truecolor or palette) over Arrow
     batches: per-channel exact integer sums + global min/max."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                px = parse_png(bytes(b))
-                if px.ndim != 3:  # pragma: no cover - guard
-                    raise ValueError("expected an RGB-producing PNG")
-                sums = px.sum(axis=(0, 1), dtype=np.int64)
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": px.shape[1],
-                        "height": px.shape[0],
-                        "n_px": px.shape[0] * px.shape[1],
-                        "r_sum": int(sums[0]),
-                        "g_sum": int(sums[1]),
-                        "b_sum": int(sums[2]),
-                        "px_min": int(px.min()),
-                        "px_max": int(px.max()),
-                    }
-                )
-            if not rows:
-                continue
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_px", "px_min", "px_max"):
-                out[c] = out[c].astype("int32")
-            yield out
-
-    return assets.mapInPandas(run, schema=_PNG_RGB_STATS_SCHEMA)
+    return _map_rows(
+        assets.select("asset_id", "payload"), _rgb_stats, _PNG_RGB_STATS_SCHEMA
+    )

@@ -219,7 +219,7 @@ def sort_window_topk(
     """
     w = Window.partitionBy(*keys).orderBy(*order_by, *[F.col(c) for c in tiebreak])
     return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n)
-        .drop("_rk")
+        df.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= n)
+        .drop("__rk")
     )

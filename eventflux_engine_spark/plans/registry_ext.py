@@ -1929,8 +1929,8 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="multimodal asset table: opaque binary payload + typed metadata; "
     "stats computed WITHOUT decoding (meta pushdown, payload pruned unless "
-    "bytes needed). Decode/resize/frame-sample are mapInPandas operators "
-    "with stubbed codecs (multimodal.py).",
+    "bytes needed). Decode/resize/frame-sample are per-row codec functions "
+    "behind one Arrow-batched row map (multimodal.py:_map_rows).",
 )
 def q_multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = MM.assets_from_documents(load_table(spark, sf_dir, "documents"))
@@ -1968,8 +1968,8 @@ def q_multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parse + np.frombuffer raw 8-bit sample view + vectorized numpy "
     "reductions — the WAV-PCM/raw-raster header-math decode that needs no "
     "external codec. Oracle recomputes the same sample values byte-by-byte "
-    "(ASCII body), so the decode step itself is value-hash-gated — the "
-    "codec stubs (PIL/pyav) remain stubs for external formats only.",
+    "(ASCII body), so the decode step itself is value-hash-gated — only "
+    "extract_features keeps a stub decoder.",
 )
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = MM.assets_from_documents(load_table(spark, sf_dir, "documents"))

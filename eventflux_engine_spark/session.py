@@ -91,11 +91,9 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     is installed in that worker. ``_ident`` is a module-level engine
     function, so unpickling it imports the package and installs the check
     in every prewarmed worker; the workers therefore need to be able to
-    import the package, as every engine operator does. Skipped for tiny
-    sessions and opt-out via SPARK_GRAFT_PREWARM=0.
+    import the package, as every engine operator does. Skipped for
+    single-core sessions.
     """
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") == "0":
-        return
     app_id = spark.sparkContext.applicationId
     if app_id in _PREWARMED:
         return

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cep import PatternSpec, Step, match_pattern_batch
+from ..operators.windows import sort_window_topk
 from .compiler import (
     AggregationDef,
     DmlDef,
@@ -1197,7 +1198,7 @@ class EventFluxApp:
         final-state contract). lengthBatch tags each row with its
         ``__batch`` instead."""
         w = sel.window
-        part = Window.partitionBy(*[sel.pkey] if sel.pkey else [])
+        keys = [sel.pkey] if sel.pkey else []
         if w.kind in ("time", "externalTime"):
             # time(d) (reference window/mod.rs: events expire d after
             # arrival): on the app's deterministic logical clock the FINAL
@@ -1212,15 +1213,14 @@ class EventFluxApp:
             # comparator (sort_window_processor.rs:25); __seq breaks ties
             attr, desc = _sort_key(w.params[1])
             best = F.col(attr).desc() if desc else F.col(attr).asc()
-            rank = F.row_number().over(part.orderBy(best, "__seq"))
-            return df.withColumn("__rk", rank).filter(F.col("__rk") <= w.params[0]).drop("__rk")
+            return sort_window_topk(df, w.params[0], keys, [best], ["__seq"])
         if w.kind == "length":
-            rank = F.row_number().over(part.orderBy(F.col("__seq").desc()))
-            return df.withColumn("__rk", rank).filter(F.col("__rk") <= w.params[0]).drop("__rk")
+            # length(N) keeps the N latest arrivals
+            return sort_window_topk(df, w.params[0], keys, [F.col("__seq").desc()], [])
         if w.kind == "lengthBatch":
             # tumbling count window (window/mod.rs:645-963): consecutive
             # batches of N in arrival order, partial tail included
-            nth = F.row_number().over(part.orderBy("__seq")) - 1
+            nth = F.row_number().over(Window.partitionBy(*keys).orderBy("__seq")) - 1
             return df.withColumn("__batch", F.floor(nth / w.params[0]).cast("int"))
         # user window factory (functions/extensions.py ≙
         # eventflux_manager.rs:272-278 add_window_factory +

@@ -42,70 +42,12 @@ def _flags(df):
     )
 
 
-def test_out_of_order_within_watermark_matches_batch(spark, tmpdir):
-    t = synth_transcripts(spark, 2000, 64).toPandas()
-    t = t.sort_values(["ts", "conv_id", "turn_idx"]).reset_index(drop=True)
-
-    # displace every 50th event into the NEXT chunk: it arrives out of order
-    # but within the 30-minute watermark delay (chunks span ~20 minutes)
-    n_chunks = 5
-    bounds = [round(i * len(t) / n_chunks) for i in range(n_chunks + 1)]
-    chunks = [t.iloc[bounds[i]: bounds[i + 1]].copy() for i in range(n_chunks)]
-    # pick the displaced rows from the ORIGINAL chunk contents first, then
-    # move them — otherwise a row prepended to chunk i+1 would be picked
-    # again and cascade past the watermark
-    lates = [chunks[i].iloc[::50] for i in range(n_chunks - 1)]
-    for i, late in enumerate(lates):
-        chunks[i] = chunks[i].drop(late.index)
-        chunks[i + 1] = pd.concat([late, chunks[i + 1]])
-
-    # sentinel far in the future flushes every buffered group at the end
-    sentinel = pd.DataFrame(
-        [{
-            "conv_id": "__sentinel__", "turn_idx": 0, "role": "user",
-            "text": "", "tool": "", "ts": t["ts"].max() + pd.Timedelta(days=30),
-        }]
-    )
-    chunks.append(sentinel)
-
-    feed = os.path.join(tmpdir, "feed")
-    os.makedirs(feed)
-    for i, c in enumerate(chunks):
-        c = c.assign(turn_idx=c["turn_idx"].astype("int32"))
-        c.to_parquet(
-            os.path.join(feed, f"c{i:03d}.parquet"), index=False,
-            coerce_timestamps="us", allow_truncated_timestamps=True,
-        )
-
-    schema = spark.createDataFrame(t).schema
-    stream = _flags(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(feed)
-    )
-    out = match_pattern_stream(stream, SPEC, watermark_delay="30 minutes")
-    q = out.writeStream.format("memory").queryName("late_out").outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    got = (
-        spark.sql("SELECT * FROM late_out")
-        .filter(F.col("conv_id") != "__sentinel__")
-        .toPandas()
-    )
-    want = match_pattern_batch(_flags(spark.createDataFrame(t)), SPEC).toPandas()
-    cols = sorted(got.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(cols).reset_index(drop=True),
-        want[cols].sort_values(cols).reset_index(drop=True),
-    )
-
-
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_absent_out_of_order_within_watermark_matches_batch(spark, tmpdir, seed):
-    """PECJ's disorder property for the live absent matcher: any arrival
-    order within the watermark delay gives the in-order (batch) result."""
-    t = synth_transcripts(spark, 2000, 64).toPandas()
-    # each row arrives up to 25 minutes behind its event time: a row seen
-    # before another is at most 25 minutes younger, so under the 30-minute
-    # watermark delay no row is ever late, wherever the chunk cuts fall
+def _disordered_stream(spark, t, tmpdir, seed):
+    """Stream ``t`` from a parquet feed in a disordered arrival order: each
+    row arrives up to 25 minutes behind its event time. A row seen before
+    another is then at most 25 minutes younger, so under the 30-minute
+    watermark delay no row is ever late, wherever the chunk cuts fall. A
+    far-future sentinel ends the feed and flushes every buffered group."""
     rng = np.random.default_rng(seed)
     jitter = pd.to_timedelta(rng.uniform(0, 25 * 60, len(t)), unit="s")
     arrival = t.assign(_at=t["ts"] + jitter).sort_values("_at").drop(columns="_at")
@@ -129,9 +71,42 @@ def test_absent_out_of_order_within_watermark_matches_batch(spark, tmpdir, seed)
         )
 
     schema = spark.createDataFrame(t).schema
-    stream = _flags(
+    return _flags(
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(feed)
     )
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_out_of_order_within_watermark_matches_batch(spark, tmpdir, seed):
+    """Any arrival order within the watermark delay gives the pattern
+    matcher the in-order (batch) result."""
+    t = synth_transcripts(spark, 2000, 64).toPandas()
+    stream = _disordered_stream(spark, t, tmpdir, seed)
+    out = match_pattern_stream(stream, SPEC, watermark_delay="30 minutes")
+    name = f"late_out_{seed}"
+    q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+    q.processAllAvailable()
+    q.stop()
+    got = (
+        spark.sql(f"SELECT * FROM {name}")
+        .filter(F.col("conv_id") != "__sentinel__")
+        .toPandas()
+    )
+    want = match_pattern_batch(_flags(spark.createDataFrame(t)), SPEC).toPandas()
+    assert len(want) > 0
+    cols = sorted(got.columns)
+    pd.testing.assert_frame_equal(
+        got[cols].sort_values(cols).reset_index(drop=True),
+        want[cols].sort_values(cols).reset_index(drop=True),
+    )
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_absent_out_of_order_within_watermark_matches_batch(spark, tmpdir, seed):
+    """PECJ's disorder property for the live absent matcher: any arrival
+    order within the watermark delay gives the in-order (batch) result."""
+    t = synth_transcripts(spark, 2000, 64).toPandas()
+    stream = _disordered_stream(spark, t, tmpdir, seed)
     out = match_absent_stream(
         stream, "is_user", "is_assistant", "20 minutes", watermark_delay="30 minutes"
     )
