@@ -76,29 +76,33 @@ def _disordered_stream(spark, t, tmpdir, seed):
     )
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_out_of_order_within_watermark_matches_batch(spark, tmpdir, seed):
+def test_out_of_order_within_watermark_matches_batch(spark, tmpdir):
     """Any arrival order within the watermark delay gives the pattern
-    matcher the in-order (batch) result."""
+    matcher the in-order (batch) result, for each of seeds 0-2."""
     t = synth_transcripts(spark, 2000, 64).toPandas()
-    stream = _disordered_stream(spark, t, tmpdir, seed)
-    out = match_pattern_stream(stream, SPEC, watermark_delay="30 minutes")
-    name = f"late_out_{seed}"
-    q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    got = (
-        spark.sql(f"SELECT * FROM {name}")
-        .filter(F.col("conv_id") != "__sentinel__")
-        .toPandas()
-    )
     want = match_pattern_batch(_flags(spark.createDataFrame(t)), SPEC).toPandas()
     assert len(want) > 0
-    cols = sorted(got.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(cols).reset_index(drop=True),
-        want[cols].sort_values(cols).reset_index(drop=True),
-    )
+    cols = sorted(want.columns)
+    want = want[cols].sort_values(cols).reset_index(drop=True)
+    for seed in (0, 1, 2):
+        feed_dir = os.path.join(tmpdir, f"seed{seed}")
+        os.makedirs(feed_dir)
+        stream = _disordered_stream(spark, t, feed_dir, seed)
+        out = match_pattern_stream(stream, SPEC, watermark_delay="30 minutes")
+        name = f"late_out_{seed}"
+        q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+        q.processAllAvailable()
+        q.stop()
+        got = (
+            spark.sql(f"SELECT * FROM {name}")
+            .filter(F.col("conv_id") != "__sentinel__")
+            .toPandas()
+        )
+        assert sorted(got.columns) == cols
+        pd.testing.assert_frame_equal(
+            got[cols].sort_values(cols).reset_index(drop=True), want,
+            obj=f"seed {seed}",
+        )
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
