@@ -75,7 +75,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def spread_input(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread_input(df: DataFrame) -> DataFrame:
     """Round-robin repartition a narrow-partition scan before heavy per-row
     map work (regex scoring, shingle explode+md5, codec kernels).
 
@@ -86,10 +86,10 @@ def spread_input(df: DataFrame, partitions: int | None = None) -> DataFrame:
     source rows; the expensive derived work then fans across the cluster.
     Scale-adaptive: a no-op whenever the scan already carries at least
     ``defaultParallelism`` partitions (real multi-file tables at scale), so
-    nothing here is tuned to local mode.
+    nothing here is tuned to local mode. The width is always the full core
+    count (the A/B against half width is in ``multimodal._from_documents``).
     """
-    sc = df.sparkSession.sparkContext
-    target = partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

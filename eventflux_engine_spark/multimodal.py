@@ -85,9 +85,11 @@ def _from_documents(
     docs: DataFrame, encode: Callable[[int, str], Iterable[tuple]], schema: str
 ) -> DataFrame:
     """Run a codec's ``encode(doc_id, text)`` over ``documents``, spread
-    to the full core count: a one-row-group scan is one task, and on 4
-    cores the PNG gates ran 2.0-2.4x slower unspread (sf0.1) and 1.5x
-    (sf0.1) to 3.2-3.4x (sf1.0) slower at half width than at full."""
+    to the full core count. A one-row-group scan is one task: on 4 cores
+    the PNG gates ran 2.0-2.4x slower unspread (sf0.1). Half width lost
+    to full on all six codec gates at sf1.0 (2.1-3.4x slower) and on the
+    three PNG gates at sf0.1; full lost only ``wav_decode`` at sf0.1
+    (0.65 vs 0.55 s median)."""
     return _map_rows(spread_input(docs.select("doc_id", "text")), encode, schema)
 
 
