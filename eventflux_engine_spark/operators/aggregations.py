@@ -9,14 +9,38 @@ keeps everything inside whole-stage codegen.
 Also provides the salted two-phase aggregation used to break hot-key skew
 (SURVEY.md §7.1 ``skew.py`` role): at 10^12-turn scale a handful of hot
 conversations would otherwise pin single reducers.
+
+And the one rule for the decomposable aggregates (count/sum/avg/min/max
+as partials, how partials merge, each final, the SQL NULL rule in Catalyst
+and pandas) with the one parser of an ``fn(arg)`` call: every two-phase
+batch plan and every live operator that aggregates reads it.
 """
 
 from __future__ import annotations
 
+import re
+from typing import NamedTuple
+
+import numpy as np
+import pandas as pd
+from pandas.api.typing import Rolling
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-__all__ = ["AGGREGATORS", "make_agg", "group_agg", "salted_group_agg"]
+__all__ = [
+    "AGGREGATORS",
+    "make_agg",
+    "group_agg",
+    "salted_group_agg",
+    "DECOMPOSABLE",
+    "MERGE",
+    "CATALYST",
+    "SimpleAgg",
+    "parse_simple_agg",
+    "pandas_partial",
+    "group_partials",
+]
 
 
 def _count_all(col: Column) -> Column:
@@ -44,6 +68,103 @@ AGGREGATORS: dict[str, callable] = {
     "first": F.first,
     "last": F.last,
 }
+
+
+# -- decomposable aggregates: one rule for batch and live --------------------
+
+#: count/sum/avg/min/max as partials (SURVEY.md §2.4): fn -> (the partial
+#: kinds it needs, its final over the merged partials). The final takes
+#: Catalyst Columns and pandas Series alike. Every two-phase plan (SNAPSHOT,
+#: the AGGREGATE EVERY cascade) and every live operator that aggregates in
+#: pandas (SNAPSHOT, the count windows) reads this table.
+DECOMPOSABLE = {
+    "count": (("count",), lambda n: n),
+    "sum": (("sum",), lambda s: s),
+    "avg": (("sum", "count"), lambda s, n: s / n),
+    "min": (("min",), lambda m: m),
+    "max": (("max",), lambda m: m),
+}
+
+#: how partials of one kind merge: counts add up
+MERGE = {"count": "sum", "sum": "sum", "min": "min", "max": "max"}
+
+#: the partial kinds in Catalyst, under SQL's NULL rule: NULLs are skipped,
+#: and no values give a NULL sum/min/max and a 0 count
+CATALYST = {"count": F.count, "sum": F.sum, "min": F.min, "max": F.max}
+
+
+def pandas_partial(kind: str, g) -> pd.Series:
+    """The partial ``kind`` in pandas, under the same NULL rule, over a
+    grouped column or a ``rolling(n, min_periods=1)`` window (whose
+    ``min_periods`` already makes an all-NULL sum NULL)."""
+    if kind == "sum" and not isinstance(g, Rolling):
+        return g.sum(min_count=1)
+    return getattr(g, kind)()
+
+
+def group_partials(
+    df: pd.DataFrame, keys: list[str], cols: dict[str, tuple[str, str]]
+) -> pd.DataFrame:
+    """One row per group of ``keys`` (a NULL key is a group; no keys make
+    one group) holding ``keys`` and, for each ``name: (kind, src)`` of
+    ``cols``, the partial ``kind`` of column ``src`` as column ``name``."""
+    g = df.groupby(keys or np.zeros(len(df), "int8"), sort=False, dropna=False)
+    out = pd.DataFrame({n: pandas_partial(k, g[src]) for n, (k, src) in cols.items()})
+    return out.reset_index(drop=not keys)
+
+
+class SimpleAgg(NamedTuple):
+    """One decomposable aggregate call ``fn(arg)``: ``fn`` is a key of
+    :data:`DECOMPOSABLE`, ``arg`` a SQL expression or ``*``."""
+
+    fn: str
+    arg: str
+
+    def partials(self, i: int) -> list[tuple[str, str]]:
+        """The partial columns of the ``i``-th aggregate: (name, kind)."""
+        return [(f"__p{i}_{k}", k) for k in DECOMPOSABLE[self.fn][0]]
+
+    def final(self, i: int, merged):
+        """The ``i``-th aggregate from its partials, each given by
+        ``merged(name, kind)`` as a Column or a Series."""
+        return DECOMPOSABLE[self.fn][1](*(merged(n, k) for n, k in self.partials(i)))
+
+    def column(self) -> Column:
+        """The argument in Catalyst (COUNT(*) counts a literal)."""
+        return F.lit(1) if self.arg == "*" else F.expr(self.arg)
+
+    def result_type(self, df: DataFrame) -> T.DataType:
+        """The type the two-phase plan gives this aggregate over ``df``
+        (analysis only, no job)."""
+        col = self.column()
+        return df.agg(self.final(0, lambda _n, k: CATALYST[k](col))).schema[0].dataType
+
+
+_SIMPLE_AGG_RE = re.compile(r"^\s*(count|sum|avg|min|max)\s*\(", re.IGNORECASE)
+
+
+def parse_simple_agg(expr: str) -> SimpleAgg | None:
+    """Parse a single decomposable aggregate call ``fn(arg)`` (fn in
+    count/sum/avg/min/max, no DISTINCT, nothing past the closing paren).
+    None when the expression is not one."""
+    m = _SIMPLE_AGG_RE.match(expr)
+    if not m:
+        return None
+    body = expr[m.end():].rstrip()
+    if not body.endswith(")"):
+        return None
+    inner = body[:-1]
+    depth = 1
+    for ch in inner:
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+            if depth == 0:  # the call closes early: e.g. "sum(x)/count(*)"
+                return None
+    if re.match(r"^\s*distinct\b", inner, re.IGNORECASE):
+        return None
+    return SimpleAgg(m.group(1).lower(), inner.strip())
 
 
 def make_agg(fn_name: str, col: str, alias: str) -> Column:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .aggregations import CATALYST, DECOMPOSABLE, MERGE, SimpleAgg
+
 #: supported cascade units, finest → coarsest (time_period.rs:8-16)
 DURATIONS = ["SECONDS", "MINUTES", "HOURS", "DAYS", "MONTHS", "YEARS"]
 
@@ -35,9 +37,6 @@ _TRUNC_UNIT = {
     "MONTHS": "month",
     "YEARS": "year",
 }
-
-#: algebraic merge rule per partial kind at coarser levels
-_MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
 
 
 class IncrementalAggregation:
@@ -68,27 +67,22 @@ class IncrementalAggregation:
         self.aggs = dict(aggs)
         self.durations = durations
 
-        # partial columns needed (avg → sum + count)
-        partials: dict[str, tuple[str, str]] = {}  # pcol -> (kind, src col)
+        # each aggregate's partial columns come from the one table (avg →
+        # sum + count)
+        self._specs: dict[str, SimpleAgg] = {}
         for out, (fn, col) in self.aggs.items():
-            fn = fn.lower()
-            if fn == "avg":
-                partials[f"__sum_{out}"] = ("sum", col)
-                partials[f"__cnt_{out}"] = ("count", col)
-            elif fn in ("sum", "count", "min", "max"):
-                partials[f"__{fn}_{out}"] = (fn, col)
-            else:
+            if fn.lower() not in DECOMPOSABLE:
                 raise ValueError(f"unsupported aggregation fn {fn}")
-        self._partials = partials
+            self._specs[out] = SimpleAgg(fn.lower(), col)
+        partials = [
+            (n, k, a)
+            for i, a in enumerate(self._specs.values())
+            for n, k in a.partials(i)
+        ]
 
         # finest level: one shuffle over raw data, map-side partial agg
         finest = durations[0]
-        exprs = []
-        for pcol, (kind, col) in partials.items():
-            if kind == "count":
-                exprs.append(F.count(col).alias(pcol))
-            else:
-                exprs.append(getattr(F, kind)(col).alias(pcol))
+        exprs = [CATALYST[k](a.column()).alias(n) for n, k, a in partials]
         bucket = F.date_trunc(_TRUNC_UNIT[finest], F.col(ts_col)).alias("bucket_start")
         levels = {
             finest: df.groupBy(*self.group_cols, bucket).agg(*exprs)
@@ -96,10 +90,7 @@ class IncrementalAggregation:
         # coarser levels: re-aggregate the previous level's partials
         prev = finest
         for d in durations[1:]:
-            merge_exprs = [
-                _MERGE[kind](pcol).alias(pcol)
-                for pcol, (kind, _) in partials.items()
-            ]
+            merge_exprs = [CATALYST[MERGE[k]](n).alias(n) for n, k, _a in partials]
             b = F.date_trunc(_TRUNC_UNIT[d], F.col("bucket_start")).alias(
                 "bucket_start"
             )
@@ -126,13 +117,8 @@ class IncrementalAggregation:
                 (F.col("bucket_start") >= F.lit(t1))
                 & (F.col("bucket_start") < F.lit(t2))
             )
-        final = []
-        for name, (fn, _col) in self.aggs.items():
-            fn = fn.lower()
-            if fn == "avg":
-                final.append(
-                    (F.col(f"__sum_{name}") / F.col(f"__cnt_{name}")).alias(name)
-                )
-            else:
-                final.append(F.col(f"__{fn}_{name}").alias(name))
+        final = [
+            a.final(i, lambda n, _k: F.col(n)).alias(name)
+            for i, (name, a) in enumerate(self._specs.items())
+        ]
         return out.select(*self.group_cols, "bucket_start", *final)

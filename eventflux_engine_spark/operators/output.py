@@ -8,10 +8,10 @@ OUTPUT [ALL|FIRST|LAST] EVERY n rate limiting
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .aggregations import CATALYST, MERGE, parse_simple_agg
 
 __all__ = [
     "order_limit_offset",
@@ -106,33 +106,6 @@ def output_every_time(
     return out.filter(F.col("_rn") == 1).drop("_rn")
 
 
-_SIMPLE_AGG_RE = re.compile(r"^\s*(count|sum|avg|min|max)\s*\(", re.IGNORECASE)
-
-
-def _parse_simple_agg(expr: str) -> tuple[str, str] | None:
-    """Parse a single decomposable aggregate call ``fn(arg)`` (fn in
-    count/sum/avg/min/max, no DISTINCT, nothing past the closing paren).
-    Returns (fn, arg) or None when the expression is not decomposable."""
-    m = _SIMPLE_AGG_RE.match(expr)
-    if not m:
-        return None
-    body = expr[m.end():].rstrip()
-    if not body.endswith(")"):
-        return None
-    inner = body[:-1]
-    depth = 1
-    for ch in inner:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:  # the call closes early: e.g. "sum(x)/count(*)"
-                return None
-    if re.match(r"^\s*distinct\b", inner, re.IGNORECASE):
-        return None
-    return m.group(1).lower(), inner.strip()
-
-
 def output_snapshot_agg(
     df: DataFrame,
     interval_ms: int,
@@ -162,11 +135,11 @@ def output_snapshot_agg(
     semantics. Non-decomposable aggregates (DISTINCT, first/last, compound
     expressions) fall back to the tick-range-join restatement, which
     amplifies raw rows ×ticks and is only suitable for small inputs."""
-    parsed = [(_parse_simple_agg(e), e, a) for e, a in aggs]
-    if not parsed or any(p is None for p, _, _ in parsed):
+    parsed = [parse_simple_agg(e) for e, _ in aggs]
+    if not parsed or None in parsed:
         return _snapshot_tick_join(
             df, interval_ms, ts_col, keys,
-            [F.expr(e).alias(a) for _, e, a in parsed], start_ts, end_ts,
+            [F.expr(e).alias(a) for e, a in aggs], start_ts, end_ts,
         )
 
     start = F.lit(start_ts).cast("timestamp")
@@ -191,33 +164,12 @@ def output_snapshot_agg(
     )
     ev = df.filter(bucket <= n_ticks)
 
-    partial_cols: list[Column] = []
-    partial_names: list[str] = []
-    finals: list[Column] = []
-
-    def _partial(c: Column, name: str) -> None:
-        partial_cols.append(c.alias(name))
-        partial_names.append(name)
-
-    for i, (p, _e, a) in enumerate(parsed):
-        fn, arg = p
-        col = F.lit(1) if (fn == "count" and arg == "*") else F.expr(arg)
-        if fn == "count":
-            _partial(F.count(col), f"_p{i}")
-            finals.append(F.sum(f"_p{i}").cast("long").alias(a))
-        elif fn == "sum":
-            _partial(F.sum(col), f"_p{i}")
-            finals.append(F.sum(f"_p{i}").alias(a))
-        elif fn == "avg":
-            _partial(F.sum(col), f"_ps{i}")
-            _partial(F.count(col), f"_pc{i}")
-            finals.append((F.sum(f"_ps{i}") / F.sum(f"_pc{i}")).alias(a))
-        elif fn == "min":
-            _partial(F.min(col), f"_p{i}")
-            finals.append(F.min(f"_p{i}").alias(a))
-        else:  # max
-            _partial(F.max(col), f"_p{i}")
-            finals.append(F.max(f"_p{i}").alias(a))
+    parts = [(n, k, p) for i, p in enumerate(parsed) for n, k in p.partials(i)]
+    partial_cols = [CATALYST[k](p.column()).alias(n) for n, k, p in parts]
+    finals = [
+        p.final(i, lambda n, k: CATALYST[MERGE[k]](n)).alias(a)
+        for i, (p, (_e, a)) in enumerate(zip(parsed, aggs))
+    ]
 
     pb = ev.groupBy(*[F.col(k) for k in keys], bucket.alias("_bkt")).agg(
         *partial_cols
@@ -225,13 +177,13 @@ def output_snapshot_agg(
     expanded = pb.select(
         *keys,
         F.explode(F.sequence(F.col("_bkt"), n_ticks)).alias("_tick_bkt"),
-        *partial_names,
+        *[n for n, _k, _p in parts],
     )
     out = expanded.groupBy(*keys, "_tick_bkt").agg(*finals)
     tick = F.timestamp_millis(
         (ms(start) + F.col("_tick_bkt") * F.lit(float(interval_ms))).cast("long")
     ).alias("tick")
-    return out.select(tick, *keys, *[a for _p, _e, a in parsed])
+    return out.select(tick, *keys, *[a for _e, a in aggs])
 
 
 def _snapshot_tick_join(

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cep import PatternSpec, Step, match_pattern_batch
+from ..operators.aggregations import parse_simple_agg
 from ..operators.windows import sort_window_topk
 from .compiler import (
     AggregationDef,
@@ -857,14 +858,13 @@ class EventFluxApp:
         operator, so batch/streaming rows match."""
         _check_snapshot(q, sel)
         w = sel.window
-        from ..operators.output import _parse_simple_agg
         from ..streaming.ratelimit import snapshot_agg_stream
 
         # tumbling window → the bucket start joins the state key (same
         # partials-over-buckets decomposition as the batch operator)
         buckets = [] if w is None else [_tumbling_bucket(w).alias("__wb")]
-        parsed = [_parse_simple_agg(e) for e, _ in sel.agg_items]
-        if any(p is None for p in parsed):
+        parsed = [parse_simple_agg(e) for e, _ in sel.agg_items]
+        if None in parsed:
             raise ValueError(
                 "streaming SNAPSHOT needs decomposable aggregates "
                 "(count/sum/avg/min/max)"
@@ -873,13 +873,7 @@ class EventFluxApp:
         proj = src.select(
             *buckets,
             *sel.keys,
-            *[
-                (
-                    F.lit(1.0) if fn == "count" and arg == "*"
-                    else F.expr(arg).cast("double")
-                ).alias(f"_a{i}")
-                for i, (fn, arg) in enumerate(parsed)
-            ],
+            *[p.column().alias(f"_a{i}") for i, p in enumerate(parsed)],
             "__seq", "__ts",
         )
         wb = ["__wb"] if buckets else []
@@ -893,7 +887,7 @@ class EventFluxApp:
             + [f"{c} bigint" for c in wb]
             + [f"{k} {ktypes[k]}" for k in sel.keys]
             + [
-                f"`{a}` " + ("bigint" if p[0] == "count" else "double")
+                f"`{a}` {p.result_type(src).simpleString()}"
                 for p, a in zip(parsed, aliases)
             ]
         )
@@ -1245,18 +1239,18 @@ class EventFluxApp:
         from ..streaming import pipelines as P
 
         w = sel.window
-        am = re.fullmatch(
-            r"\s*(SUM|AVG|MIN|MAX|COUNT)\s*\(\s*(\w+)\s*\)\s*",
-            sel.agg_items[0][0],
-            re.IGNORECASE,
-        ) if len(sel.items) == 1 and sel.agg_items and not sel.keys else None
-        if am is None:
+        p = (
+            parse_simple_agg(sel.agg_items[0][0])
+            if len(sel.items) == 1 and sel.agg_items and not sel.keys else None
+        )
+        if p is None:
             raise ValueError(
                 f"streaming WINDOW('{w.kind}') supports a single "
                 "un-keyed SUM/AVG/MIN/MAX/COUNT aggregate"
             )
         out_name = sel.agg_items[0][1] or "agg"
-        args = (int(w.params[0]), am.group(1).lower(), am.group(2), out_name)
+        df = df.withColumn("__a", p.column())
+        args = (int(w.params[0]), p.fn, "__a", out_name)
         if w.kind == "length":
             # per-arrival sliding count window; the drain keeps only the
             # final emission to honor run()'s final-state contract (the
@@ -1267,7 +1261,7 @@ class EventFluxApp:
             # tail batch (no timer needed)
             out = P.length_batch_stream(df, *args).withColumnRenamed("batch_id", "__seq")
             mode = "append"
-        # cast the double emission to the declared target type
+        # cast the emission to the declared target type
         decl = dict(self.streams[q.target].columns)
         if out_name in decl:
             out = out.withColumn(out_name, F.col(out_name).cast(decl[out_name]))

@@ -24,6 +24,8 @@ import re
 from dataclasses import dataclass, field
 from typing import Optional
 
+from ..operators.aggregations import parse_simple_agg
+
 TYPE_MAP = {
     "VARCHAR": "string",
     "STRING": "string",
@@ -134,18 +136,15 @@ def parse_aggregation(stmt: str) -> AggregationDef:
         item = item.strip()
         if item in group_cols:
             continue
-        am = re.match(
-            r"(SUM|COUNT|MIN|MAX|AVG)\s*\(\s*(\*|\w+)\s*\)(?:\s+AS\s+(\w+))?\s*$",
-            item,
-            re.IGNORECASE,
-        )
-        if not am:
+        am = re.match(r"(.+?)\s+AS\s+(\w+)\s*$", item, re.IGNORECASE | re.DOTALL)
+        expr, alias = (am.group(1), am.group(2)) if am else (item, None)
+        p = parse_simple_agg(expr)
+        if p is None or not re.fullmatch(r"\*|\w+", p.arg):
             raise ValueError(
                 f"aggregation SELECT items must be keys or FN(col) [AS name]: {item!r}"
             )
-        fn, col, alias = am.group(1).lower(), am.group(2), am.group(3)
-        out = alias or f"{fn}_{col}".replace("*", "all")
-        aggs[out] = (fn, col)
+        out = alias or f"{p.fn}_{p.arg}".replace("*", "all")
+        aggs[out] = (p.fn, p.arg)
     durations = [d.strip().upper() for d in dur_text.split(",") if d.strip()]
     return AggregationDef(name, source, group_cols, aggs, durations)
 

@@ -112,9 +112,8 @@ def write_feed(
     lead_empty: int = 0,
 ) -> list[str]:
     """Write ``rows`` as up to ``n_chunks`` parquet files, the sentinel last
-    in the last one, behind ``lead_empty`` empty files. Every file carries
-    ``schema``'s Arrow types (an all-null chunk keeps its declared type).
-    Returns the file paths in feed order."""
+    in the last one, behind ``lead_empty`` empty files (see
+    :func:`write_chunks`). Returns the file paths in feed order."""
     arrow = to_arrow_schema(schema)
     internal = [schema.toInternal(r) for r in [*rows, sentinel]]
     table = pa.table(
@@ -123,13 +122,23 @@ def write_feed(
     )
     chunks = max(1, min(n_chunks, len(rows)))
     bounds = [round(i * len(rows) / chunks) for i in range(chunks)] + [len(table)]
-    parts = [table.slice(0, 0)] * lead_empty + [
-        table.slice(a, b - a) for a, b in zip(bounds, bounds[1:])
+    paths = [
+        os.path.join(path, f"c{i:03d}.parquet") for i in range(lead_empty + chunks)
     ]
-    paths = [os.path.join(path, f"c{i:03d}.parquet") for i in range(len(parts))]
+    return write_chunks(paths, schema, table, [0] * lead_empty + bounds)
+
+
+def write_chunks(
+    paths: list[str], schema: T.StructType, table: pa.Table, bounds: list[int]
+) -> list[str]:
+    """The one typed feed writer: rows ``bounds[i]:bounds[i + 1]`` of
+    ``table`` go to ``paths[i]`` as parquet with ``schema``'s Arrow types
+    (timestamps in µs; an all-null chunk keeps its declared type, which a
+    file stream's schema requires). Returns ``paths``."""
+    table = table.cast(to_arrow_schema(schema))
     t0 = time.time_ns()
-    for i, (part, p) in enumerate(zip(parts, paths)):
-        pq.write_table(part, p)
+    for i, (p, a, b) in enumerate(zip(paths, bounds, bounds[1:])):
+        pq.write_table(table.slice(a, b - a), p)
         # the file source orders files by modification time in ms and breaks
         # ties by listing order: space them 1 ms apart so chunks replay in
         # feed order however fast they are written

@@ -25,7 +25,8 @@ limiter is a per-QUERY serial point in the reference too
 falls out of adding real keys to the groupBy. The rows it holds between
 micro-batches (the ALL remainder, the LAST candidate, the snapshot
 partials and not-yet-due events) are typed Arrow frames packed by
-:mod:`.rowstate`.
+:mod:`.rowstate`. Each trigger's rows are handled as one frame in arrival
+(``__seq``) order.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from ..operators.aggregations import MERGE, SimpleAgg, group_partials
 from ..sql.feeds import SENTINEL_SEQ
 from .rowstate import pack, unpack
 
@@ -62,51 +64,39 @@ def output_rate_stream(
             count, bucket, pending, buffered = state.get
         else:
             count, bucket, pending, buffered = 0, -1, None, None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.drop(columns="__g").sort_values("__seq", kind="stable")
-            # sentinel rows only advance buckets / flush state
-            real = pdf[pdf["__seq"] < SENTINEL_SEQ]
-            if unit == "EVENTS":
-                if len(real):
-                    pos = count + pd.RangeIndex(len(real))
-                    if mode == "FIRST":
-                        out = real[(pos % value) == 0]
-                    elif mode == "LAST":
-                        out = real[(pos % value) == (value - 1)]
-                    else:  # ALL: release complete blocks, hold the remainder
-                        pool = pd.concat(
-                            [unpack(buffered), real], ignore_index=True
-                        )
-                        n_full = (len(pool) // value) * value
-                        out = pool.iloc[:n_full]
-                        buffered = pack(pool.iloc[n_full:])
-                    count += len(real)
-                    if len(out):
-                        yield out
-            else:  # TIME — epoch-aligned d-wide event-time buckets
-                bkts = (
-                    pdf["__ts"].astype("int64") // 1_000_000 // value
-                ).astype("int64")
+        pdf = _trigger_rows(pdfs)
+        # sentinel rows only advance buckets / flush state
+        real = pdf[pdf["__seq"] < SENTINEL_SEQ]
+        if unit == "EVENTS":
+            if len(real):
+                pos = count + pd.RangeIndex(len(real))
                 if mode == "FIRST":
-                    fresh = pdf[bkts > bucket]
-                    if len(fresh):
-                        out = fresh.groupby(
-                            bkts[bkts > bucket], sort=True
-                        ).head(1)
-                        bucket = int(bkts.max())
-                        yield out
-                else:  # LAST: hold each bucket's candidate until it closes
-                    pool = pd.concat([unpack(pending), pdf], ignore_index=True)
-                    pb = (
-                        pool["__ts"].astype("int64") // 1_000_000 // value
-                    ).astype("int64")
-                    tails = pool.groupby(pb, sort=True).tail(1)
-                    closed = tails[pb[tails.index] < pb.max()]
-                    pending = pack(tails[pb[tails.index] == pb.max()])
-                    if len(closed):
-                        yield closed
+                    out = real[(pos % value) == 0]
+                elif mode == "LAST":
+                    out = real[(pos % value) == (value - 1)]
+                else:  # ALL: release complete blocks, hold the remainder
+                    pool = pd.concat([unpack(buffered), real], ignore_index=True)
+                    n_full = (len(pool) // value) * value
+                    out = pool.iloc[:n_full]
+                    buffered = pack(pool.iloc[n_full:])
+                count += len(real)
+                if len(out):
+                    yield out
+        else:  # TIME — epoch-aligned d-wide event-time buckets
+            bkts = (pdf["__ts"].astype("int64") // 1_000_000 // value).astype("int64")
+            if mode == "FIRST":
+                new = bkts > bucket
+                if new.any():
+                    bucket = int(bkts.max())
+                    yield pdf[new].groupby(bkts[new], sort=True).head(1)
+            else:  # LAST: hold each bucket's candidate until it closes
+                pool = pd.concat([unpack(pending), pdf], ignore_index=True)
+                pb = (pool["__ts"].astype("int64") // 1_000_000 // value).astype("int64")
+                tails = pool.groupby(pb, sort=True).tail(1)
+                closed = tails[pb[tails.index] < pb.max()]
+                pending = pack(tails[pb[tails.index] == pb.max()])
+                if len(closed):
+                    yield closed
         state.update((count, bucket, pending, buffered))
 
     return (
@@ -126,7 +116,7 @@ _SNAP_STATE = "hw bigint, next_tick bigint, accs binary, buf binary"
 def snapshot_agg_stream(
     stream: DataFrame,
     keys: list[str],
-    parsed: list[tuple[str, str]],
+    parsed: list[SimpleAgg],
     aliases: list[str],
     out_schema: str,
     interval_ms: int,
@@ -147,15 +137,19 @@ def snapshot_agg_stream(
     Ticks become due as the high-water event time passes them (the app
     feed is arrival-ordered on its logical clock, the same assumption
     ``output_rate_stream``'s TIME buckets make); the far-future flush
-    sentinel drives every remaining tick due at end-of-stream. Running
-    accumulators fold buffered events per due tick, so each event is
-    touched once — state holds per-key partials plus the not-yet-due
-    buffer, never the full history.
+    sentinel drives every remaining tick due at end-of-stream. At each due
+    tick the newly due events' per-key partials merge into the running
+    ones, both under the one decomposable-aggregate table
+    (``operators/aggregations.py``), so each event is touched once — state
+    holds per-key partials plus the not-yet-due buffer, never the full
+    history.
 
-    ``parsed``: list of (fn, argcol) with fn in count/sum/avg/min/max; the
-    arg expressions are pre-projected to columns ``_a{i}`` by the caller
-    (Catalyst evaluates them; pandas only folds numbers)."""
+    ``parsed``: each aggregate's :class:`SimpleAgg`; its argument is
+    pre-projected to column ``_a{i}`` by the caller (Catalyst evaluates
+    it and keeps its type)."""
     gcols = list(keys)
+    raw = {n: (k, f"_a{i}") for i, a in enumerate(parsed) for n, k in a.partials(i)}
+    merge = {n: (MERGE[k], n) for n, (k, _src) in raw.items()}
 
     def fn(key, pdfs, state):
         if state.exists:
@@ -163,44 +157,30 @@ def snapshot_agg_stream(
             accs, buf = unpack(accs), unpack(buf)
         else:
             hw, next_tick, accs, buf = -(1 << 62), 1, None, None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.drop(columns="__g").sort_values("__seq", kind="stable")
-            hw = max(hw, int(pdf["__ts"].astype("int64").max() // 1_000_000))
-            real = pdf[pdf["__seq"] < SENTINEL_SEQ].drop(columns="__seq")
-            buf = pd.concat([buf, real], ignore_index=True)
-            outs = []
-            while (
-                next_tick <= n_ticks
-                and start_ms + next_tick * interval_ms <= hw
-            ):
-                t_ms = start_ms + next_tick * interval_ms
-                ts_ms = buf["__ts"].astype("int64") // 1_000_000
-                due = buf[ts_ms <= t_ms]
-                buf = buf[ts_ms > t_ms]
-                if len(due):
-                    accs = _fold(accs, due, gcols, parsed)
-                if accs is not None and len(accs):
-                    emit = accs[gcols].copy() if gcols else pd.DataFrame(
-                        index=accs.index
-                    )
-                    emit.insert(0, "__tick", t_ms)
-                    for i, (afn, _arg) in enumerate(parsed):
-                        if afn == "count":
-                            emit[aliases[i]] = accs[f"_c{i}"].astype("int64")
-                        elif afn == "sum":
-                            emit[aliases[i]] = accs[f"_s{i}"]
-                        elif afn == "avg":
-                            emit[aliases[i]] = accs[f"_s{i}"] / accs[f"_c{i}"]
-                        elif afn == "min":
-                            emit[aliases[i]] = accs[f"_m{i}"]
-                        else:
-                            emit[aliases[i]] = accs[f"_x{i}"]
-                    outs.append(emit)
-                next_tick += 1
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+        pdf = _trigger_rows(pdfs)
+        hw = max(hw, int(pdf["__ts"].astype("int64").max() // 1_000_000))
+        real = pdf[pdf["__seq"] < SENTINEL_SEQ].drop(columns="__seq")
+        buf = pd.concat([buf, real], ignore_index=True)
+        outs = []
+        while next_tick <= n_ticks and start_ms + next_tick * interval_ms <= hw:
+            t_ms = start_ms + next_tick * interval_ms
+            ts_ms = buf["__ts"].astype("int64") // 1_000_000
+            due, buf = buf[ts_ms <= t_ms], buf[ts_ms > t_ms]
+            if len(due):
+                block = group_partials(due, gcols, raw)
+                accs = group_partials(pd.concat([accs, block]), gcols, merge)
+            if accs is not None:
+                outs.append(pd.DataFrame({
+                    "__tick": t_ms,
+                    **{k: accs[k] for k in gcols},
+                    **{
+                        alias: a.final(i, lambda n, _k: accs[n])
+                        for i, (a, alias) in enumerate(zip(parsed, aliases))
+                    },
+                }))
+            next_tick += 1
+        if outs:
+            yield pd.concat(outs, ignore_index=True)
         state.update((hw, next_tick, pack(accs), pack(buf)))
 
     return (
@@ -212,76 +192,8 @@ def snapshot_agg_stream(
     )
 
 
-def _fold(accs: pd.DataFrame | None, due: pd.DataFrame, gcols, parsed) -> pd.DataFrame:
-    """Fold a block of newly-due events into the running per-key partials
-    (``None`` before the first fold)."""
-    # per-key partials of the due block
-    g = due.groupby(gcols, sort=False, dropna=False) if gcols else None
-    parts: dict = {}
-    for i, (afn, _arg) in enumerate(parsed):
-        col = due[f"_a{i}"]
-        if afn == "count":
-            parts[f"_c{i}"] = (
-                g[f"_a{i}"].count() if g is not None else pd.Series(
-                    [col.count()]
-                )
-            )
-        elif afn in ("sum", "avg"):
-            parts[f"_s{i}"] = (
-                g[f"_a{i}"].sum() if g is not None else pd.Series([col.sum()])
-            )
-            if afn == "avg":
-                parts[f"_c{i}"] = (
-                    g[f"_a{i}"].count()
-                    if g is not None
-                    else pd.Series([col.count()])
-                )
-        elif afn == "min":
-            parts[f"_m{i}"] = (
-                g[f"_a{i}"].min() if g is not None else pd.Series([col.min()])
-            )
-        else:
-            parts[f"_x{i}"] = (
-                g[f"_a{i}"].max() if g is not None else pd.Series([col.max()])
-            )
-    block = pd.DataFrame(parts).reset_index()
-    if not gcols:
-        block = block.drop(columns="index", errors="ignore")
-    merged = pd.concat([accs, block], ignore_index=True)
-    g2 = merged.groupby(gcols, sort=False, dropna=False) if gcols else merged
-    out: dict = {}
-    for i, (afn, _arg) in enumerate(parsed):
-        if afn == "count":
-            out[f"_c{i}"] = (
-                g2[f"_c{i}"].sum() if gcols else pd.Series(
-                    [merged[f"_c{i}"].sum()]
-                )
-            )
-        elif afn in ("sum", "avg"):
-            out[f"_s{i}"] = (
-                g2[f"_s{i}"].sum() if gcols else pd.Series(
-                    [merged[f"_s{i}"].sum()]
-                )
-            )
-            if afn == "avg":
-                out[f"_c{i}"] = (
-                    g2[f"_c{i}"].sum() if gcols else pd.Series(
-                        [merged[f"_c{i}"].sum()]
-                    )
-                )
-        elif afn == "min":
-            out[f"_m{i}"] = (
-                g2[f"_m{i}"].min() if gcols else pd.Series(
-                    [merged[f"_m{i}"].min()]
-                )
-            )
-        else:
-            out[f"_x{i}"] = (
-                g2[f"_x{i}"].max() if gcols else pd.Series(
-                    [merged[f"_x{i}"].max()]
-                )
-            )
-    res = pd.DataFrame(out).reset_index()
-    if not gcols:
-        res = res.drop(columns="index", errors="ignore")
-    return res
+def _trigger_rows(pdfs) -> pd.DataFrame:
+    """The one limiter group's rows of a trigger as one frame, in arrival
+    (``__seq``) order."""
+    rows = pd.concat(list(pdfs), ignore_index=True).drop(columns="__g")
+    return rows.sort_values("__seq", kind="stable")

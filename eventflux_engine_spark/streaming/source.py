@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..sql.feeds import write_chunks
+
 
 def stream_from_dir(
     spark: SparkSession,
@@ -47,18 +49,12 @@ def chunked_feed(df: DataFrame, out_dir: str, n_chunks: int, order_cols: list[st
     order — simulates an arriving stream for tests (the AppRunner ``send()``
     analog, reference ``tests/common/mod.rs:31``). Returns chunk paths in
     feed order; write them into a monitored dir one at a time to control
-    micro-batch contents."""
+    micro-batch contents. Every chunk carries ``df``'s types
+    (``sql/feeds.write_chunks``), so ``stream_from_dir`` reads it with
+    ``df.schema`` even when a column is all NULL in that chunk."""
     os.makedirs(out_dir, exist_ok=True)
-    pdf = df.toPandas().sort_values(order_cols, kind="mergesort").reset_index(drop=True)
-    n = len(pdf)
-    paths = []
+    table = df.toArrow().sort_by([(c, "ascending") for c in order_cols])
+    n = len(table)
     bounds = [round(i * n / n_chunks) for i in range(n_chunks + 1)]
-    for i in range(n_chunks):
-        chunk = pdf.iloc[bounds[i] : bounds[i + 1]]
-        p = os.path.join(out_dir, f"chunk_{i:04d}.parquet")
-        # Spark cannot read pyarrow's nanosecond timestamps — coerce to µs
-        chunk.to_parquet(
-            p, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
-        )
-        paths.append(p)
-    return paths
+    paths = [os.path.join(out_dir, f"chunk_{i:04d}.parquet") for i in range(n_chunks)]
+    return write_chunks(paths, df.schema, table, bounds)

@@ -1,4 +1,5 @@
-"""The sentinel-terminated feeds of ``run_streaming`` (``sql/feeds.py``),
+"""The sentinel-terminated feeds of ``run_streaming`` (``sql/feeds.py``) and
+the test feeds of ``streaming.chunked_feed``, which share one typed writer,
 checked on the written parquet files with pyarrow: no streaming query runs."""
 
 import datetime
@@ -21,6 +22,7 @@ from eventflux_engine_spark.sql.feeds import (
     sentinel_row,
     write_feed,
 )
+from eventflux_engine_spark.streaming import chunked_feed
 
 SCHEMA = T.StructType([
     T.StructField("k", T.StringType()),
@@ -124,6 +126,19 @@ class TestFeeds:
             keep_sentinel("__seq = 2", "__seq", "__pseq")
         )
         assert sorted(r[0] for r in two.collect()) == [2, SENTINEL_SEQ, SENTINEL_SEQ + 3]
+
+
+class TestChunkedFeed:
+    def test_all_null_string_chunk_keeps_its_type(self, spark, tmp_path):
+        # the last chunk's strings are all null: written with pandas-inferred
+        # types, that column was null/INT32 and stream_from_dir rejected it
+        df = spark.createDataFrame([(3, None), (1, "a"), (2, None)], "v int, s string")
+        tables = _read(chunked_feed(df, str(tmp_path), 2, ["v"]))
+        assert all(t.schema == to_arrow_schema(df.schema) for t in tables)
+        assert [t.to_pylist() for t in tables] == [
+            [{"v": 1, "s": "a"}, {"v": 2, "s": None}],
+            [{"v": 3, "s": None}],
+        ]
 
 
 @pytest.mark.parametrize("k", [0, 1, 5])

@@ -408,6 +408,53 @@ def test_unread_clauses_rejected_in_both_modes(spark, case):
             run("Out")
 
 
+# -- live aggregates follow run()'s NULL rule ------------------------------
+
+_NULLS = [(1,), (None,), (None,), (4,), (None,), (2,)]
+_COUNT_WINDOW = """
+    CREATE STREAM S (v INT);
+    CREATE STREAM Out (a {});
+    INSERT INTO Out SELECT {}(v) AS a FROM S WINDOW({});
+"""
+_SNAPSHOT_OF = """
+    CREATE STREAM S (k VARCHAR, x {0});
+    CREATE STREAM Out (k VARCHAR, a {0});
+    INSERT INTO Out SELECT k, {1}(x) AS a FROM S GROUP BY k
+    OUTPUT SNAPSHOT EVERY 2 SECONDS;
+"""
+#: NULLs are skipped; SUM/MIN/MAX/AVG of no values are NULL, COUNT counts
+#: non-NULL values; MIN/MAX keep the argument's type. Each case crosses a
+#: micro-batch boundary (``n_chunks=2``)
+NULL_AGGREGATES = {
+    "length_batch_count": (
+        _COUNT_WINDOW.format("BIGINT", "COUNT", "'lengthBatch', 3"), _NULLS, [(1,), (2,)]),
+    "length_batch_sum": (
+        _COUNT_WINDOW.format("BIGINT", "SUM", "'lengthBatch', 3"), _NULLS, [(1,), (6,)]),
+    "length_batch_min": (
+        _COUNT_WINDOW.format("INT", "MIN", "'lengthBatch', 3"), _NULLS, [(1,), (2,)]),
+    "length_batch_avg": (
+        _COUNT_WINDOW.format("DOUBLE", "AVG", "'lengthBatch', 3"), _NULLS, [(1.0,), (3.0,)]),
+    "length_all_null_window_sum": (
+        _COUNT_WINDOW.format("BIGINT", "SUM", "'length', 2"), _NULLS[:3], [(None,)]),
+    "snapshot_all_null_key_sum": (
+        _SNAPSHOT_OF.format("INT", "SUM"),
+        [("a", 1), ("b", None), ("a", 2), ("b", None)],
+        [("a", 3), ("a", 3), ("b", None), ("b", None)],
+    ),
+    "snapshot_varchar_min": (
+        _SNAPSHOT_OF.format("VARCHAR", "MIN"),
+        [("a", "zed"), ("a", "amy"), ("b", "bo")],
+        [("a", "amy"), ("b", "bo")],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(NULL_AGGREGATES))
+def test_live_aggregates_follow_the_null_rule(spark, case):
+    sql, rows, want = NULL_AGGREGATES[case]
+    assert _parity(spark, sql, rows, n_chunks=2) == want
+
+
 # -- rows a live operator holds between micro-batches keep their types -----
 
 _CODES = "CREATE STREAM S (code VARCHAR, v INT);"

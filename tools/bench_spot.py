@@ -6,7 +6,9 @@ Same measurement as bench.py's headline loop — one warm session, per-query
 be spot-checked inside a sane wall budget.
 
 Usage: python tools/bench_spot.py <sf_dir> <query> [query ...]
-Prints one JSON line {"sf_dir": ..., "queries": {name: sec}}.
+Prints one JSON line {"sf_dir": ..., "queries": {name: [sec, ...]}}: every
+run of a query, in run order. Name a query twice to time it cold, then
+warm; drop the first entry of its list to keep only the warm run.
 """
 
 from __future__ import annotations
@@ -27,12 +29,13 @@ def main() -> None:
     names = sys.argv[2:]
     spark = get_spark(app_name="bench_spot")
     QUERIES["tumbling_turn_counts"].fn(spark, sf_dir).count()  # warm
-    out = {}
+    out: dict[str, list[float]] = {}
     for name in names:
         t0 = time.time()
         n = QUERIES[name].fn(spark, sf_dir).count()
-        out[name] = round(time.time() - t0, 3)
-        print(f"# {name}: {out[name]}s ({n} rows)", file=sys.stderr)
+        sec = round(time.time() - t0, 3)
+        out.setdefault(name, []).append(sec)
+        print(f"# {name}: {sec}s ({n} rows)", file=sys.stderr)
     print(json.dumps({"sf_dir": sf_dir, "queries": out}))
 
 
