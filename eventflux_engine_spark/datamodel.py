@@ -14,9 +14,10 @@ event shape ``src/core/event/event.rs:18-25``). ``ts`` is event time,
 For correctness gating, ``transcripts`` is DERIVED deterministically from the
 driver-provided ``events.parquet`` (seed=42) with arithmetic that evaluates
 identically in Spark and DuckDB, so every engine query has an ANSI-SQL oracle
-over the same physical bytes. The same derivation is expressed twice:
+over the same physical bytes. The same derivation is expressed twice, and
+the two share their role/tool CASE text:
 
-- :func:`transcripts_df` — Spark DataFrame ops
+- :func:`transcripts_df` — one Spark SQL projection (``selectExpr``)
 - :data:`TRANSCRIPTS_CTE` — a DuckDB CTE fragment for ``oracle_sql()``
 
 Scale note: the derivation is a single hash-partitioned window over
@@ -28,10 +29,15 @@ oracle share one deterministic input with zero external data.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -72,7 +78,83 @@ _ROLE_MAP = {
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without Spark's schema-inference job.
+
+    For one local Parquet file the schema comes from its footer, read on
+    the driver (no Spark job); Spark makes a given file schema nullable
+    throughout, as its own inference does. A timestamp not adjusted to
+    UTC follows the session's
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``. A directory, an
+    unreadable footer, a file Spark wrote (its footer holds the schema
+    Spark's inference reads) and any type outside :func:`_verified` keep
+    Spark's inference, so they give Spark's schema and Spark's errors.
+    """
+    footer = _footer_schema(path)
+    if footer is None or _conf_on(spark, "spark.sql.parquet.binaryAsString"):
+        return spark.read.parquet(path)
+    ntz = _conf_on(spark, "spark.sql.parquet.inferTimestampNTZ.enabled")
+    return spark.read.schema(from_arrow_schema(footer, ntz)).parquet(path)
+
+
+def _conf_on(spark: SparkSession, key: str) -> bool:
+    return spark.conf.get(key).lower() == "true"
+
+
+#: the footer key under which Spark stores the schema it wrote a file
+#: with; Spark's inference reads that stored schema, not the Parquet types
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: Parquet leaf annotations Spark reads as ``from_arrow_type`` does; ENUM
+#: and JSON read as binary in Arrow but as strings in Spark
+_FOOTER_ANNOTATIONS = {"NONE", "STRING", "INT", "DATE", "DECIMAL", "TIMESTAMP"}
+
+_VERIFIED_LEAVES = (
+    pa.types.is_signed_integer,
+    pa.types.is_float32,
+    pa.types.is_float64,
+    pa.types.is_string,
+    pa.types.is_binary,
+    pa.types.is_boolean,
+    pa.types.is_date32,
+    pa.types.is_decimal128,
+)
+
+
+def _verified(at: pa.DataType) -> bool:
+    """Spark infers from Parquet the type ``from_arrow_type`` gives for
+    ``at``: signed ints, float/double, string/binary, bool, date,
+    ms/µs timestamps, decimal, and lists and structs of these. Outside the
+    set: unsigned ints and ns timestamps (Arrow reads INT96 as ns)."""
+    if pa.types.is_struct(at):
+        return all(_verified(f.type) for f in at)
+    if pa.types.is_list(at):
+        return _verified(at.value_type)
+    if pa.types.is_timestamp(at):
+        return at.unit in ("ms", "us")
+    return any(is_(at) for is_ in _VERIFIED_LEAVES)
+
+
+def _footer_schema(path: str) -> "pa.Schema | None":
+    """The footer schema of the Parquet file ``path``, or None when Spark
+    must infer it: not one local file, an unreadable footer, a file Spark
+    wrote (its stored schema wins) or a type outside the verified set."""
+    if not os.path.isfile(path):
+        return None
+    try:
+        md = pq.read_metadata(path)
+    except (OSError, pa.ArrowException):
+        return None
+    if _SPARK_SCHEMA_KEY in (md.metadata or {}):
+        return None
+    annotations = {md.schema.column(i).logical_type.type for i in range(md.num_columns)}
+    arrow = md.schema.to_arrow_schema()
+    if annotations <= _FOOTER_ANNOTATIONS and all(_verified(f.type) for f in arrow):
+        return arrow
+    return None
 
 
 def spread_input(df: DataFrame) -> DataFrame:
@@ -95,48 +177,6 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derive the transcripts table from ``events.parquet``.
-
-    Must stay in lockstep with :data:`TRANSCRIPTS_CTE`.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    role = F.coalesce(
-        *[
-            F.when(F.col("event_type") == k, F.lit(v[0]))
-            for k, v in _ROLE_MAP.items()
-        ],
-        F.lit("user"),
-    )
-    tool = F.coalesce(
-        *[
-            F.when(F.col("event_type") == k, F.lit(v[1]))
-            for k, v in _ROLE_MAP.items()
-        ],
-        F.lit(""),
-    )
-    text = F.concat(
-        F.col("event_type"),
-        F.lit(" turn "),
-        F.col("event_id").cast("string"),
-        F.lit(" "),
-        F.col("props"),
-        F.lit(" "),
-        F.repeat(F.lit("lorem "), (F.floor(F.col("value")).cast("int") % 5) + 1),
-    )
-    return ev.select(
-        F.concat(F.lit("conv"), F.lpad(F.col("user_id").cast("string"), 6, "0")).alias(
-            "conv_id"
-        ),
-        (F.row_number().over(w) - F.lit(1)).cast("int").alias("turn_idx"),
-        role.alias("role"),
-        text.alias("text"),
-        tool.alias("tool"),
-        F.col("ts"),
-    )
-
-
 _ROLE_CASE_SQL = (
     "CASE event_type "
     + " ".join(f"WHEN '{k}' THEN '{v[0]}'" for k, v in _ROLE_MAP.items())
@@ -147,6 +187,26 @@ _TOOL_CASE_SQL = (
     + " ".join(f"WHEN '{k}' THEN '{v[1]}'" for k, v in _ROLE_MAP.items())
     + " ELSE '' END"
 )
+
+
+def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Derive the transcripts table from ``events.parquet``.
+
+    One SQL projection, in lockstep with :data:`TRANSCRIPTS_CTE`: the role
+    and tool columns are the same ``_ROLE_CASE_SQL`` / ``_TOOL_CASE_SQL``
+    text in both engines, and the length modulus goes through ``floor()``.
+    """
+    return load_table(spark, sf_dir, "events").selectExpr(
+        "concat('conv', lpad(cast(user_id AS STRING), 6, '0')) AS conv_id",
+        "cast(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT)"
+        " AS turn_idx",
+        f"{_ROLE_CASE_SQL} AS role",
+        "concat(event_type, ' turn ', cast(event_id AS STRING), ' ', props, ' ',"
+        " repeat('lorem ', cast(floor(value) AS INT) % 5 + 1)) AS text",
+        f"{_TOOL_CASE_SQL} AS tool",
+        "ts",
+    )
+
 
 #: DuckDB CTE body equivalent to :func:`transcripts_df` (``WITH transcripts
 #: AS (...)``). DuckDB gotcha: double→int CAST rounds while Spark truncates,

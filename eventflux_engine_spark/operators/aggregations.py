@@ -99,7 +99,21 @@ def pandas_partial(kind: str, g) -> pd.Series:
     ``min_periods`` already makes an all-NULL sum NULL)."""
     if kind == "sum" and not isinstance(g, Rolling):
         return g.sum(min_count=1)
+    if kind in ("min", "max") and isinstance(g, Rolling):
+        return _rolling_extreme(kind, g)
     return getattr(g, kind)()
+
+
+def _rolling_extreme(kind: str, win: Rolling) -> pd.Series:
+    """Rolling MIN/MAX of any ordered values: roll the values' sorted
+    factor codes, NULL as NaN, and map the codes back, so strings, bools
+    and timestamps roll too, the values keep their type, and a window of
+    only NULLs gives NULL."""
+    codes, uniques = pd.factorize(win.obj, sort=True)
+    coded = pd.Series(np.where(codes < 0, np.nan, codes), index=win.obj.index)
+    rolled = getattr(coded.rolling(win.window, min_periods=win.min_periods), kind)()
+    out = pd.Series(uniques).reindex(rolled.fillna(-1).to_numpy(dtype=np.int64))
+    return out.set_axis(rolled.index)
 
 
 def group_partials(

@@ -45,15 +45,26 @@ class QuerySpec:
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def _pin_session(fn: Callable) -> Callable:
+def _pin_session(name: str, fn: Callable) -> Callable:
     """Defensive wrapper: oracle comparability requires UTC session time and
     Arrow; the driver may construct its own SparkSession, so pin the runtime
-    confs on every call (both are runtime-settable)."""
+    confs on every call (both are runtime-settable).
+
+    Any Spark job the build fires runs under the job description
+    ``<name>:build``, so an event log names it; a description the caller
+    has set (a benchmark's span) is left as it is."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        return fn(spark, sf_dir)
+        sc = spark.sparkContext
+        if sc.getLocalProperty("spark.job.description") is not None:
+            return fn(spark, sf_dir)
+        sc.setJobDescription(f"{name}:build")
+        try:
+            return fn(spark, sf_dir)
+        finally:
+            sc.setJobDescription(None)
 
     wrapped.__name__ = getattr(fn, "__name__", "query")
     wrapped.__doc__ = fn.__doc__
@@ -62,7 +73,7 @@ def _pin_session(fn: Callable) -> Callable:
 
 def register(name: str, oracle: Optional[str], doc: str = ""):
     def deco(fn):
-        QUERIES[name] = QuerySpec(_pin_session(fn), oracle, doc)
+        QUERIES[name] = QuerySpec(_pin_session(name, fn), oracle, doc)
         return fn
 
     return deco

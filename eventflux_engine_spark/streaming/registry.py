@@ -22,6 +22,7 @@ from typing import Callable
 
 from pyspark.sql import types as T
 
+from ..datamodel import read_parquet
 from .sink import ExactlyOnceParquetSink
 from .source import rate_source, stream_from_dir
 
@@ -109,7 +110,7 @@ def _log_sink(opts: dict):
 
 
 register_sink("log", _log_sink)
-register_table("parquet", lambda spark, opts: spark.read.parquet(opts["path"]))
+register_table("parquet", lambda spark, opts: read_parquet(spark, opts["path"]))
 
 
 def _jdbc_table(spark, opts: dict):

@@ -9,9 +9,11 @@ AppRunner golden-output idiom, ``/root/reference/tests/common/mod.rs:31``).
 
 from __future__ import annotations
 
+import itertools
+
 import duckdb
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from .datamodel import TABLE_NAMES
 
@@ -23,6 +25,25 @@ def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
         )
     return con
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def count_jobs(spark: SparkSession, fn, *args):
+    """``fn(*args)`` and the number of Spark jobs it fired: the call runs
+    under a job group of its own (the job description is left alone), and
+    the listener bus is drained before the status tracker is asked."""
+    sc = spark.sparkContext
+    group = f"count_jobs:{next(_JOB_GROUPS)}"
+    caller = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", caller)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:

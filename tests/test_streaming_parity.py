@@ -416,6 +416,16 @@ _COUNT_WINDOW = """
     CREATE STREAM Out (a {});
     INSERT INTO Out SELECT {}(v) AS a FROM S WINDOW({});
 """
+_VARCHAR_WINDOW = """
+    CREATE STREAM S (s VARCHAR);
+    CREATE STREAM Out (a VARCHAR);
+    INSERT INTO Out SELECT {}(s) AS a FROM S WINDOW('length', 2);
+"""
+_BIGINT_WINDOW = """
+    CREATE STREAM S (v BIGINT);
+    CREATE STREAM Out (a BIGINT);
+    INSERT INTO Out SELECT {}(v) AS a FROM S WINDOW('length', 2);
+"""
 _SNAPSHOT_OF = """
     CREATE STREAM S (k VARCHAR, x {0});
     CREATE STREAM Out (k VARCHAR, a {0});
@@ -436,6 +446,12 @@ NULL_AGGREGATES = {
         _COUNT_WINDOW.format("DOUBLE", "AVG", "'lengthBatch', 3"), _NULLS, [(1.0,), (3.0,)]),
     "length_all_null_window_sum": (
         _COUNT_WINDOW.format("BIGINT", "SUM", "'length', 2"), _NULLS[:3], [(None,)]),
+    "length_varchar_min": (
+        _VARCHAR_WINDOW.format("MIN"), [("b",), ("a",), ("c",)], [("a",)]),
+    "length_varchar_max_null": (
+        _VARCHAR_WINDOW.format("MAX"), [("c",), ("a",), (None,)], [("a",)]),
+    "length_bigint_max_exact": (
+        _BIGINT_WINDOW.format("MAX"), [(2,), (3,), (2**53 + 1,)], [(2**53 + 1,)]),
     "snapshot_all_null_key_sum": (
         _SNAPSHOT_OF.format("INT", "SUM"),
         [("a", 1), ("b", None), ("a", 2), ("b", None)],
